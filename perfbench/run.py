@@ -1,7 +1,7 @@
 """Benchmark entry point: one workload, one seed, one process.
 
-    python3 perfbench/run.py --workload llm_dedup --seed 3 --seconds 18 --trace 0
-    python3 perfbench/run.py --steadiness 10 --workload etl_ingest --seconds 18
+    python3 perfbench/run.py --workload llm_dedup --seed 3 --seconds 8 --trace 0
+    python3 perfbench/run.py --steadiness 10 --workload etl_ingest --seconds 8
 
 A run sizes Spark to the host (``local[nproc]``, shuffle partitions =
 nproc, 2 GB driver heap), gives itself private temp, Spark-local and
@@ -10,16 +10,25 @@ and then:
 
 1. generates the workload's inputs from ``--seed`` (cached by seed and
    size; never timed);
-2. sets up ``SETUP_REPS`` times: a fresh SparkContext plus cold builds
-   of the artifacts the workload consumes. ``setup_s`` is the median;
-3. runs ``WARMUP_PASSES`` untimed passes; in the first, every lane's
-   output is collected and compared with DuckDB's result for its
-   oracle SQL;
-4. runs timed passes until ``--seconds`` have passed (at least
-   ``MIN_PASSES``). ``pass_s`` is the median pass wall time;
-5. checks the parquet the last pass wrote against DuckDB's read of the
-   same inputs. An op run that raises or mismatches is a failed op;
-6. reads the peak RSS of the driver JVM and of this process.
+2. sets up ``SETUP_REPS`` times: a session start (the first also
+   launches the JVM), cold builds of the artifacts the workload
+   consumes, and one pass;
+3. runs ``--seconds`` worth of timed passes on a quiet host: their
+   number is fixed by ``--seconds`` and the workload's nominal pass
+   time (at least ``MIN_PASSES``), not by a clock;
+4. checks every op once, untimed: lanes against DuckDB's result for
+   their oracle SQL, written parquet against DuckDB's read of the same
+   inputs. An op run that raises or mismatches is a failed op;
+5. reads the peak RSS of the driver JVM and of this process.
+
+Times are taken three ways: wall time, CPU time of this process and
+all its descendants (``/proc``), and the share of busy CPU time the
+hypervisor stole (``/proc/stat``). ``setup_s`` and ``pass_s`` are wall
+times less that stolen share, so time given to other guests on a
+shared host is not counted as the program's; raw wall times are on the
+``info`` line. ``pass_cpu_s`` is the CPU time of a pass, which the
+kernel does not charge for stolen time. ``DESIGN.md`` gives how far
+heavy contention still moves both.
 
 The last stdout line is ``{"correct", "attempted", "failed", "metrics"}``
 with the end-to-end metrics (``--trace 0``) or the per-layer metrics
@@ -39,6 +48,8 @@ import subprocess
 import sys
 import tempfile
 import time
+from collections import defaultdict
+from dataclasses import dataclass
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -46,10 +57,10 @@ WORK = os.path.join(ROOT, ".perfbench_work")
 sys.path.insert(0, HERE)
 
 SETUP_REPS = 3
-WARMUP_PASSES = 2  # pass times still fall for ~2 passes after set-up (JIT)
 MIN_PASSES = 3
 DRIVER_MEM = "2g"
 INPUT_CACHE_ENTRIES = 6
+CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 
 def cpus() -> int:
@@ -58,6 +69,84 @@ def cpus() -> int:
 
 def loadavg() -> float:
     return os.getloadavg()[0]
+
+
+def _stat_ticks(pid: str) -> tuple[int, int]:
+    """(parent pid, utime + stime + cutime + cstime) from /proc/<pid>/stat."""
+    with open(f"/proc/{pid}/stat") as fh:
+        fields = fh.read().rsplit(")", 1)[1].split()
+    return int(fields[1]), sum(int(x) for x in fields[11:15])
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process, its reaped children and
+    every live descendant (the driver JVM and its Python workers).
+
+    The kernel charges time the hypervisor took away to steal, not to
+    the process, so this does not grow with stolen time as wall time
+    does (it still grows when other guests slow the shared caches).
+    """
+    t = os.times()
+    total = t.user + t.system + t.children_user + t.children_system
+    kids: dict[int, list[int]] = defaultdict(list)
+    ticks: dict[int, int] = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            ppid, used = _stat_ticks(name)
+        except (FileNotFoundError, ProcessLookupError):  # exited meanwhile
+            continue
+        kids[ppid].append(int(name))
+        ticks[int(name)] = used
+    todo = list(kids[os.getpid()])
+    while todo:
+        pid = todo.pop()
+        total += ticks[pid] / CLK_TCK
+        todo += kids[pid]
+    return total
+
+
+def host_ticks() -> tuple[int, int]:
+    """(busy, stolen) clock ticks of all CPUs since boot, from /proc/stat."""
+    with open("/proc/stat") as fh:
+        user, nice, system, _idle, _iowait, irq, softirq, steal = map(
+            int, fh.readline().split()[1:9]
+        )
+    return user + nice + system + irq + softirq, steal
+
+
+@dataclass
+class Reading:
+    wall: float
+    cpu: float
+    busy: int
+    steal: int
+
+    @staticmethod
+    def now() -> "Reading":
+        return Reading(time.perf_counter(), tree_cpu_s(), *host_ticks())
+
+
+@dataclass
+class Interval:
+    """Wall time, CPU time, and the share of the CPU time the host's
+    busy CPUs asked for that the hypervisor gave to someone else."""
+
+    wall: float
+    cpu: float
+    steal_share: float
+
+    @staticmethod
+    def between(a: Reading, b: Reading) -> "Interval":
+        busy, steal = b.busy - a.busy, b.steal - a.steal
+        return Interval(b.wall - a.wall, b.cpu - a.cpu, steal / max(busy + steal, 1))
+
+    @property
+    def unstolen(self) -> float:
+        """Wall time less the share the hypervisor took: what the interval
+        would have lasted had every busy CPU run whenever it wanted to."""
+        return self.wall * (1.0 - self.steal_share)
 
 
 def vm_hwm_mb(pid: int | str) -> float:
@@ -114,23 +203,9 @@ class Ctx:
         self.archives = inputs["archives"]
         self.tmp_dir = os.path.join(run_dir, "tmp")
         self.out_dir = os.path.join(run_dir, "out")
-        self.catalyst: dict[str, list[float]] = {}
 
     def out(self, name: str) -> str:
         return os.path.join(self.out_dir, name)
-
-    def record_catalyst(self, op: str, df) -> None:
-        """Analysis + optimization + planning time of the op's plan, from
-        Catalyst's phase tracker (planning is forced here, traced runs only)."""
-        qe = df._jdf.queryExecution()
-        qe.executedPlan()
-        phases = qe.tracker().phases()
-        total_ms = 0
-        for ph in ("analysis", "optimization", "planning"):
-            opt = phases.get(ph)
-            if opt.isDefined():
-                total_ms += opt.get().durationMs()
-        self.catalyst.setdefault(op, []).append(total_ms / 1000.0)
 
 
 def start_session(ctx, run_dir: str, trace: bool):
@@ -185,60 +260,53 @@ def shutdown_jvm() -> None:
         proc.wait(timeout=30)
 
 
-def run_pass(ctx, ops, label: str, failures: dict) -> float:
-    """One pass over ``ops``; the first warm-up pass runs each op's ``warm``."""
-    t0 = time.perf_counter()
+def run_pass(ctx, ops, label: str, failures: dict) -> Interval:
+    """One pass over ``ops``; an op that raises is a failed op."""
+    t0 = Reading.now()
     with ctx.tracer.span("pass", label=label):
         for op in ops:
             with ctx.tracer.span("op", op=op.name, label=label):
                 try:
-                    problem = op.warm(ctx) if label == "warmup0" else op.run(ctx)
-                except Exception as e:  # an op that raises is a failed op
-                    problem = f"{op.name}: {type(e).__name__}: {e}"
-                if problem:
-                    failures[(label, op.name)] = problem
-    return time.perf_counter() - t0
+                    op.run(ctx)
+                except Exception as e:
+                    failures[(label, op.name)] = f"{op.name}: {type(e).__name__}: {e}"
+    return Interval.between(t0, Reading.now())
 
 
-def set_up(ctx, w, run_dir: str) -> tuple[list[float], list[float], dict]:
-    """``SETUP_REPS`` set-ups, each a fresh SparkContext plus cold builds
-    of the workload's artifacts. The first also starts the JVM."""
+def set_up(ctx, w, ops, run_dir: str, failures: dict) -> dict[str, list]:
+    """``SETUP_REPS`` set-ups, each what a job pays before its first
+    result: a session start through ``get_spark`` (a new SparkContext,
+    with its own Python worker daemon and shipped package), cold builds
+    of the workload's artifacts, and one pass. The first repetition
+    also launches the JVM; the later ones stop the session and start a
+    new one in the same JVM."""
     import workloads
 
     helpers = workloads.artifact_helpers()
-    setup_s, start_s, build_s = [], [], {ns: [] for ns in w.artifacts}
+    out: dict[str, list] = {"setup": [], "start_s": [], "first_pass": []}
+    out.update({f"build_s.{ns}": [] for ns in w.artifacts})
     for rep in range(SETUP_REPS):
         if ctx.spark is not None:
             ctx.spark.stop()
-        t0 = time.perf_counter()
+        for ns in w.artifacts:
+            workloads.drop_artifact_store(ns)
+        t0 = Reading.now()
         with ctx.tracer.span("setup", rep=rep):
             with ctx.tracer.span("session.start"):
                 ctx.spark = start_session(ctx, run_dir, ctx.tracer.enabled)
-            start_s.append(time.perf_counter() - t0)
+            out["start_s"].append(time.perf_counter() - t0.wall)
             for ns in w.artifacts:
-                workloads.drop_artifact_store(ns)
                 t1 = time.perf_counter()
                 with ctx.tracer.span("artifacts.build", ns=ns):
                     helpers[ns](ctx.spark, ctx.sf_dir)
-                build_s[ns].append(time.perf_counter() - t1)
-        setup_s.append(time.perf_counter() - t0)
-    return setup_s, start_s, build_s
+                out[f"build_s.{ns}"].append(time.perf_counter() - t1)
+            out["first_pass"].append(run_pass(ctx, ops, f"setup{rep}", failures))
+        out["setup"].append(Interval.between(t0, Reading.now()))
+    return out
 
 
-def measure(ctx, w, args, run_dir: str, info: dict) -> dict:
-    """Set up, warm up, time the passes, check; return the metrics."""
-    import workloads
-
-    ops = workloads.build_ops(w)
-    failures: dict[tuple[str, str], str] = {}  # (pass label, op) -> problem
-    setup_s, start_s, build_s = set_up(ctx, w, run_dir)
-    info["warmup_s"] = [
-        run_pass(ctx, ops, f"warmup{k}", failures) for k in range(WARMUP_PASSES)
-    ]
-    passes: list[float] = []
-    t_start = time.perf_counter()
-    while len(passes) < MIN_PASSES or time.perf_counter() - t_start < args.seconds:
-        passes.append(run_pass(ctx, ops, f"pass{len(passes)}", failures))
+def verify(ctx, ops, failures: dict) -> None:
+    """Untimed checks of every op, after the timed passes."""
     with ctx.tracer.span("verify"):
         for op in ops:
             try:
@@ -246,14 +314,37 @@ def measure(ctx, w, args, run_dir: str, info: dict) -> dict:
             except Exception as e:  # a check that raises fails its op
                 problem = f"{op.name}: check raised {type(e).__name__}: {e}"
             if problem:
-                failures[(f"pass{len(passes) - 1}", op.name)] = problem
+                failures[("verify", op.name)] = problem
+
+
+def measure(ctx, w, args, run_dir: str, info: dict) -> dict:
+    """Set up, time the passes, check; return the metrics."""
+    import workloads
+
+    ops = workloads.build_ops(w)
+    failures: dict[tuple[str, str], str] = {}  # (pass label, op) -> problem
+    setup = set_up(ctx, w, ops, run_dir, failures)
+    # Op times keep falling for many passes while the JIT compiles, so
+    # the pass count is fixed: a slower host must not move the median
+    # to an earlier point of that slope.
+    n_passes = max(MIN_PASSES, round(args.seconds / w.nominal_pass_s))
+    passes = [run_pass(ctx, ops, f"pass{k}", failures) for k in range(n_passes)]
+    t_verify = time.perf_counter()
+    verify(ctx, ops, failures)
+    info["verify_s"] = time.perf_counter() - t_verify
     rss_mb = vm_hwm_mb(jvm_process().pid) + vm_hwm_mb("self")
     app_id = ctx.spark.sparkContext.applicationId
     ctx.spark.stop()
     info.update(
         passes=len(passes),
-        pass_times=passes,
-        setup_times=setup_s,
+        **{
+            f"{k}_{f}": [round(getattr(iv, f), 4) for iv in ivs]
+            for k, ivs in (("setup", setup["setup"]), ("pass", passes))
+            for f in ("wall", "cpu", "steal_share")
+        },
+        **{f"setup_{k}": [round(t, 4) for t in v] for k, v in setup.items()
+           if k not in ("setup", "first_pass")},
+        setup_first_pass_wall=[round(iv.wall, 4) for iv in setup["first_pass"]],
         failures=[f"{label}: {p}" for (label, _), p in list(failures.items())[:20]],
     )
     if ctx.tracer.enabled:
@@ -261,19 +352,21 @@ def measure(ctx, w, args, run_dir: str, info: dict) -> dict:
 
         metrics = per_layer(
             ctx.tracer, ctx, os.path.join(run_dir, "eventlog"), app_id,
-            start_s=start_s, build_s=build_s, pass_median=statistics.median(passes),
+            setup=setup, pass_median=statistics.median(p.unstolen for p in passes),
         )
         os.makedirs(os.path.join(WORK, "traces"), exist_ok=True)
         ctx.tracer.dump(os.path.join(WORK, "traces", f"{w.name}-seed{args.seed}.spans.json"))
     else:
         metrics = {
-            "setup_s": {"value": statistics.median(setup_s), "unit": "s"},
-            "pass_s": {"value": statistics.median(passes), "unit": "s"},
+            "setup_s": {"value": statistics.median(s.unstolen for s in setup["setup"]), "unit": "s"},
+            "pass_s": {"value": statistics.median(p.unstolen for p in passes), "unit": "s"},
+            "pass_cpu_s": {"value": statistics.median(p.cpu for p in passes), "unit": "s"},
             "peak_rss_mb": {"value": rss_mb, "unit": "MB"},
         }
+    executions = len(ops) * (SETUP_REPS + len(passes))
     return {
         "correct": not failures,
-        "attempted": len(ops) * (WARMUP_PASSES + len(passes)),
+        "attempted": executions + len(ops),  # every op is also verified once
         "failed": len(failures),
         "metrics": metrics,
     }
@@ -359,7 +452,9 @@ def steadiness(args) -> None:
         for seed in range(args.seed, args.seed + args.steadiness):
             cmd = [sys.executable, __file__, "--workload", name, "--seed", str(seed),
                    "--seconds", str(args.seconds), "--trace", str(args.trace)]
+            t0 = time.perf_counter()
             res = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
+            elapsed = time.perf_counter() - t0
             if res.returncode != 0:
                 print(json.dumps({"workload": name, "seed": seed, "exit": res.returncode,
                                   "stderr": res.stderr[-2000:]}), flush=True)
@@ -370,8 +465,10 @@ def steadiness(args) -> None:
                 values.setdefault(m, []).append(v["value"])
             print(json.dumps({"workload": name, "seed": seed, "correct": last["correct"],
                               **{m: v["value"] for m, v in last["metrics"].items()},
-                              "passes": [round(t, 3) for t in info["pass_times"]],
-                              "setups": [round(t, 3) for t in info["setup_times"]]}), flush=True)
+                              "elapsed_s": round(elapsed, 1),
+                              **{k: info[k] for k in ("pass_wall", "pass_steal_share",
+                                                      "setup_wall", "setup_steal_share")}}),
+                  flush=True)
         spreads = {}
         for m, vs in values.items():
             if len(vs) < 2:
@@ -387,7 +484,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=False)
     ap.add_argument("--seed", type=int, default=0)
-    ap.add_argument("--seconds", type=float, default=18)
+    ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--steadiness", type=int, default=0, metavar="N")
     args = ap.parse_args()

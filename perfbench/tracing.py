@@ -74,18 +74,19 @@ class Tracer:
 
         setattr(module, attr, traced)
 
-    def children(self, idx: int) -> list[int]:
-        return [i for i, s in enumerate(self.spans) if s.parent == idx]
-
-    def self_time(self, idx: int) -> float:
-        """Span duration minus the part of it its child spans cover."""
-        span = self.spans[idx]
-        covered = union_length(
-            (self.spans[c].start, self.spans[c].end) for c in self.children(idx)
-        )
-        return span.dur - covered
+    def self_times(self) -> list[float]:
+        """Each span's duration minus the part of it its child spans cover."""
+        children: dict[int, list[Span]] = defaultdict(list)
+        for s in self.spans:
+            if s.parent is not None:
+                children[s.parent].append(s)
+        return [
+            s.dur - union_length((c.start, c.end) for c in children[i])
+            for i, s in enumerate(self.spans)
+        ]
 
     def dump(self, path: str) -> None:
+        self_s = self.self_times()
         with open(path, "w") as fh:
             json.dump(
                 [
@@ -95,7 +96,7 @@ class Tracer:
                         "start": s.start,
                         "end": s.end,
                         "parent": s.parent,
-                        "self_s": self.self_time(i),
+                        "self_s": self_s[i],
                         **s.attrs,
                     }
                     for i, s in enumerate(self.spans)
@@ -138,6 +139,21 @@ def instrument(tracer: Tracer) -> None:
         return out
 
     artifacts.persisted_frame = traced_persisted
+
+
+def catalyst_s(df) -> float:
+    """Analysis + optimization + planning time of ``df``'s plan, from
+    Catalyst's phase tracker. Planning is forced here, so the call
+    itself belongs to the tracing overhead."""
+    qe = df._jdf.queryExecution()
+    qe.executedPlan()
+    phases = qe.tracker().phases()
+    total_ms = 0
+    for ph in ("analysis", "optimization", "planning"):
+        opt = phases.get(ph)
+        if opt.isDefined():
+            total_ms += opt.get().durationMs()
+    return total_ms / 1000.0
 
 
 def union_length(intervals) -> float:
@@ -229,16 +245,18 @@ LAYER_SPANS = {
 
 
 def per_layer(tracer: Tracer, ctx, event_log_dir: str, app_id: str, *,
-              start_s, build_s, pass_median) -> dict:
+              setup: dict[str, list], pass_median: float) -> dict:
     """Per-layer metrics of a traced run: medians over its timed passes
     for everything measured per pass, medians over set-up repetitions
-    for set-up, and whole-run totals for failed tasks."""
+    for set-up, and whole-run totals for failed tasks. Span times are
+    self times: a span's duration less what its child spans cover."""
     from workloads import _dir_bytes, metric_units
 
     spans = tracer.spans
+    self_s = tracer.self_times()
     passes = [
         i for i, s in enumerate(spans)
-        if s.name == "pass" and not s.attrs["label"].startswith("warmup")
+        if s.name == "pass" and s.attrs["label"].startswith("pass")
     ]
     per_pass: dict[int, dict[str, float]] = {p: defaultdict(float) for p in passes}
 
@@ -253,14 +271,16 @@ def per_layer(tracer: Tracer, ctx, event_log_dir: str, app_id: str, *,
         if acc is None:
             continue
         if s.name in LAYER_SPANS:
-            acc[LAYER_SPANS[s.name]] += s.dur
+            acc[LAYER_SPANS[s.name]] += self_s[i]
         elif s.name == "artifacts.persisted_frame":
             if s.attrs["rebuilt"]:
                 acc["artifacts.rebuilds"] += 1
             else:
-                acc["artifacts.load_verify_s"] += s.dur
+                acc["artifacts.load_verify_s"] += self_s[i]
         elif s.name == "plans.build":
-            acc[f"plans.build_s.{s.attrs['op']}"] += tracer.self_time(i)
+            acc[f"plans.build_s.{s.attrs['op']}"] += self_s[i]
+        elif s.name == "plans.catalyst":
+            acc[f"plans.catalyst_s.{s.attrs['op']}"] += s.attrs["catalyst_s"]
         elif s.name == "op":
             windows.append((i, s.attrs["op"], s.start, s.end))
             acc["trace.op_cover"] += s.dur / spans[pass_of(i)].dur
@@ -279,18 +299,16 @@ def per_layer(tracer: Tracer, ctx, event_log_dir: str, app_id: str, *,
         acc[f"operators.executor_cpu_s.{op}"] = c.executor_cpu_s
         acc[f"operators.shuffle_write_bytes.{op}"] = c.shuffle_write_bytes
         acc[f"operators.driver_gap_s.{op}"] = (end - start) - stage_busy
-    for op, times in ctx.catalyst.items():
-        for p, t in zip(passes, times):
-            per_pass[p][f"plans.catalyst_s.{op}"] = t
 
     units = metric_units()
     values = {
         name: statistics.median(acc.get(name, 0.0) for acc in per_pass.values())
         for name in units
     }
-    values["session.start_s"] = statistics.median(start_s)
-    for ns, times in build_s.items():
-        values[f"artifacts.build_s.{ns}"] = statistics.median(times)
+    values["session.start_s"] = statistics.median(setup["start_s"])
+    for key, times in setup.items():
+        if key.startswith("build_s."):
+            values[f"artifacts.{key}"] = statistics.median(times)
     values["operators.tasks_failed"] = sum(
         1 for ev in events
         if ev["Event"] == "SparkListenerTaskEnd"

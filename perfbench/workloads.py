@@ -1,21 +1,11 @@
-"""The three workloads: their inputs, set-up artifacts, ops and checks.
+"""The two workloads: their inputs, set-up artifacts, ops and checks.
 
 Each workload is a fixed sequence of ops run in one pass. An op calls
 the package's public functions, forces its result, and knows how to
 check what it produced. Lanes (registry queries) are forced through
 Spark's ``noop`` sink, as ``bench.py`` does; the ingestion ops write
-real parquet through ``sources.sinks.write_parquet``.
-
-Why these workloads (the full table is in ``DESIGN.md``):
-
-- ``etl_ingest`` is the reference program's own job, zip -> CSV ->
-  verify -> project -> parquet. Sinks and scans do nearly all the work,
-  with almost no shuffle. It is the only workload that writes, so a
-  sink or codec change shows here and nowhere else.
-- ``llm_dedup`` is bound by executor CPU and shuffle: the dedup lanes
-  and the Jaccard/cosine artifacts they consume.
-- ``small_jobs`` is bound by driver-side fixed cost: many small jobs
-  per lane (iterative graph lanes, rerank, SQL front end, a join).
+real parquet through ``sources.sinks.write_parquet``. Why these two
+workloads, and which lanes were left out, is in ``DESIGN.md``.
 """
 
 from __future__ import annotations
@@ -45,6 +35,7 @@ class Workload:
     lanes: tuple[str, ...]  # registry lanes, each with a DuckDB oracle
     artifacts: tuple[str, ...]  # persisted artifacts built cold in set-up
     fixture: dict[str, int]  # gen.fixture_sizes arguments
+    nominal_pass_s: float  # a steady pass on a quiet 4-vCPU host
     archives: int = 0
     rows_per_archive: int = 0
 
@@ -53,9 +44,9 @@ class Workload:
         return (ETL_OPS if self.archives else ()) + self.lanes
 
 
-# Lane sets are small on purpose: about fifty runs of the benchmark must
-# fit one hour on a 4-core host, and a run spends ~20 s on JVM start and
-# JIT warm-up before its first steady-state pass.
+# Lane sets are small on purpose: some twenty runs per workload must fit
+# about an hour on a 4-core host, and each run launches the JVM and
+# builds its artifacts three times before its first timed pass.
 WORKLOADS = {
     w.name: w
     for w in (
@@ -64,14 +55,16 @@ WORKLOADS = {
             lanes=("orc_interop",),
             artifacts=(),
             fixture={"docs": 500, "vecs": 500, "lines": 120_000},
+            nominal_pass_s=2.8,
             archives=16,
             rows_per_archive=15_000,
         ),
         Workload(
             "llm_dedup",
-            lanes=("dedup_ngram_jaccard", "dedup_fuzzy"),
+            lanes=("dedup_fuzzy",),
             artifacts=("refpairs",),
             fixture={"docs": 1000, "vecs": 500, "lines": 12_000},
+            nominal_pass_s=2.2,
         ),
     )
 }
@@ -150,9 +143,10 @@ def _dir_bytes(path: str) -> tuple[int, int]:
 
 
 class Op:
-    """One step of a pass. ``run`` is timed; ``warm`` and ``check`` are not.
+    """One step of a pass. ``run`` is timed; ``check`` is not.
 
-    Both checks return a description of what is wrong, or None.
+    ``check`` runs once, after the timed passes, and returns a
+    description of what is wrong, or None.
     """
 
     name: str
@@ -160,23 +154,17 @@ class Op:
     def run(self, ctx) -> None:
         raise NotImplementedError
 
-    def warm(self, ctx) -> str | None:
-        """The op's untimed first run, in the warm-up pass."""
-        self.run(ctx)
-        return None
-
     def check(self, ctx) -> str | None:
-        """Compare what the last timed pass left behind."""
-        return None
+        raise NotImplementedError
 
 
 class LaneOp(Op):
     """A registry lane forced through the noop sink.
 
-    Its warm-up run collects the output instead and compares the
-    order-insensitive value multiset with DuckDB's result for the lane's
-    oracle SQL, by the rules of ``tools/oracle_check.py``. The noop sink
-    keeps nothing for a later check to read.
+    The noop sink keeps nothing to read back, so its check runs the lane
+    once more, collects the output and compares the order-insensitive
+    value multiset with DuckDB's result for the lane's oracle SQL, by
+    the rules of ``tools/oracle_check.py``.
     """
 
     def __init__(self, lane: str) -> None:
@@ -195,11 +183,14 @@ class LaneOp(Op):
         ctx.spark.catalog.clearCache()
         df = self.build(ctx)
         if ctx.tracer.enabled:
-            ctx.record_catalyst(self.name, df)
+            from tracing import catalyst_s
+
+            with ctx.tracer.span("plans.catalyst", op=self.name) as sp:
+                sp.attrs["catalyst_s"] = catalyst_s(df)
         with ctx.tracer.span("operators.execute", op=self.name):
             df.write.format("noop").mode("overwrite").save()
 
-    def warm(self, ctx) -> str | None:
+    def check(self, ctx) -> str | None:
         from tools.oracle_check import run_duckdb, to_multiset
 
         ctx.spark.catalog.clearCache()
@@ -273,7 +264,9 @@ class EtlOp(Op):
 
 
 class ReadbackOp(Op):
-    """Scan back what the zip scan wrote; its check compares row counts."""
+    """Scan back what the zip scan wrote. Its check counts the rows
+    Spark reads back against DuckDB's count of the same files (the zip
+    scan's own check ties those files to the CSVs)."""
 
     name = "readback"
 
@@ -286,18 +279,14 @@ class ReadbackOp(Op):
     def check(self, ctx) -> str | None:
         import duckdb
 
+        n = ctx.spark.read.parquet(ctx.out("zip_scan")).count()
         con = duckdb.connect()
         try:
-            n, want = (
-                con.sql(f"SELECT count(*) FROM ({rel})").fetchone()[0]
-                for rel in (
-                    _parquet_relation(f"{ctx.out('zip_scan')}/*.parquet", SELECTED),
-                    _csv_relation([a["csv"] for a in ctx.archives]),
-                )
-            )
+            rel = _parquet_relation(f"{ctx.out('zip_scan')}/*.parquet", SELECTED)
+            want = con.sql(f"SELECT count(*) FROM ({rel})").fetchone()[0]
         finally:
             con.close()
-        return None if n == want else f"readback: {n} rows, expected {want}"
+        return None if n == want else f"readback: Spark reads {n} rows, DuckDB {want}"
 
 
 def _pipeline_one(ctx) -> None:
