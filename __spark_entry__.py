@@ -1,429 +1,21 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for the spark-graft engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
-
-The graded registry is EXACTLY 50 entries, every one oracle-gated,
-ordered parity → LLM → streaming → relational (the harness grades only
-the first 50 entries — confirmed in rounds 1 AND 2; see SURVEY.md §2C
-for the full inventory and rotation history). Round 7 completes the
-rotation programme (VERDICT r6 #1) in two waves: the three round-6
-never-driver-graded operators move into the graded 50 — dedup_passages
-(cross-document repeated-passage scrubbing), emb_gram (the exact
-decimal Gram-matrix reduction), dedup_keep_best (quality-aware
-canonical selection over duplicate clusters) — and the 28 NEW
-round-7 operators follow them at positions 5-32 (graph_triangles,
-per-vertex triangle counts over the undirected k-NN graph;
-bpe_merges + bpe_apply, BPE-style tokenizer training and
-per-document token counting over the word histogram; vocab_coverage,
-per-language OOV rates against the bounded top-N vocabulary;
-stream_join_interval, the stream-stream attribution join graded
-through its batch twin; kmeans_embeddings, distributed fixed-point
-Lloyd's k-means; sim_join_kmeans, the similarity join blocked by the
-learned k-means cells; pq_encode + ann_pq_topk, product-quantization
-codes from per-subspace fixed-point codebooks and the ADC
-lookup-table search over them — both graded by full bitwise oracles;
-freq_items_topk, the mergeable Misra-Gries heavy-hitter sketch;
-dedup_soft, duplication-count downweighting; mix_weights,
-temperature-scaled training-mix weights; strip_markup,
-the C4-style tag-strip/entity-unescape pass; ngram_counts,
-the corpus bigram frequency table; merge_intervals, gaps-and-islands
-interval coalescing; markov_transitions, the per-user event
-transition matrix with fixed-point conditional probabilities;
-robust_stats, discrete per-group quartiles/IQR/MAD, the exact twin
-of the approx-quantile scale lane; shard_manifest, deterministic
-shard assignment with XOR content checksums; batch_by_length,
-length-bucketed batch composition with padding-efficiency
-accounting; url_canonicalize, tracking-param/www/trailing-slash URL
-canonicalization with duplicate-URL keeper election; cms_counts,
-count-min-sketch frequency estimation under a guaranteed-true
-never-undercount contract; pmi_cooccur, collocation PMI for the top
-bigrams on micro-quantized log2; session_paths, top first-K event
-journeys with fixed-point user shares; chi2_contingency, the
-chi-square independence test on exact marginals; ann_two_stage, the
-ADC-shortlist + exact-re-rank retrieval pipeline under a full
-bitwise oracle; entropy_score, per-document word-distribution
-Shannon entropy; content_chunks, content-defined (FastCDC-style)
-chunking with cross-corpus fingerprint copy counts; word_filter,
-the C4 blocklist gate with fixed-point hit rates). The post-wave-2
-additions dsir_weights (DSIR importance weighting for data
-selection, Xie et al. NeurIPS'23 — hashed-token target/raw log-ratio
-scoring), token_budget_select (the greedy quality-ranked token-
-budget cut, run as a two-phase bucket+carry prefix sum instead of a
-one-task global window), and corr_pearson (per-group Pearson
-correlation from exact integer sufficient statistics — the
-layout-proof replacement for float-accumulator corr()) grade
-immediately too. A THIRD wave adds six more never-graded operators —
-doc_winnow (winnowing fingerprint selection, the MOSS local-argmin
-algorithm as one packed-key window pass), inverted_index (term → df /
-tf / capped posting list), changepoint_cusum (per-customer integer
-CUSUM level-shift detection), link_predict (common-neighbor link
-prediction over the k-NN graph with exact integer Jaccard parts),
-kcore_decompose (k-core peeling of the support-filtered co-purchase
-graph, unrolled-CTE oracle), and winnow_overlap (the MOSS-style
-fingerprint-equality overlap join over doc_winnow's selections) —
-which also grade immediately. In exchange, 40 multi-green veterans
-demote (sample_span_mask /
-lm_unigram_score / udf_scalar in wave 1, then 28 more plus
-window_distribution, text_normalize, and knn_graph, then
-recursive_cte / data_expectations / value_histogram / pagerank /
-sample_stratified / unpivot_stack for wave 3 — see plans/registry.py). Round 7
-graded all of the above green, so every pre-round-8 operator has a
-green driver row. Round 8 adds FIVE new operators — rank_bm25 (Okapi
-BM25 retrieval scoring from exact corpus statistics, the ranking twin
-of inverted_index), ewma_smooth (truncated fixed-point exponential
-smoothing per user, one exchange + one window sort), rank_fusion_rrf
-(reciprocal-rank fusion of the BM25 and LM-fluency rankings — the
-training-free hybrid-retrieval combiner), dup_span_max (the
-Lee-et-al longest-duplicated-span memorization statistic, sharing the
-passage-scrub front half with a document-local run-length scan), and
-pipeline_fineweb (the COMPOSED FineWeb-shaped corpus pipeline:
-language/quality gates → exact dedup → split → passage scrub over the
-surviving corpus, graded end-to-end through the same stages' SQL
-chained as CTEs) — demoting the double-green anomaly_zscore,
-time_weighted_avg, funnel_conversion, retention_cohort, and
-corpus_report one-for-one. A SECOND round-8 wave adds orc_interop
-(parquet→ORC→read-back→exact aggregate: the second-columnar-format
-interop lane), acf_lags (daily-series autocorrelation from exact
-int64 sufficient statistics), ccnet_buckets (CCNet-style per-language
-perplexity NTILE into head/middle/tail, Wenzek et al. 2019), and
-zorder_layout (Morton bit-interleave clustering key + per-cell
-occupancy stats — the multi-dimensional data-skipping layout) right
-after ingest_parity, demoting the double-green chunk_text,
-basket_pairs, period_growth, ab_test_metrics. A FINAL round-8 rotation then moved every remaining
-never-graded lane into the graded 50 — the wave-3 evaluation family
-eval_ndcg (NDCG@k from a literal integer discount table) /
-eval_calibration (the reliability table behind ECE) / eval_pr_curve
-(cumulative decile precision/recall/F1 operating points), drift_psi
-(two-snapshot population-stability drift), mmr_rerank (MMR
-diversified re-ranking under an unrolled greedy oracle),
-join_asof_nearest (nearest-direction as-of record linkage),
-graph_sssp (BFS hop distances, unrolled min-plus CTE oracle),
-stream_dedup (watermark-bounded streaming dedup graded through its
-deterministic batch twin), and the wave-2 stragglers jsonl_interop /
-dedup_incremental / lm_bigram_score / eval_auc — demoting twelve
-single-green round-7 veterans one-for-one (freq_items_topk,
-dedup_soft, mix_weights, strip_markup, ngram_counts,
-merge_intervals, markov_transitions, robust_stats, shard_manifest,
-batch_by_length, url_canonicalize, cms_counts — each keeps its r7
-green row, its oracle, its bench flag, and its place in the local
-sweep). Round 9 closes the loop AND adds eight new operators. The
-four post-rotation lanes — ts_interpolate (linear gap interpolation
-on the regularized hourly grid), privacy_erase (the
-right-to-be-forgotten cascade audit: customers, their orders, those
-orders' lineitems, their event streams — exact purge counts per
-table), feature_vector (pinned-vocabulary one-hot + min-max scaling,
-the fit/transform encode step), and skew_report (per-join-key
-cardinality/heavy-hitter shares — the salting-vs-AQE decision
-report) — move to graded positions 10-13, behind the eight NEW
-round-9 operators at positions 2-9: drift_ks (two-sample Kolmogorov-Smirnov
-numeric drift — the rank-based complement to drift_psi's fixed bins,
-exact int64 cross-multiplied ECDF gap, distributed as a two-phase
-bucketed prefix sum), skew_autosalt (the skew_report →
-salted-aggregation composition: ceil(rows/target) fan-out per heavy
-key, then the prescribed two-phase salted aggregation with a
-deterministic pmod spreader the oracle replays), privacy_kanon
-(the k-anonymity class-size audit over the customer
-quasi-identifier — the compliance twin of privacy_erase),
-quantile_select (exact type-1 quantiles by distributed selection —
-bucket counts locate each rank, only located buckets are re-read —
-plus the approx_percentile rank-window contract), and
-reconcile_sources (the header-vs-detail two-source reconciliation
-audit: full outer join, one shared CASE classifier, integer-cents
-tolerance by cross-multiplication), rolling_median (per-user
-trailing-window type-1 median over integer cents — the robust
-smoothing twin of ewma_smooth), and forecast_snaive (the
-seasonal-naive forecast backtest: per-(type, hour-of-day) quantized
-profile, exact int64 MAE over the holdout, unseen-key coverage
-surfaced instead of silently zero-scored), and ref_integrity_audit
-(the per-FK-edge orphan/NULL audit — parents reduced to DISTINCT
-keys then shuffle_hash-pinned, since every parent grows with the
-data and a fixture-scale broadcast would be both the plan
-instability and the driver-OOM trap). In exchange the
-double-green r7+r8 veterans doc_winnow / inverted_index /
-changepoint_cusum / winnow_overlap / graph_triangles /
-vocab_coverage / bpe_merges / bpe_apply / kmeans_embeddings /
-pq_encode / ann_pq_topk / pmi_cooccur demote
-to the EXTRA head one-for-one. After r9 grades, EVERY oracle-gated
-operator in the repo has a driver row. Round 10 adds nine new
-operators at positions 2-10 — eval_mrr (MRR + recall@k of per-term
-BM25 rankings against a ranking-independent title-prefix relevance
-signal — the ranking-position metric that closes the retrieval-eval
-family), rolling_quantile (per-user trailing-window exact type-1
-p25/p50/p90 band — rolling_median generalized to arbitrary p),
-schema_drift_report (per-column added/dropped/widened/changed
-verdicts across two LANDED parquet batches through one shared CASE,
-plus reconciled-union non-null counts), dedup_threshold_sweep (the
-duplication-rate-vs-threshold tuning curve over the exact PPJoin
-pair table — pair counts, pairwise drop estimates, and corpus drop
-shares per candidate cutoff), and alert_rate_spike (per-type hourly
-rate-spike alerting against a trailing 24-observed-bucket baseline,
-tested by integer cross-multiplication), bpe_fertility
-(per-language tokenizer fertility and compression over the learned
-BPE model — the multilingual tokenizer audit), and compaction_plan
-(sorted-fill small-files compaction groups via the two-phase
-bucket+carry prefix sum, quantile_select-style), and privacy_ldiv
-(the l-diversity attribute-disclosure audit over the k-anonymity QI
-classes — released orders reveal priorities; the compliance family's
-third leg), and eval_regression (bias / MAE / RMSE / R² of the
-seasonal-naive forecaster over exact integer sufficient statistics —
-the regression leg of the evaluation family) — and runs the
-grade-freshness rotation VERDICT r9 #1 prescribed: the twelve
-round-3 relational-core veterans with the registry's OLDEST driver
-rows (scan_parquet, project_filter, filter_compound, scalar_funcs,
-agg_rollup_cube, agg_distinct, join_outer, join_semi_anti,
-window_rank, sort_limit_topk, set_ops, regexp_funcs) re-enter the
-graded lane for re-verification under current Spark/DuckDB, while
-r9's fresh greens (relational13's eight + the ts_interpolate /
-privacy_erase / feature_vector / skew_report quartet), the
-double-green r8+r9 evaluation trio (eval_ndcg / eval_calibration /
-eval_pr_curve), and the double-green drift_psi / join_asof_nearest
-demote to the EXTRA head one-for-one. A sixth round-10 wave adds
-dedup_cluster_stats (the duplicate-cluster size histogram over the
-connected-components output — SURVEY §13 #4's named candidate),
-corr_spearman (tie-aware rank correlation via exact integer
-double-ranks), trend_linfit (per-type OLS trend of daily counts from
-exact sufficient statistics), anova_oneway (the cat×num leg of
-the statistical-test matrix), and rank_mannwhitney (the nonparametric
-two-sample U / rank-side AUC via the drift_ks two-phase rank
-decomposition) at graded positions 11–15, demoting the
-multi-green graph trio (link_predict / kcore_decompose / graph_sssp),
-session_paths, and ewma_smooth. Round 11 adds graph_modularity
-(Newman modularity of label_propagation's communities — the
-community-structure quality scalar, exact integer rationals over the
-undirected k-NN graph) and text_readability (Flesch reading ease
-with the vowel-group syllable proxy — the readability leg of the
-text-quality family) at positions 2–3 — a second wave adds
-graph_clustering_coeff (global transitivity 3T/W + the
-Watts–Strogatz mean local coefficient, every quotient a
-midpoint-free integer division — the third leg of the graph-health
-trio) and zipf_fit (the Zipf-exponent OLS over the top-100
-rank-frequency curve in micro-quantized log2 space — the corpus-
-health classic) at positions 4–5, demoting eval_cohen_kappa /
-privacy_tcloseness one-for-one, and a third wave adds heaps_fit
-(the Heaps'-law vocabulary-growth fit over value-based doc_id
-checkpoints — first-occurrence min + bounded prefix frame, never a
-sequential distinct-so-far — zipf_fit's companion) at position 6,
-demoting quantile_weighted, and a fourth wave adds
-eval_kripp_alpha (Krippendorff's alpha, nominal data with real
-ABSTENTIONS — the TTR rater skips sub-250-char docs and the
-per-unit 1/(m_u−1) coincidence weights handle the 2-vs-3-rating mix
-exactly — the rater-agreement family's missing-data leg next to
-Cohen and Fleiss) at position 7, demoting graph_assortativity, and a fifth
-wave adds event_burstiness (the per-type Fano factor over the full
-hourly grid — silent hours enter the moments WITHOUT grid
-generation, since zero counts add nothing to the observed sums and
-only the span N differs — the monitoring family's
-distribution-shape leg) at position 8, demoting eval_fleiss_kappa —
-extends eval_mrr with the
-recall@{1,5,10,20} cutoff ladder (kept graded for a fresh row under
-the new schema), and runs the next grade-freshness rotation: the
-twelve lanes with the registry's MEASURED-oldest driver rows
-(datetime_funcs, seq_pack, embedding_quantize, quality_gopher,
-pii_redact, media_frame_sample, agg_approx_quantile — last graded
-r3 — and agg_group, join_inner, join_broadcast, join_range,
-join_asof — last graded r4) re-enter the graded lane, while the 14
-round-10 single-green first-timers (rolling_quantile,
-schema_drift_report, dedup_threshold_sweep, alert_rate_spike,
-bpe_fertility, compaction_plan, privacy_ldiv, eval_regression,
-eval_mrr_scale, dedup_cluster_stats, corr_spearman, trend_linfit,
-anova_oneway, rank_mannwhitney) demote one-for-one and LEAD the
-EXTRA lane.
-
-Round 12 adds three NEW operators at positions 2–4
-(never-graded-first): eval_kripp_alpha_ordinal (weighted
-Krippendorff's alpha with the squared-rank-distance delta over
-graded 0–3 rubric labels — the agreement family's ordinal leg,
-collapsed to one combinable aggregate via E = 2(n·S2 − S1²)),
-graph_community_profile (one row per LPA community — size,
-intra/cut edges, internal transitivity, exact modularity
-contribution — the per-cluster trust table), and event_interarrival
-(per-type inter-arrival CV + Goh–Barabási B-index from exact µs gap
-statistics — catches sub-hour clumping the hourly Fano grid cannot
-see); then the round-12 grade-freshness rotation promotes the
-twelve measured-oldest rows (window_analytic, subquery_scalar,
-agg_percentile, pivot, join_skew_salted, sql_frontend,
-agg_argminmax, udaf_grouped, join_null_safe — last graded r4 — and
-dedup_exact, dedup_embedding, dedup_components — last graded r5),
-demoting 15 one-for-one (the seven r11 single-green
-first-timers and eight r11-refreshed veterans, who LEAD the EXTRA
-lane); a second wave adds text_yule_k (Yule's K characteristic +
-unbiased Simpson repeat rate from the frequency-spectrum second
-moment Σf² — the length-invariant lexical-repetitiveness screen,
-two combinable aggregates, zero joins) at position 5, demoting
-join_broadcast, and a third wave adds len_lognormal_fit (the
-log-normal document-length fit — per-language mean/sigma of
-micro-log2 n_chars plus the exact within-one-sigma band count, the
-two-phase data-shape drift detector) at position 6, demoting
-join_asof, and a fourth wave adds word_adaptation (Church-Gale
-per-word burstiness over the top collection-frequency words —
-adaptation = P(tf >= 2 | tf >= 1), the content-vs-function-word
-separator) at position 7, demoting dedup_containment, and a fifth
-wave adds eval_qwk (quadratic-weighted Cohen's kappa over the
-ordinal rubric pair — the fixed-pair ordinal agreement metric,
-collapsed to six integer sums via den = N*Saa − 2*Sa*Sb + N*Sbb, no
-contingency-table pivot) at position 8, demoting gini_concentration,
-and a sixth wave adds text_mattr (moving-average type-token ratio,
-Covington & McFall 2010 — the sliding-window double sum collapsed to
-ONE closed-form interval expression per token over a (doc, word) lag
-window, never a sequential window walk) at position 9, demoting
-mmr_rerank, and a seventh wave adds bootstrap_ci_mean (the
-deterministic one-pass Poisson bootstrap CI — per-row Poisson(1)
-weights from an md5-derived CDF ladder, so the resampling is
-layout-free and engine-identical; type-1 rank-selected percentile
-bounds) at position 10, demoting eval_auc, and an eighth wave adds
-event_interarrival_scale (the per-(type, day) SEGMENTED formulation
-of the inter-arrival lane — the documented skew seam built: segment
-sort windows + a bounded boundary stitch, row-identical to the base
-lane by construction and graded against the SAME oracle) at
-position 11, demoting rank_bm25, and a ninth wave adds
-bootstrap_ci_ratio (the ratio-estimator CI — urgent-order share per
-status from an INDEPENDENT salted weight stream; ratios are where
-closed-form CIs break and the bootstrap is the standard answer) at
-position 12, demoting window_rank (six green rows — the most-graded
-operator after ingest_parity).
-
-Round 13 opens with the grade-freshness rotation (VERDICT r12 #1):
-the twelve measured-oldest driver rows — the full r5-row cohort
-(corpus_prep, decontaminate, dedup_fuzzy, dedup_ngram_jaccard,
-emb_centroids, map_in_pandas_tokens, sample_split, sim_topk) plus
-the first four of the r6-row cohort (agg_hll_sketch,
-agg_skew_salted, ann_ivf_topk, array_map_json) — re-enter the graded
-lane at positions 1-12 via relational19, while the eleven round-12
-single-green first-timers plus window_analytic demote one-for-one
-and LEAD the EXTRA lane. NEW round-13 operators prepend at position
-1 as their waves land (never-graded-first): wave 1 adds
-bootstrap_ci_quantile (the Poisson bootstrap CI for a QUANTILE —
-the median order price per status, where the normal-approximation
-CI needs the unknown density at the quantile and the bootstrap is
-the standard answer; the per-replicate weighted type-1 median runs
-over the map-side-combinable per-(status, b, cents) HISTOGRAM —
-shuffle volume bounded by the price domain, not row count — and the
-whole lane is integer cents end-to-end), demoting subquery_scalar
-(r4 + r12 greens); wave 2 adds perm_test_diff (the deterministic
-permutation test for the difference of arm mean order prices — the
-significance leg next to ab_test_metrics' effect readout;
-CLUSTER-level md5 relabeling holds each customer's orders together
-like a real experiment would, B = 99 relabelings collapse to one
-map-side-combinable groupBy(p) of four counters, and the add-one
-p-value (n_ge+1)/(B+1) is one pinned micro division), demoting
-agg_percentile (r4 + r12 greens); wave 3 adds stream_bootstrap (the
-streaming uncertainty leg: the Poisson bootstrap's per-(type, b)
-(Σw, Σw·cents) counters are a commutative monoid, so the IDENTICAL
-counter code path runs under readStream as a plain complete-mode
-aggregation with |types|·B rows of state — graded through its batch
-twin end-to-end, with a cross-micro-batch parity pytest pinning
-that two micro-batches reproduce the batch counters and CI
-bitwise), demoting pivot (r4 + r12 greens); wave 4 adds
-bootstrap_ci_diff (the CLUSTER-bootstrap CI for the arm mean
-difference — the effect-size uncertainty completing the experiment
-readout next to ab_test_metrics' effect and perm_test_diff's
-p-value: customers are resampled as whole clusters via one
-d:-salted Poisson weight per (custkey, b) applied to all the
-customer's orders — a pure per-row function, no customer table, no
-join; per-replicate d as two pinned integer divisions; type-1
-rank-selected bounds), demoting join_skew_salted (r4 + r12
-greens); wave 5 adds srm_check (the sample-ratio-mismatch audit,
-Fabijan et al. KDD 2019 — the pre-analysis gate the whole A/B
-family depends on: per-nation + global ROLLUP over customer units,
-chi-square-vs-even-split collapsed to (n_a−n_b)²/N as one pinned
-micro division, the alpha = 0.001 verdict an exact integer
-cross-multiplication against the 10.828 critical value), demoting
-sql_frontend (r4 + r12 greens, bench flag intact); wave 6 adds
-eval_win_rate (the arena-style pairwise win rate P(A beats B) with
-ties split, per language, over the fixed ordinal rubric pair — with
-the deterministic Poisson-bootstrap CI over documents (the
-comparison unit) from a w:-salted weight stream, because a win rate
-without its uncertainty is uninterpretable; win = (2·gt + eq)/(2·n)
-on exact counters, one pinned micro division per estimate),
-demoting agg_argminmax (r4 + r12 greens); wave 7 adds
-metric_winsorized (the capped metric every experimentation platform
-ships next to the raw mean: exact type-1 p5/p95 bounds and the
-clamped mean, BOTH passes over the bounded per-(status, cents)
-histogram — the bootstrap_ci_quantile domain idea used twice, so
-shuffle volume never grows with rows), demoting udaf_grouped
-(r4 + r12 greens); wave 8 adds ngram_novelty (per-document trigram
-novelty share — the fraction of a doc's distinct trigrams whose
-FIRST corpus occurrence is this doc, the pairwise-free curation
-score that separates original content from template floods:
-per-doc grams built row-locally, first-occurrence attribution as
-ONE groupBy(gram) min + ONE groupBy(first_doc) count, the final
-doc-keyed join shuffle_hash-pinned since both sides grow with the
-corpus), demoting join_null_safe (r4 + r12 greens); wave 9 adds
-eval_brier (the Brier score with the Murphy 1973
-reliability/resolution/uncertainty decomposition over DISCRETE
-decile-midpoint forecasts of the fluency score — discreteness makes
-BS = REL − RES + UNC an exact identity, pinned by pytest at gap 0;
-BS clears to one exact integer division, per-bin REL/RES terms are
-pinned-double ROUNDs on exact integers quantized before the
-cross-bin sum), demoting dedup_exact (r5 + r12 greens, bench flag
-intact); wave 10 adds eval_bradley_terry (the arena leaderboard
-algorithm — Bradley–Terry strengths for the three rubric raters
-from pairwise win counts via Hunter 2004's MM, UNROLLED for a fixed
-8-iteration budget in fixed-point micro arithmetic: each update and
-normalization is ONE half-up integer division of exact
-decimal/HUGEINT products, no floats anywhere; ONE combinable
-aggregate produces the six win counters and everything after is
-constant-size), demoting dedup_embedding (r5 + r12 greens); wave 11
-adds sample_alloc_neyman (Neyman 1934 optimal allocation of a fixed
-sampling budget across strata — the weight N_h·σ_h collapses to ONE
-correctly-rounded sqrt of the exact integer variance numerator
-n·Σy² − (Σy)², and the integer split is Hamilton largest-remainder
-apportionment so the allocations sum EXACTLY to the budget),
-demoting dedup_components (r5 + r12 greens, bench flag intact — the
-full r12 promotion cohort has now rotated back out); wave 12 adds
-perm_test_ratio (the significance leg for the urgent-share ratio —
-completing the experiment matrix's ratio column next to
-bootstrap_ci_ratio's CI: customer-level pr:-salted relabelings,
-shares as pinned micro divisions, add-one p-value), demoting
-join_inner (r11 + r12 greens, bench flag intact); wave 13 adds
-bootstrap_ci_winsorized (the capped metric's CI — metric_winsorized's
-point estimate with uncertainty: fixed full-sample p5/p95 bounds (the
-documented production convention) broadcast onto the scan, v:-salted
-Poisson weights on the CLAMPED cents, so the bootstrap collapses back
-to the (status, b) counter monoid; type-1 rank-selected bounds;
-the plain winsorized mean matches metric_winsorized exactly,
-pinned), demoting join_range (r11 + r12 greens, bench flag intact).
-The EXTRA lane
-holds a hundred and eighty-five oracle-gated entries, every one with
-at least one prior green driver row — verified locally each
-round by tools/oracle_check.py. EXTRA is appended AFTER
-position 50: a 50-entry count cap ignores the tail harmlessly; a
-larger budget grades it for free. Lane counts (50 graded / 185 EXTRA /
-7 BENCH_ONLY — dedup_passages_scale joined in r8) are pinned by
-``tests/test_operators.py::test_lane_counts_match_docs``.
-Approximate operators are graded
-through accuracy-contract oracles — a deterministic ``*_ok`` boolean
-(recall / tolerance ≥ a measured floor) next to counts the oracle
-recomputes exactly; the oracle asserts TRUE (SCALE.md §13):
-
-- ``agg_distinct.approx_parts_ok``  — HLL++ estimate within 5% of exact
-- ``dedup_fuzzy.recall_ok``         — MinHash-LSH / SimHash recall vs the
-  exact shingle-Jaccard ≥ 0.5 pair set (floors 0.8 / 0.5)
-- ``ann_ivf_topk.recall_ok``        — IVF recall@10 vs brute-force top-k
-  (floor 0.8); exact twins: ``dedup_ngram_jaccard``, ``sim_topk``,
-  ``sim_join``
-
-Six operators are deliberately OUTSIDE the graded registry
-(``plans.registry.BENCH_ONLY``; benched + pytest-gated):
-``sim_join_lsh`` and ``knn_graph_lsh`` (no high-cosine pairs exist in
-the fixtures, so a recall gate would be vacuous),
-``dedup_components_lsh`` (the LSH→connected-components scale
-pipeline, accuracy via planted-cluster recall pytest),
-``dedup_semantic`` (the round-7 SemDeDup composition — whiten → LSH →
-components → keep-best; whitening's driver-side eigensolve has no SQL
-twin, accuracy via planted-cluster recall pytest),
-``lang_id_ngram`` (no ground truth — 0.20 agreement with the
-synthetic lang labels), and ``media_phash`` (the image-dedup lane:
-from-spec decode + perceptual dHash + exact-group-then-band-join;
-pixels are not SQL-reachable, accuracy via planted-pair pytest).
+The driver calls ``entry(spark)`` as a smoke check (rows > 0), then runs
+each ``queries()[name]`` at a fixture scale factor and compares it with
+``oracle_sql()[name]`` run by DuckDB on the same parquet tables: row
+count, schema, and an order-insensitive value hash. It grades the first
+50 names ``queries()`` returns. That order lives only in
+``data_ingestion_s3_to_parquet_spark.plans.registry.ORDER``; names after
+position 50 (the EXTRA lane) are oracle-checked locally by
+tools/oracle_check.py. Approximate operators are graded through
+accuracy-contract oracles: a deterministic ``*_ok`` boolean (recall or
+tolerance at or above a measured floor) next to counts the oracle
+recomputes exactly (SCALE.md §13). Lanes with no engine-neutral oracle
+are ``registry.BENCH_ONLY``: benched and pytest-gated, never returned
+here.
 
 All real logic lives in ``data_ingestion_s3_to_parquet_spark``; this
-module only adapts the query registry
-(``data_ingestion_s3_to_parquet_spark.plans.registry``) to the driver's
-three-function surface.
+module only adapts the registry to the driver's three-function surface.
 """
 
 from __future__ import annotations

@@ -46,11 +46,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from data_ingestion_s3_to_parquet_spark.plans.registry import (
-    BENCH_ONLY,
-    EXTRA,
-    REGISTRY,
-)
+from data_ingestion_s3_to_parquet_spark.plans.registry import LANES
 from data_ingestion_s3_to_parquet_spark.session import get_spark
 
 
@@ -64,7 +60,7 @@ def materialize(df) -> None:
 # lane happens to sit at the suite head (VERDICT r11 #5: agg_group /
 # join_inner / join_range inflated 1.29-1.48x purely by moving to the
 # head of the suite after a rotation — position-induced, not plan
-# damage). Looked up across REGISTRY+EXTRA so rotations never break
+# damage). Looked up in registry.LANES so rotations never break
 # the warm-up.
 WARMUP_LANES = ("scan_parquet", "join_inner", "agg_group")
 
@@ -87,11 +83,7 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    bench_queries = {
-        n: q
-        for n, q in {**REGISTRY, **EXTRA, **BENCH_ONLY}.items()
-        if q.bench
-    }
+    bench_queries = {n: q for n, q in LANES.items() if q.bench}
 
     # Persisted-artifact setup pass (VERDICT r14 #2/#5): the six
     # fingerprint-keyed derived tables (SCALE.md §30) are deleted and
@@ -134,12 +126,11 @@ def main() -> None:
     spark.sparkContext.setJobDescription(None)
 
     # warm-up: JVM/codegen/parquet-footer caches AND shuffle/join/agg
-    # machinery (merged lookup so the warm-up survives graded/EXTRA
+    # machinery (looked up in LANES so the warm-up survives graded/EXTRA
     # rotations of any warm-up lane; see WARMUP_LANES)
-    merged = {**REGISTRY, **EXTRA}
     for wname in WARMUP_LANES:
         spark.catalog.clearCache()
-        materialize(merged[wname].fn(spark, sf_dir))
+        materialize(LANES[wname].fn(spark, sf_dir))
 
     # Per-query: one warm-up run, then the timed runs (3, or 5 when
     # the warm-up reads sub-second — see below). Warm

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import tempfile
 from collections.abc import Callable, Sequence
@@ -34,6 +35,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+_log = logging.getLogger(__name__)
 
 # Minimum age before a non-current, non-own generation is swept: long
 # enough that no in-flight build can still be heading for its commit,
@@ -114,8 +116,12 @@ def persisted_frame(
             cached = spark.read.parquet(data).select(*cols)
             if _signature(cached, cols) == (want["count"], want["hashsum"]):
                 return cached
-        except Exception:
-            pass  # unreadable/corrupt/torn cache → rebuild below
+            _log.warning("artifact %s/%s: signature mismatch; rebuilding", namespace, key)
+        except Exception as e:  # unreadable/corrupt/torn cache
+            _log.warning(
+                "artifact %s/%s: unreadable cache (%s: %s); rebuilding",
+                namespace, key, type(e).__name__, e,
+            )
 
     import time
     import uuid

@@ -21,6 +21,11 @@ rather than |D|².
 
 from __future__ import annotations
 
+import uuid
+from collections.abc import Callable
+from typing import Any
+
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -458,6 +463,46 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _overlap(spark: SparkSession, *branches: tuple[str, Callable[[], Any]]) -> list:
+    """Build independent ``(description, build)`` branches concurrently,
+    one driver thread each, and return their results in order: one
+    branch's planning and execution tail hides behind the other's.
+
+    ``InheritableThread`` copies the caller's local properties (job
+    group, scheduler pool, job tags) into each branch, so the branches'
+    jobs stay attributable and cancellable with the caller's. Each
+    branch also gets its own job description and job tag. The first
+    branch to raise cancels the others' running jobs by tag; its error
+    is re-raised once every branch has ended.
+    """
+    sc = spark.sparkContext
+    tags = [f"overlap-{uuid.uuid4().hex}" for _ in branches]
+    results: list = [None] * len(branches)
+    errors: list[BaseException] = []
+
+    def run(i: int) -> None:
+        desc, build = branches[i]
+        sc.addJobTag(tags[i])
+        sc.setJobDescription(desc)
+        try:
+            results[i] = build()
+        except BaseException as e:
+            errors.append(e)
+            for other in tags[:i] + tags[i + 1:]:
+                sc.cancelJobsWithTag(other)
+        finally:
+            sc.removeJobTag(tags[i])
+
+    threads = [InheritableThread(run, args=(i,)) for i in range(len(branches))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    return results
+
+
 # Recall floors for the graded dedup_fuzzy invariant. Measured at the
 # fixture SFs with the fixed seeds: minhash 0.93 (sf0.001) / 0.96
 # (sf0.01), simhash 0.86 / 0.72 — floors leave ~0.2 margin. Both
@@ -553,25 +598,17 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref = _ref_pairs(spark, sf_dir)
     n_ref = ref.agg(F.count("*").alias("n_ref_pairs"))
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _branch(which: str) -> DataFrame:
-        # job descriptions are thread-local (guide §2.6) — label each
-        # branch so the UI shows which DAG a straggler belongs to
-        if which == "minhash_lsh":
-            spark.sparkContext.setJobDescription("dedup_fuzzy: minhash branch")
-            out = q_dedup_minhash_lsh(spark, sf_dir)
-        else:
-            spark.sparkContext.setJobDescription("dedup_fuzzy: simhash branch")
-            out = q_dedup_simhash(spark, sf_dir)
-        return out.select(
+    def _branch(which: str, build) -> Callable[[], DataFrame]:
+        return lambda: build(spark, sf_dir).select(
             "doc_a", "doc_b", F.lit(which).alias("method")
         ).localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        mh_f = pool.submit(_branch, "minhash_lsh")
-        sh_f = pool.submit(_branch, "simhash")
-        cand = mh_f.result().unionByName(sh_f.result())
+    mh, sh = _overlap(
+        spark,
+        ("dedup_fuzzy: minhash branch", _branch("minhash_lsh", q_dedup_minhash_lsh)),
+        ("dedup_fuzzy: simhash branch", _branch("simhash", q_dedup_simhash)),
+    )
+    cand = mh.unionByName(sh)
     hits = (
         cand.join(ref, ["doc_a", "doc_b"], "left_semi")
         .groupBy("method")
@@ -1511,26 +1548,19 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed to give the overlap a materialization to drive;
     # its rows are (id, score) longs, ~16 B/doc at any scale.
     # Interleaved min-of-6 at sf0.1: 1.92 → 1.66 s, output identical.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _comp_branch():
-        spark.sparkContext.setJobDescription("dedup_semantic: lsh+cc branch")
-        return semantic_clusters(_whitened(spark, sf_dir))
-
-    def _qc_branch():
-        spark.sparkContext.setJobDescription(
-            "dedup_semantic: classifier branch"
-        )
-        return (
-            q_quality_classifier(spark, sf_dir)
+    comp, qc = _overlap(
+        spark,
+        (
+            "dedup_semantic: lsh+cc branch",
+            lambda: semantic_clusters(_whitened(spark, sf_dir)),
+        ),
+        (
+            "dedup_semantic: classifier branch",
+            lambda: q_quality_classifier(spark, sf_dir)
             .select(F.col("doc_id").alias("vec_id"), "score")
-            .localCheckpoint()
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        comp_f = pool.submit(_comp_branch)
-        qc_f = pool.submit(_qc_branch)
-        comp, qc = comp_f.result(), qc_f.result()
+            .localCheckpoint(),
+        ),
+    )
     # shuffle_hash: classifier output is corpus-sized (SCALE.md §45)
     j = comp.join(qc.hint("shuffle_hash"), "vec_id")
     w = Window.partitionBy("component").orderBy(
@@ -1619,10 +1649,6 @@ FROM fresh GROUP BY text
 """
 
 
-# Demoted to the EXTRA lane in round 6 (4-5 consecutive green driver
-# rows each; their graded slots went to the eleven never-graded
-# round-4 operators — VERDICT r5 #4, the final rotation). All five
-# keep their oracles + bench entries and stay in the local sweep.
 # --------------------------------------------------------------------
 # ngram_novelty
 # --------------------------------------------------------------------
@@ -1737,20 +1763,17 @@ FROM j
 """
 
 
-# dedup_incremental (round 8, post-swap) joins them never-graded.
-# dedup_incremental graded in the round-8 final rotation.
 QUERIES: list[Query] = [
-    Query(
-        "dedup_incremental",
-        q_dedup_incremental,
-        SQL_DEDUP_INCREMENTAL,
-        ("llm", "dedup", "incremental"),
-    ),
+    Query("dedup_exact", q_dedup_exact, SQL_DEDUP_EXACT, bench=True),
+    Query("dedup_ngram_jaccard", q_dedup_ngram_jaccard, SQL_DEDUP_NGRAM_JACCARD, bench=True),
+    Query("dedup_containment", q_dedup_containment, SQL_DEDUP_CONTAINMENT),
+    Query("dedup_fuzzy", q_dedup_fuzzy, SQL_DEDUP_FUZZY, bench=True),
+    Query("dedup_embedding", q_dedup_embedding, SQL_DEDUP_EMBEDDING),
+    Query("dedup_components", q_dedup_components, SQL_DEDUP_COMPONENTS, bench=True),
+    Query("dedup_components_lsh", q_dedup_components_lsh, None, bench=True),
+    Query("dedup_keep_best", q_dedup_keep_best, SQL_DEDUP_KEEP_BEST),
+    Query("dedup_soft", q_dedup_soft, SQL_DEDUP_SOFT),
+    Query("dedup_semantic", q_dedup_semantic, None, bench=True),
+    Query("dedup_incremental", q_dedup_incremental, SQL_DEDUP_INCREMENTAL),
+    Query("ngram_novelty", q_ngram_novelty, SQL_NGRAM_NOVELTY),
 ]
-
-# dedup_exact / dedup_embedding / dedup_components re-promoted to
-# the graded lane in round 12 (r5 driver rows — the oldest after the
-# r4 cohort; they register via relational18, bench flags intact);
-# dedup_ngram_jaccard / dedup_fuzzy re-promoted in round 13 (r5
-# driver rows; they register via relational19, bench flags intact).
-EXTRA_QUERIES: list[Query] = []

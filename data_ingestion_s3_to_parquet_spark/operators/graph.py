@@ -1240,9 +1240,6 @@ FROM g, m, lg
 """
 
 
-# The whole graph family is multi-green: link_predict /
-# kcore_decompose (graded r7–r9) and graph_sssp (graded r8–r9)
-# demoted in the round-10 sixth-wave rotation for dedup_cluster_stats
 # --------------------------------------------------------------------
 # graph_community_profile
 # --------------------------------------------------------------------
@@ -1466,40 +1463,15 @@ def _sql_graph_community_profile() -> str:
 SQL_GRAPH_COMMUNITY_PROFILE = _sql_graph_community_profile()
 
 
-# / corr_spearman / trend_linfit (relational15); pagerank (green
-# r5+r6) and label_propagation (green r5+r6) were demoted in earlier
-# rounds. All five keep their oracles (full sweep coverage) and
-# kcore / sssp / pagerank keep their bench flags.
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES: list[Query] = [
-    Query(
-        "link_predict",
-        q_link_predict,
-        SQL_LINK_PREDICT,
-        ("llm", "graph", "similarity"),
-    ),
-    Query(
-        "kcore_decompose",
-        q_kcore_decompose,
-        SQL_KCORE_DECOMPOSE,
-        ("llm", "graph", "iterative"),
-        bench=True,  # the new peel loop, timed end-to-end
-    ),
-    Query(
-        "graph_sssp",
-        q_graph_sssp,
-        SQL_GRAPH_SSSP,
-        ("llm", "graph", "iterative"),
-        bench=True,  # the frontier BFS loop, timed end-to-end
-    ),
-    Query(
-        "pagerank",
-        q_pagerank,
-        SQL_PAGERANK,
-        ("llm", "graph", "iterative"),
-        bench=True,  # the iterative int64 kernel, timed end-to-end
-    ),
-    # label_propagation re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
+QUERIES: list[Query] = [
+    Query("pagerank", q_pagerank, SQL_PAGERANK, bench=True),
+    Query("label_propagation", q_label_propagation, SQL_LABEL_PROPAGATION),
+    Query("graph_triangles", q_graph_triangles, SQL_GRAPH_TRIANGLES),
+    Query("link_predict", q_link_predict, SQL_LINK_PREDICT),
+    Query("kcore_decompose", q_kcore_decompose, SQL_KCORE_DECOMPOSE, bench=True),
+    Query("graph_sssp", q_graph_sssp, SQL_GRAPH_SSSP, bench=True),
+    Query("graph_assortativity", q_graph_assortativity, SQL_GRAPH_ASSORTATIVITY),
+    Query("graph_modularity", q_graph_modularity, SQL_GRAPH_MODULARITY),
+    Query("graph_clustering_coeff", q_graph_clustering_coeff, SQL_GRAPH_CLUSTERING_COEFF),
+    Query("graph_community_profile", q_graph_community_profile, SQL_GRAPH_COMMUNITY_PROFILE),
 ]

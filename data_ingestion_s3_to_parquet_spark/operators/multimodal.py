@@ -781,24 +781,6 @@ FROM f
 """
 
 
-QUERIES: list[Query] = []
-
-# Rotated to the EXTRA lane: media_frame_sample in round 4 (green
-# driver row in r3 — VERDICT r3 #1); udf_scalar in round 7 after five
-# consecutive green driver rows (VERDICT r6 #1: its graded slot went
-# to a never-graded round-6 operator); multimodal_cols /
-# array_map_json in the round-7 wave-2 rotation (green rows incl.
-# r6). All keep oracles + bench entries.
-EXTRA_QUERIES = [
-    Query("multimodal_cols", q_multimodal_cols, SQL_MULTIMODAL_COLS, ("llm", "multimodal")),
-    Query("udf_scalar", q_udf_scalar, SQL_UDF_SCALAR, ("relational", "udf"), bench=True),
-    # media_frame_sample re-promoted to the graded lane in round 11
-    # (r3 driver row — the registry's oldest; registers via
-    # relational17); array_map_json re-promoted in round 13 (r6
-    # driver row; registers via relational19)
-]
-
-
 FRAME_SAMPLE_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -1571,3 +1553,12 @@ def media_exif(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(out, columns=cols)
 
     return media.select("media_id", "payload").mapInPandas(_batch, EXIF_SCHEMA)
+
+
+QUERIES: list[Query] = [
+    Query("multimodal_cols", q_multimodal_cols, SQL_MULTIMODAL_COLS),
+    Query("array_map_json", q_array_map_json, SQL_ARRAY_MAP_JSON),
+    Query("udf_scalar", q_udf_scalar, SQL_UDF_SCALAR, bench=True),
+    Query("media_frame_sample", q_media_frame_sample, SQL_MEDIA_FRAME_SAMPLE),
+    Query("media_phash", q_media_phash, None, bench=True),
+]

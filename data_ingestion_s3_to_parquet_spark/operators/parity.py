@@ -125,11 +125,6 @@ WHERE l_orderkey % {_ROW_FILTER_MOD} = 0
 """
 
 
-QUERIES = [
-    Query(
-        "ingest_parity",
-        q_ingest_parity,
-        SQL_INGEST_PARITY,
-        ("parity", "source", "sink"),
-    ),
+QUERIES: list[Query] = [
+    Query("ingest_parity", q_ingest_parity, SQL_INGEST_PARITY),
 ]

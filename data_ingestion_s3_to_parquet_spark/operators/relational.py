@@ -1,4 +1,4 @@
-"""Relational core operators (SURVEY.md §2B, waves 2a–2d).
+"""Relational core operators (SURVEY.md §2B).
 
 Every function is a lazy DataFrame builder ``(spark, sf_dir) -> DataFrame``;
 the paired DuckDB oracle SQL sits next to it. Design rules (SURVEY.md §7
@@ -701,34 +701,22 @@ FROM orders
 """
 
 
-# Rotation history: the first nine moved to the EXTRA lane in round 3
-# (green driver rows in r1+r2 — VERDICT r2 #1); the rest in round 5
-# after FOUR consecutive green driver rows each (VERDICT r4 #1 —
-# their graded slots went to the never-graded round-4 cohort). The
-# round-10 grade-freshness rotation (VERDICT r9 #1) promoted the
-# eleven below BACK into the graded lane — their last driver rows
-# were the registry's oldest (r7 or earlier), and the §2B core is
-# what a Spark/DuckDB version bump would silently break first.
 QUERIES: list[Query] = [
-    Query("scan_parquet", q_scan_parquet, SQL_SCAN_PARQUET, ("relational", "source")),
-    Query("project_filter", q_project_filter, SQL_PROJECT_FILTER, ("relational",)),
-    Query("filter_compound", q_filter_compound, SQL_FILTER_COMPOUND, ("relational",)),
-    Query("scalar_funcs", q_scalar_funcs, SQL_SCALAR_FUNCS, ("relational",)),
-    Query("agg_rollup_cube", q_agg_rollup_cube, SQL_AGG_ROLLUP_CUBE, ("relational", "agg")),
-    Query("agg_distinct", q_agg_distinct, SQL_AGG_DISTINCT, ("relational", "agg")),
-    Query("join_outer", q_join_outer, SQL_JOIN_OUTER, ("relational", "join")),
-    Query("join_semi_anti", q_join_semi_anti, SQL_JOIN_SEMI_ANTI, ("relational", "join")),
-    Query("sort_limit_topk", q_sort_limit_topk, SQL_SORT_LIMIT_TOPK, ("relational",)),
-    Query("set_ops", q_set_ops, SQL_SET_OPS, ("relational",)),
-]
-
-# agg_group / join_inner / join_broadcast / join_range / join_asof
-# re-promoted to the graded lane in round 11 (r4 driver rows — the
-# oldest after the r3 cohort; they register via relational17).
-# window_analytic followed in round 12 (last remaining r4 row here;
-# registers via relational18). window_rank (six green rows — the
-# registry's most-graded operator after ingest_parity) demoted in
-# the round-12 NINTH wave for the new bootstrap_ci_ratio.
-EXTRA_QUERIES: list[Query] = [
-    Query("window_rank", q_window_rank, SQL_WINDOW_RANK, ("relational", "window")),
+    Query("scan_parquet", q_scan_parquet, SQL_SCAN_PARQUET),
+    Query("project_filter", q_project_filter, SQL_PROJECT_FILTER),
+    Query("filter_compound", q_filter_compound, SQL_FILTER_COMPOUND),
+    Query("agg_group", q_agg_group, SQL_AGG_GROUP, bench=True),
+    Query("agg_distinct", q_agg_distinct, SQL_AGG_DISTINCT),
+    Query("agg_rollup_cube", q_agg_rollup_cube, SQL_AGG_ROLLUP_CUBE),
+    Query("join_inner", q_join_inner, SQL_JOIN_INNER, bench=True),
+    Query("join_outer", q_join_outer, SQL_JOIN_OUTER),
+    Query("join_semi_anti", q_join_semi_anti, SQL_JOIN_SEMI_ANTI),
+    Query("join_broadcast", q_join_broadcast, SQL_JOIN_BROADCAST),
+    Query("join_range", q_join_range, SQL_JOIN_RANGE, bench=True),
+    Query("join_asof", q_join_asof, SQL_JOIN_ASOF),
+    Query("sort_limit_topk", q_sort_limit_topk, SQL_SORT_LIMIT_TOPK),
+    Query("set_ops", q_set_ops, SQL_SET_OPS),
+    Query("window_rank", q_window_rank, SQL_WINDOW_RANK),
+    Query("window_analytic", q_window_analytic, SQL_WINDOW_ANALYTIC, bench=True),
+    Query("scalar_funcs", q_scalar_funcs, SQL_SCALAR_FUNCS),
 ]

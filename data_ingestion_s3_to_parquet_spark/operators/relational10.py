@@ -1,4 +1,4 @@
-"""Round-7 third wave: winnowing fingerprints, an inverted index,
+"""Winnowing fingerprints, an inverted index,
 and CUSUM changepoint detection.
 
 - ``doc_winnow``         winnowing fingerprint selection (the MOSS
@@ -819,62 +819,12 @@ FROM summed
 """
 
 
-# Graded lane contribution: the round-8 retrieval wave (rank_bm25 /
-# ewma_smooth / rank_fusion_rrf, green r8). The round-7 third wave
-# (doc_winnow / inverted_index / changepoint_cusum / winnow_overlap,
-# double-green r7+r8) demoted to EXTRA_QUERIES in round 9, traded
-# one-for-one for relational12's post-rotation quartet
-# (ts_interpolate / privacy_erase / feature_vector / skew_report).
-# rank_bm25 (multi-green r8-r11) demoted in the round-12 EIGHTH wave
-# for the new event_interarrival_scale (relational18); it leads this
-# module's EXTRA lane. ewma_smooth (double-green r8+r9) demoted in
-# the round-10 sixth-wave rotation; rank_fusion_rrf (double-green
-# r8+r9) in the round-10 eighth wave; retrieval stays graded through
-# eval_mrr.
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES: list[Query] = [
-    Query(
-        "rank_bm25",
-        q_rank_bm25,
-        SQL_RANK_BM25,
-        ("llm", "text", "retrieval", "ranking"),
-    ),
-    Query(
-        "ewma_smooth",
-        q_ewma_smooth,
-        SQL_EWMA_SMOOTH,
-        ("relational", "timeseries", "window"),
-    ),
-    Query(
-        "rank_fusion_rrf",
-        q_rank_fusion_rrf,
-        _sql_rank_fusion_rrf(),
-        ("llm", "text", "retrieval", "ranking"),
-    ),
-    Query(
-        "doc_winnow",
-        q_doc_winnow,
-        SQL_DOC_WINNOW,
-        ("llm", "text", "window", "fingerprint"),
-        bench=True,  # the explode+window fingerprint lane, still timed
-    ),
-    Query(
-        "inverted_index",
-        q_inverted_index,
-        SQL_INVERTED_INDEX,
-        ("llm", "text", "retrieval"),
-    ),
-    Query(
-        "changepoint_cusum",
-        q_changepoint_cusum,
-        SQL_CHANGEPOINT_CUSUM,
-        ("relational", "timeseries", "window"),
-    ),
-    Query(
-        "winnow_overlap",
-        q_winnow_overlap,
-        SQL_WINNOW_OVERLAP,
-        ("llm", "text", "fingerprint", "dedup"),
-    ),
+QUERIES: list[Query] = [
+    Query("doc_winnow", q_doc_winnow, SQL_DOC_WINNOW, bench=True),
+    Query("inverted_index", q_inverted_index, SQL_INVERTED_INDEX),
+    Query("changepoint_cusum", q_changepoint_cusum, SQL_CHANGEPOINT_CUSUM),
+    Query("winnow_overlap", q_winnow_overlap, SQL_WINNOW_OVERLAP),
+    Query("rank_bm25", q_rank_bm25, SQL_RANK_BM25),
+    Query("rank_fusion_rrf", q_rank_fusion_rrf, _sql_rank_fusion_rrf()),
+    Query("ewma_smooth", q_ewma_smooth, SQL_EWMA_SMOOTH),
 ]

@@ -1,4 +1,4 @@
-"""Round-8 second wave: columnar-format interop, autocorrelation,
+"""Columnar-format interop, autocorrelation,
 CCNet perplexity bucketing, and Z-order layout cells.
 
 - ``orc_interop``   parquet → ORC → read-back → exact aggregate: the
@@ -479,7 +479,7 @@ GROUP BY 1
 
 
 # --------------------------------------------------------------------
-# jsonl_interop (EXTRA lane)
+# jsonl_interop
 # --------------------------------------------------------------------
 
 # Plain exchange types only: ints and a short string. Monetary values
@@ -555,7 +555,7 @@ GROUP BY o_orderstatus
 
 
 # --------------------------------------------------------------------
-# lm_bigram_score (EXTRA lane)
+# lm_bigram_score
 # --------------------------------------------------------------------
 
 LM_BIGRAM_VOCAB = 1024
@@ -668,7 +668,7 @@ FROM agg
 
 
 # --------------------------------------------------------------------
-# eval_auc (EXTRA lane)
+# eval_auc
 # --------------------------------------------------------------------
 
 AUC_POS_LANG = "en"
@@ -776,67 +776,12 @@ SELECT n_pos, n_neg, u2, {_AUC_MICRO_EXPR} AS auc_micro FROM agg
 """
 
 
-# --------------------------------------------------------------------
-# Registration: round-8 second wave, never-graded-first (this module
-# sits ahead of relational10 in the registry order). chunk_text /
-# basket_pairs / period_growth / ab_test_metrics (all green r6+r7)
-# demoted to relational9's EXTRA lane one-for-one. jsonl_interop
-# arrived after the wave's swap with no multi-green veteran left to
-# demote, so it LEADS the EXTRA lane per the documented convention
-# (new entries grade first under a larger budget or the next swap).
-# --------------------------------------------------------------------
-
-# eval_auc (multi-green r8-r11) demoted in the round-12 SEVENTH wave
-# for the new bootstrap_ci_mean (relational18); it leads this
-# module's EXTRA lane.
-QUERIES = []
-
-# Round-10 third wave demoted the double-green r8+r9 orc_interop /
-# acf_lags / ccnet_buckets here, trading their graded slots for the
-# new bpe_fertility / compaction_plan / privacy_ldiv (relational14);
-# all keep their oracles, bench flags, and local-sweep coverage.
-EXTRA_QUERIES: list[Query] = [
-    Query(
-        "eval_auc",
-        q_eval_auc,
-        _sql_eval_auc(),
-        ("llm", "evaluation", "statistics"),
-    ),
-    Query(
-        "lm_bigram_score",
-        q_lm_bigram_score,
-        SQL_LM_BIGRAM_SCORE,
-        ("llm", "text", "quality"),
-    ),
-    Query(
-        "jsonl_interop",
-        q_jsonl_interop,
-        SQL_JSONL_INTEROP,
-        ("relational", "etl", "format", "sink"),
-    ),
-    Query(
-        "ccnet_buckets",
-        q_ccnet_buckets,
-        _sql_ccnet_buckets(),
-        ("llm", "text", "quality", "mixing"),
-    ),
-    Query(
-        "zorder_layout",
-        q_zorder_layout,
-        SQL_ZORDER_LAYOUT,
-        ("relational", "layout", "data-skipping"),
-    ),
-    Query(
-        "orc_interop",
-        q_orc_interop,
-        SQL_ORC_INTEROP,
-        ("relational", "etl", "format", "sink"),
-        bench=True,  # the second real-sink I/O lane next to parquet ETL
-    ),
-    Query(
-        "acf_lags",
-        q_acf_lags,
-        SQL_ACF_LAGS,
-        ("relational", "timeseries", "statistics"),
-    ),
+QUERIES: list[Query] = [
+    Query("orc_interop", q_orc_interop, SQL_ORC_INTEROP, bench=True),
+    Query("acf_lags", q_acf_lags, SQL_ACF_LAGS),
+    Query("ccnet_buckets", q_ccnet_buckets, _sql_ccnet_buckets()),
+    Query("zorder_layout", q_zorder_layout, SQL_ZORDER_LAYOUT),
+    Query("jsonl_interop", q_jsonl_interop, SQL_JSONL_INTEROP),
+    Query("lm_bigram_score", q_lm_bigram_score, SQL_LM_BIGRAM_SCORE),
+    Query("eval_auc", q_eval_auc, _sql_eval_auc()),
 ]

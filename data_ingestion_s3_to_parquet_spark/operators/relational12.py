@@ -1,4 +1,4 @@
-"""Round-8 third wave: evaluation, drift, retrieval diversification,
+"""Evaluation, drift, retrieval diversification,
 record linkage, time-series interpolation, compliance, and feature
 encoding.
 
@@ -23,7 +23,7 @@ threshold-free; these complete the loop a filter deployment needs):
                        operating-point table a pipeline reads to pick
                        the cutoff it deploys.
 
-The rest of the wave:
+The rest of the module:
 
 - ``drift_psi``          two-snapshot population-stability drift
                          (the standard ML-monitoring metric) over a
@@ -1535,94 +1535,16 @@ FROM (
     return " UNION ALL ".join(blocks)
 
 
-# --------------------------------------------------------------------
-# Registration: EXTRA lane, never-graded-first (this module precedes
-# relational11 in the registry order, so these lead the EXTRA lane
-# ahead of jsonl_interop / lm_bigram_score / eval_auc — a larger
-# grading budget or the round-9 swap grades them first).
-# --------------------------------------------------------------------
-
-# Round-8 final rotation: the whole third wave moved into the graded
-# lane (never-graded-first) — twelve single-green round-7 veterans
-# demoted one-for-one (see relational7). Round 9 completes the
-# invariant: the four post-rotation lanes (ts_interpolate /
-# privacy_erase / feature_vector / skew_report — local-oracle-only
-# until now) lead the graded lane, and the double-green r7+r8 quartet
-# doc_winnow / inverted_index / changepoint_cusum / winnow_overlap
-# demotes one-for-one (see relational10). Every oracle-gated operator
-# either has a prior green driver row or is graded now.
-# mmr_rerank (multi-green r8-r11) demoted in the round-12 SIXTH wave
-# for the new text_mattr (relational18); it leads this module's
-# EXTRA lane, bench flag intact.
-QUERIES: list[Query] = []
-
-# Round 9 promoted the post-rotation quartet (ts_interpolate /
-# privacy_erase / feature_vector / skew_report) and graded it green;
-# the round-10 grade-freshness rotation (VERDICT r9 #1) demoted that
-# quartet plus the double-green r8+r9 evaluation trio (eval_ndcg /
-# eval_calibration / eval_pr_curve) here — seven slots traded for the
-# round-3 relational-core veterans and the three new round-10
-# operators (relational14).
-EXTRA_QUERIES: list[Query] = [
-    Query(
-        "mmr_rerank",
-        q_mmr_rerank,
-        _sql_mmr_rerank(),
-        ("llm", "retrieval", "similarity", "iterative"),
-        bench=True,  # scoring + pairwise-overlap build + bounded greedy
-    ),
-    Query(
-        "drift_psi",
-        q_drift_psi,
-        SQL_DRIFT_PSI,
-        ("relational", "quality", "monitoring", "statistics"),
-    ),
-    Query(
-        "join_asof_nearest",
-        q_join_asof_nearest,
-        SQL_JOIN_ASOF_NEAREST,
-        ("relational", "join", "timeseries"),
-    ),
-    Query(
-        "ts_interpolate",
-        q_ts_interpolate,
-        SQL_TS_INTERPOLATE,
-        ("relational", "timeseries", "window"),
-    ),
-    Query(
-        "privacy_erase",
-        q_privacy_erase,
-        SQL_PRIVACY_ERASE,
-        ("relational", "privacy", "compliance", "join"),
-    ),
-    Query(
-        "feature_vector",
-        q_feature_vector,
-        _sql_feature_vector(),
-        ("llm", "ml-prep", "encoding"),
-    ),
-    Query(
-        "skew_report",
-        q_skew_report,
-        _sql_skew_report(),
-        ("relational", "profiling", "skew", "monitoring"),
-    ),
-    Query(
-        "eval_ndcg",
-        q_eval_ndcg,
-        _sql_eval_ndcg(),
-        ("llm", "evaluation", "retrieval", "statistics"),
-    ),
-    Query(
-        "eval_calibration",
-        q_eval_calibration,
-        _sql_eval_calibration(),
-        ("llm", "evaluation", "statistics"),
-    ),
-    Query(
-        "eval_pr_curve",
-        q_eval_pr_curve,
-        _sql_eval_pr_curve(),
-        ("llm", "evaluation", "statistics"),
-    ),
+QUERIES: list[Query] = [
+    Query("eval_ndcg", q_eval_ndcg, _sql_eval_ndcg()),
+    Query("eval_calibration", q_eval_calibration, _sql_eval_calibration()),
+    Query("eval_brier", q_eval_brier, SQL_EVAL_BRIER),
+    Query("eval_pr_curve", q_eval_pr_curve, _sql_eval_pr_curve()),
+    Query("drift_psi", q_drift_psi, SQL_DRIFT_PSI),
+    Query("mmr_rerank", q_mmr_rerank, _sql_mmr_rerank(), bench=True),
+    Query("join_asof_nearest", q_join_asof_nearest, SQL_JOIN_ASOF_NEAREST),
+    Query("ts_interpolate", q_ts_interpolate, SQL_TS_INTERPOLATE),
+    Query("privacy_erase", q_privacy_erase, SQL_PRIVACY_ERASE),
+    Query("feature_vector", q_feature_vector, _sql_feature_vector()),
+    Query("skew_report", q_skew_report, _sql_skew_report()),
 ]

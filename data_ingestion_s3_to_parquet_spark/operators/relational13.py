@@ -1,4 +1,4 @@
-"""Round-9 additions: monitoring, skew control, compliance, and
+"""Monitoring, skew control, compliance, and
 distributed selection.
 
 - ``drift_ks``          two-sample Kolmogorov–Smirnov statistic
@@ -1016,68 +1016,13 @@ FROM (
     return " UNION ALL ".join(blocks)
 
 
-# --------------------------------------------------------------------
-# Registration. Round 9 graded all eight operators green (driver rows
-# in CORRECTNESS_r09); the round-10 grade-freshness rotation (VERDICT
-# r9 #1) moved them to the EXTRA lane one-for-one for the round-3
-# relational-core veterans (scan_parquet, project_filter,
-# filter_compound, agg_rollup_cube, join_outer, join_semi_anti,
-# sort_limit_topk, set_ops, scalar_funcs, window_rank, agg_distinct,
-# regexp_funcs) whose driver rows were the registry's oldest — the
-# §2B backbone re-verified against current Spark/DuckDB.
-# --------------------------------------------------------------------
-
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES: list[Query] = [
-    Query(
-        "drift_ks",
-        q_drift_ks,
-        SQL_DRIFT_KS,
-        ("relational", "quality", "monitoring", "statistics"),
-        bench=True,  # the two-phase distributed ECDF, timed
-    ),
-    Query(
-        "skew_autosalt",
-        q_skew_autosalt,
-        SQL_SKEW_AUTOSALT,
-        ("relational", "skew", "agg", "pipeline"),
-    ),
-    Query(
-        "privacy_kanon",
-        q_privacy_kanon,
-        SQL_PRIVACY_KANON,
-        ("relational", "privacy", "compliance", "agg"),
-    ),
-    Query(
-        "quantile_select",
-        q_quantile_select,
-        _sql_quantile_select(),
-        ("relational", "statistics", "approx", "topk"),
-        bench=True,  # distributed selection + sketch lane, timed
-    ),
-    Query(
-        "rolling_median",
-        q_rolling_median,
-        SQL_ROLLING_MEDIAN,
-        ("relational", "timeseries", "window"),
-    ),
-    Query(
-        "forecast_snaive",
-        q_forecast_snaive,
-        SQL_FORECAST_SNAIVE,
-        ("relational", "timeseries", "monitoring", "statistics"),
-    ),
-    Query(
-        "ref_integrity_audit",
-        q_ref_integrity_audit,
-        _sql_ref_integrity_audit(),
-        ("relational", "quality", "join", "monitoring"),
-    ),
-    Query(
-        "reconcile_sources",
-        q_reconcile_sources,
-        SQL_RECONCILE_SOURCES,
-        ("relational", "quality", "join", "monitoring"),
-    ),
+QUERIES: list[Query] = [
+    Query("drift_ks", q_drift_ks, SQL_DRIFT_KS, bench=True),
+    Query("skew_autosalt", q_skew_autosalt, SQL_SKEW_AUTOSALT),
+    Query("privacy_kanon", q_privacy_kanon, SQL_PRIVACY_KANON),
+    Query("quantile_select", q_quantile_select, _sql_quantile_select(), bench=True),
+    Query("reconcile_sources", q_reconcile_sources, SQL_RECONCILE_SOURCES),
+    Query("rolling_median", q_rolling_median, SQL_ROLLING_MEDIAN),
+    Query("forecast_snaive", q_forecast_snaive, SQL_FORECAST_SNAIVE),
+    Query("ref_integrity_audit", q_ref_integrity_audit, _sql_ref_integrity_audit()),
 ]

@@ -1,4 +1,4 @@
-"""Round-10 additions: retrieval ranking metrics, windowed robust
+"""Retrieval ranking metrics, windowed robust
 statistics, and schema-drift auditing.
 
 - ``eval_mrr``            MRR + recall@k of per-term BM25 rankings
@@ -1772,89 +1772,18 @@ FROM agg
 """
 
 
-# --------------------------------------------------------------------
-# Registration: graded lane, never-graded-first (this module precedes
-# relational13 in the registry order, so the round-10 operators grade
-# immediately at the head). Demotions for the round-10 rotation are
-# recorded at the demoting modules (relational11/12/13).
-# --------------------------------------------------------------------
-
-# eval_mrr STAYS graded through the round-11 rotation: round 11
-# extends its output contract with the recall@{1,5,20} ladder
-# (VERDICT r10 #4), so its r10 row no longer describes the shipped
-# schema and a fresh row is required. The other nine round-10
-# first-timers below demote to the EXTRA lane one-for-one for the
-# relational17 promotions.
 QUERIES: list[Query] = [
-    Query(
-        "eval_mrr",
-        q_eval_mrr,
-        _sql_eval_mrr(),
-        ("llm", "text", "evaluation", "ranking"),
-    ),
+    Query("eval_mrr", q_eval_mrr, _sql_eval_mrr()),
+    Query("eval_mrr_scale", q_eval_mrr_scale, _sql_eval_mrr()),
+    Query("rolling_quantile", q_rolling_quantile, _sql_rolling_quantile()),
+    Query("schema_drift_report", q_schema_drift_report, _sql_schema_drift_report()),
+    Query("dedup_threshold_sweep", q_dedup_threshold_sweep, _sql_dedup_threshold_sweep()),
+    Query("alert_rate_spike", q_alert_rate_spike, SQL_ALERT_RATE_SPIKE),
+    Query("event_burstiness", q_event_burstiness, SQL_EVENT_BURSTINESS),
+    Query("event_interarrival", q_event_interarrival, SQL_EVENT_INTERARRIVAL),
+    Query("event_interarrival_scale", q_event_interarrival_scale, SQL_EVENT_INTERARRIVAL),
+    Query("bpe_fertility", q_bpe_fertility, _sql_bpe_fertility()),
+    Query("compaction_plan", q_compaction_plan, SQL_COMPACTION_PLAN),
+    Query("privacy_ldiv", q_privacy_ldiv, _sql_privacy_ldiv()),
+    Query("eval_regression", q_eval_regression, _sql_eval_regression()),
 ]
-
-EXTRA_QUERIES: list[Query] = [
-    Query(
-        "rolling_quantile",
-        q_rolling_quantile,
-        _sql_rolling_quantile(),
-        ("relational", "timeseries", "window", "statistics"),
-    ),
-    Query(
-        "schema_drift_report",
-        q_schema_drift_report,
-        _sql_schema_drift_report(),
-        ("relational", "quality", "source", "monitoring"),
-    ),
-    Query(
-        "dedup_threshold_sweep",
-        q_dedup_threshold_sweep,
-        _sql_dedup_threshold_sweep(),
-        ("llm", "dedup", "text", "monitoring"),
-    ),
-    Query(
-        "alert_rate_spike",
-        q_alert_rate_spike,
-        SQL_ALERT_RATE_SPIKE,
-        ("relational", "timeseries", "monitoring", "window"),
-    ),
-    Query(
-        "bpe_fertility",
-        q_bpe_fertility,
-        _sql_bpe_fertility(),
-        ("llm", "text", "tokenizer", "evaluation"),
-    ),
-    Query(
-        "compaction_plan",
-        q_compaction_plan,
-        SQL_COMPACTION_PLAN,
-        ("relational", "layout", "pipeline", "monitoring"),
-    ),
-    Query(
-        "privacy_ldiv",
-        q_privacy_ldiv,
-        _sql_privacy_ldiv(),
-        ("relational", "privacy", "compliance", "agg"),
-    ),
-    Query(
-        "eval_regression",
-        q_eval_regression,
-        _sql_eval_regression(),
-        ("llm", "evaluation", "statistics", "timeseries"),
-    ),
-]
-
-EXTRA_QUERIES.append(
-    # eval_mrr_scale shares eval_mrr's oracle (identical output
-    # contract — including the round-11 recall ladder; the pinned
-    # pytest test_eval_mrr_scale_matches_window_formulation holds the
-    # two formulations row-identical). Graded green in r10; demoted
-    # with the other round-10 first-timers.
-    Query(
-        "eval_mrr_scale",
-        q_eval_mrr_scale,
-        _sql_eval_mrr(),
-        ("llm", "text", "evaluation", "ranking", "approx-free"),
-    )
-)

@@ -1,4 +1,4 @@
-"""Round-10 sixth wave: dedup observability and exact rank/trend
+"""Dedup observability and exact rank/trend
 statistics.
 
 - ``dedup_cluster_stats``  duplicate-cluster size histogram over the
@@ -1445,9 +1445,6 @@ FROM {prev}
 SQL_SURVIVAL_LOGRANK = _sql_survival_logrank()
 
 
-# All five graded green in round 10 (single-green first-timers);
-# demoted one-for-one in the round-11 grade-freshness rotation for
-# the r3/r4-cohort promotions registered in relational17.
 # --------------------------------------------------------------------
 # metric_winsorized
 # --------------------------------------------------------------------
@@ -1849,37 +1846,15 @@ FROM ci JOIN p2 ON ci.status = p2.status
 SQL_BOOTSTRAP_CI_WINSORIZED = _sql_bootstrap_ci_winsorized()
 
 
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES: list[Query] = [
-    Query(
-        "dedup_cluster_stats",
-        q_dedup_cluster_stats,
-        _sql_dedup_cluster_stats(),
-        ("llm", "dedup", "monitoring", "iterative"),
-    ),
-    Query(
-        "corr_spearman",
-        q_corr_spearman,
-        SQL_CORR_SPEARMAN,
-        ("relational", "statistics", "window"),
-    ),
-    Query(
-        "trend_linfit",
-        q_trend_linfit,
-        SQL_TREND_LINFIT,
-        ("relational", "statistics", "timeseries", "monitoring"),
-    ),
-    Query(
-        "anova_oneway",
-        q_anova_oneway,
-        SQL_ANOVA_ONEWAY,
-        ("relational", "statistics", "analytics"),
-    ),
-    Query(
-        "rank_mannwhitney",
-        q_rank_mannwhitney,
-        SQL_RANK_MANNWHITNEY,
-        ("relational", "statistics", "evaluation"),
-    ),
+QUERIES: list[Query] = [
+    Query("dedup_cluster_stats", q_dedup_cluster_stats, _sql_dedup_cluster_stats()),
+    Query("corr_spearman", q_corr_spearman, SQL_CORR_SPEARMAN),
+    Query("trend_linfit", q_trend_linfit, SQL_TREND_LINFIT),
+    Query("anova_oneway", q_anova_oneway, SQL_ANOVA_ONEWAY),
+    Query("rank_mannwhitney", q_rank_mannwhitney, SQL_RANK_MANNWHITNEY),
+    Query("rank_test_u", q_rank_test_u, SQL_RANK_TEST_U),
+    Query("survival_km", q_survival_km, SQL_SURVIVAL_KM),
+    Query("survival_logrank", q_survival_logrank, SQL_SURVIVAL_LOGRANK),
+    Query("metric_winsorized", q_metric_winsorized, SQL_METRIC_WINSORIZED),
+    Query("bootstrap_ci_winsorized", q_bootstrap_ci_winsorized, SQL_BOOTSTRAP_CI_WINSORIZED),
 ]

@@ -1,4 +1,4 @@
-"""Round-10 seventh wave: weighted selection and corpus-concentration
+"""Weighted selection and corpus-concentration
 metrics — the two curation dashboards a data-mixing pipeline reads
 before setting thresholds.
 
@@ -1278,41 +1278,6 @@ FROM cls GROUP BY 1
 """
 
 
-# dedup_containment is defined in operators/dedup.py (next to the
-# jaccard machinery it reuses) and registers HERE so it grades with
-# the other round-10 seventh-wave lanes.
-def _assortativity_query() -> Query:
-    # defined in operators/graph.py (next to the edge artifact it
-    # reuses); registers here so it grades with the round-10 waves
-    from .graph import SQL_GRAPH_ASSORTATIVITY, q_graph_assortativity
-
-    return Query(
-        "graph_assortativity",
-        q_graph_assortativity,
-        SQL_GRAPH_ASSORTATIVITY,
-        ("llm", "graph", "statistics", "quality"),
-    )
-
-
-def _containment_query() -> Query:
-    from .dedup import SQL_DEDUP_CONTAINMENT, q_dedup_containment
-
-    return Query(
-        "dedup_containment",
-        q_dedup_containment,
-        SQL_DEDUP_CONTAINMENT,
-        ("llm", "dedup", "text"),
-    )
-
-
-# eval_cohen_kappa / privacy_tcloseness (single-green r10) demoted in
-# the round-11 SECOND wave, one-for-one for the new
-# graph_clustering_coeff / zipf_fit registered in relational17; the
-# remaining five stay graded for a second green row.
-# dedup_containment (green r10 + r11) demoted in the round-12
-# FOURTH wave for the new word_adaptation, and gini_concentration
-# (green r10 + r11) in the FIFTH wave for the new eval_qwk (both
-# register via relational18); they lead this module's EXTRA lane.
 # --------------------------------------------------------------------
 # eval_win_rate
 # --------------------------------------------------------------------
@@ -1808,44 +1773,16 @@ def _sql_eval_pass_at_k() -> str:
 SQL_EVAL_PASS_AT_K = _sql_eval_pass_at_k()
 
 
-QUERIES: list[Query] = []
-
-# quantile_weighted (single-green r10) demoted in the round-11 THIRD
-# wave for the new heaps_fit; graph_assortativity (single-green r10)
-# in the FOURTH wave for the new eval_kripp_alpha; eval_fleiss_kappa
-# (single-green r10) in the FIFTH wave for the new event_burstiness
-# (all register via relational17).
-EXTRA_QUERIES: list[Query] = [
-    _containment_query(),
-    Query(
-        "gini_concentration",
-        q_gini_concentration,
-        SQL_GINI_CONCENTRATION,
-        ("llm", "statistics", "quality", "monitoring"),
-    ),
-    _assortativity_query(),
-    Query(
-        "eval_fleiss_kappa",
-        q_eval_fleiss_kappa,
-        SQL_EVAL_FLEISS_KAPPA,
-        ("llm", "evaluation", "statistics", "quality"),
-    ),
-    Query(
-        "quantile_weighted",
-        q_quantile_weighted,
-        SQL_QUANTILE_WEIGHTED,
-        ("relational", "statistics", "sampling", "pipeline"),
-    ),
-    Query(
-        "eval_cohen_kappa",
-        q_eval_cohen_kappa,
-        SQL_EVAL_COHEN_KAPPA,
-        ("llm", "evaluation", "statistics", "quality"),
-    ),
-    Query(
-        "privacy_tcloseness",
-        q_privacy_tcloseness,
-        _sql_privacy_tcloseness(),
-        ("relational", "privacy", "compliance", "agg"),
-    ),
+QUERIES: list[Query] = [
+    Query("quantile_weighted", q_quantile_weighted, SQL_QUANTILE_WEIGHTED),
+    Query("gini_concentration", q_gini_concentration, SQL_GINI_CONCENTRATION),
+    Query("eval_cohen_kappa", q_eval_cohen_kappa, SQL_EVAL_COHEN_KAPPA),
+    Query("eval_fleiss_kappa", q_eval_fleiss_kappa, SQL_EVAL_FLEISS_KAPPA),
+    Query("eval_kripp_alpha", q_eval_kripp_alpha, SQL_EVAL_KRIPP_ALPHA),
+    Query("eval_kripp_alpha_ordinal", q_eval_kripp_alpha_ordinal, SQL_EVAL_KRIPP_ALPHA_ORDINAL),
+    Query("eval_qwk", q_eval_qwk, SQL_EVAL_QWK),
+    Query("privacy_tcloseness", q_privacy_tcloseness, _sql_privacy_tcloseness()),
+    Query("eval_win_rate", q_eval_win_rate, SQL_EVAL_WIN_RATE),
+    Query("eval_bradley_terry", q_eval_bradley_terry, SQL_EVAL_BRADLEY_TERRY),
+    Query("eval_pass_at_k", q_eval_pass_at_k, SQL_EVAL_PASS_AT_K),
 ]

@@ -224,15 +224,11 @@ GROUP BY r_name, n_name
 """
 
 
-QUERIES: list[Query] = []
-
-# Rotation history: agg_approx_quantile moved to the EXTRA lane in
-# round 4 (green driver row in r3); the rest in round 5 after four
-# consecutive green driver rows each (VERDICT r4 #1).
-EXTRA_QUERIES: list[Query] = [
-    # agg_approx_quantile re-promoted to the graded lane in round 11
-    # (r3 driver row — the registry's oldest; registers via
-    # relational17); subquery_scalar / agg_percentile / pivot /
-    # join_skew_salted / sql_frontend followed in round 12 (r4 rows;
-    # they register via relational18)
+QUERIES: list[Query] = [
+    Query("subquery_scalar", q_subquery_scalar, SQL_SUBQUERY_SCALAR),
+    Query("agg_percentile", q_agg_percentile, SQL_AGG_PERCENTILE),
+    Query("agg_approx_quantile", q_agg_approx_quantile, SQL_AGG_APPROX_QUANTILE),
+    Query("pivot", q_pivot, SQL_PIVOT),
+    Query("join_skew_salted", q_join_skew_salted, SQL_JOIN_SKEW_SALTED),
+    Query("sql_frontend", q_sql_frontend, SQL_SQL_FRONTEND, bench=True),
 ]

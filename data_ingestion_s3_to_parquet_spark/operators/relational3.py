@@ -1,11 +1,10 @@
-"""Coverage completion wave: arg-extreme + bitwise aggregates, datetime
+"""Coverage completion: arg-extreme + bitwise aggregates, datetime
 surface, and the Arrow-batched UDF family (GROUPED_AGG UDAF,
 mapInPandas UDTF-shape).
 
-(Round 2: range frames, string collect, conditional aggregates, null
-handling and union-by-name were folded into the relational.py entries —
-window_analytic, join_broadcast, agg_group, scalar_funcs, set_ops —
-to fit the graded registry's ~50-entry budget without losing coverage.)
+Range frames, string collect, conditional aggregates, null handling and
+union-by-name are covered by the relational.py entries (window_analytic,
+join_broadcast, agg_group, scalar_funcs, set_ops).
 """
 
 from __future__ import annotations
@@ -17,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
-from pyspark.sql.window import Window
 
 from ..plans.spec import Query
 from ..session import tune
@@ -151,17 +149,9 @@ FROM events
 """
 
 
-QUERIES: list[Query] = []
-
-# Rotation history: datetime_funcs moved to the EXTRA lane in round 4
-# (green driver row in r3); agg_argminmax + udaf_grouped in round 5
-# after four consecutive green driver rows each (VERDICT r4 #1);
-# map_in_pandas_tokens in round 6 after five straight green rows
-# (VERDICT r5 #4 — the final rotation). datetime_funcs re-promoted to
-# the graded lane in round 11 (oldest driver row in the registry, r3
-# — it registers via relational17).
-# agg_argminmax / udaf_grouped re-promoted to the graded lane in
-# round 12 (r4 driver rows; they register via relational18);
-# map_in_pandas_tokens re-promoted in round 13 (r5 driver row; it
-# registers via relational19).
-EXTRA_QUERIES: list[Query] = []
+QUERIES: list[Query] = [
+    Query("agg_argminmax", q_agg_argminmax, SQL_AGG_ARGMINMAX),
+    Query("udaf_grouped", q_udaf_grouped, SQL_UDAF_GROUPED),
+    Query("map_in_pandas_tokens", q_map_in_pandas_tokens, SQL_MAP_IN_PANDAS_TOKENS),
+    Query("datetime_funcs", q_datetime_funcs, SQL_DATETIME_FUNCS),
+]

@@ -1,14 +1,12 @@
-"""Relational wave 4: higher-order array functions.
+"""Relational: higher-order array functions.
 
 Reference scope note: the reference (/root/reference/src/main.rs, 208
 lines) has no joins, aggregations, or windows — its whole operator
 surface is SURVEY.md §2A. These are §2B [EXT] operators mandated by the
 driver contract (BASELINE.json:6).
 
-(Round 2: the TPC-H Q16/Q18 shapes and topk_per_group were retired to
-fit the graded registry's ~50-entry budget — their patterns remain
-covered by sql_frontend's Q5 text, subquery_scalar's NOT IN anti-join,
-agg_distinct's count-distinct, and window_rank's group-limit filter.)
+The TPC-H Q16/Q18 shapes and topk_per_group are covered by sql_frontend's Q5 text, subquery_scalar's NOT IN anti-join,
+agg_distinct's count-distinct, and window_rank's group-limit filter.
 """
 
 from __future__ import annotations
@@ -66,11 +64,6 @@ FROM embeddings
 """
 
 
-# Demoted to the EXTRA lane in the round-7 wave-2 rotation (green
-# rows incl. r6) in exchange for a never-graded round-7 promotee.
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES = [
-    # higher_order_funcs re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
+QUERIES: list[Query] = [
+    Query("higher_order_funcs", q_higher_order_funcs, SQL_HIGHER_ORDER_FUNCS),
 ]

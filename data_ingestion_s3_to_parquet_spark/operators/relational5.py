@@ -1,12 +1,11 @@
-"""Relational wave 5: null-safe joins and the regexp function surface.
+"""Relational: null-safe joins and the regexp function surface.
 
 Reference scope note: absent from the reference (SURVEY.md §2A is its
 whole surface); §2B [EXT] operators per the driver contract.
 
-(Round 2: agg_bitwise folded into agg_argminmax, unpivot into pivot's
-roundtrip, and event_dedup_first retired — its keep-first window
-pattern is covered by join_asof/window_rank and the true streaming
-dropDuplicates tests — to fit the graded registry's ~50-entry budget.)
+Bitwise aggregates live in agg_argminmax, unpivot in pivot's
+roundtrip, and the keep-first window pattern in join_asof/window_rank
+and the streaming dropDuplicates tests.
 """
 
 from __future__ import annotations
@@ -85,18 +84,6 @@ FROM typed t JOIN counts c ON t.et IS NOT DISTINCT FROM c.et
 """
 
 
-# regexp_funcs re-promoted in the round-10 grade-freshness rotation
-# (VERDICT r9 #1): its last driver row was round 3's.
-QUERIES: list[Query] = [
-    Query(
-        "regexp_funcs",
-        q_regexp_funcs,
-        SQL_REGEXP_FUNCS,
-        ("relational", "text"),
-    ),
-]
-
-
 def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension (type 2) history build from an event
     log: per user, order value observations by event time, collapse
@@ -154,12 +141,8 @@ WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-# Rotation history: regexp_funcs moved out in round 3 (two green
-# driver rows — VERDICT r2 #1); join_null_safe in round 5 after four
-# consecutive green driver rows (VERDICT r4 #1); scd2_history in the
-# round-7 wave-2 rotation (green rows incl. r6).
-# join_null_safe re-promoted to the graded lane in round 12 (r4
-# driver row; registers via relational18).
-EXTRA_QUERIES = [
-    Query("scd2_history", q_scd2_history, SQL_SCD2_HISTORY, ("relational", "window")),
+QUERIES: list[Query] = [
+    Query("regexp_funcs", q_regexp_funcs, SQL_REGEXP_FUNCS),
+    Query("join_null_safe", q_join_null_safe, SQL_JOIN_NULL_SAFE),
+    Query("scd2_history", q_scd2_history, SQL_SCD2_HISTORY),
 ]

@@ -1,5 +1,5 @@
-"""Round-3 additions: seven patterns a 100 TB pipeline leans on that
-the registry did not yet demonstrate as first-class operators.
+"""Seven patterns a 100 TB pipeline leans on, as first-class
+operators.
 
 - ``join_bloom_prefilter`` — scan-side semi-join pruning with a
   hand-rolled distributed Bloom filter (Spark's internal
@@ -477,31 +477,12 @@ GROUP BY event_type
 """
 
 
-# Promoted into the graded 50 in round 4 (VERDICT r3 #1), green in
-# rounds 4-6; demoted to the EXTRA lane in the round-7 wave-2
-# rotation in exchange for never-graded round-7 promotees.
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES = [
-    # join_bloom_prefilter re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    # cdc_apply re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    Query(
-        "sample_weighted",
-        q_sample_weighted,
-        SQL_SAMPLE_WEIGHTED,
-        ("llm", "sampling"),
-    ),
-    Query("udtf_lateral", q_udtf_lateral, SQL_UDTF_LATERAL, ("relational", "udf")),
-    # agg_hll_sketch re-promoted to the graded lane in round 13 (r6
-    # driver row; it registers via relational19)
-    Query(
-        "resample_ffill",
-        q_resample_ffill,
-        SQL_RESAMPLE_FFILL,
-        ("relational", "window", "streaming"),
-    ),
-    # json_variant re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
+QUERIES: list[Query] = [
+    Query("join_bloom_prefilter", q_join_bloom_prefilter, SQL_JOIN_BLOOM_PREFILTER),
+    Query("cdc_apply", q_cdc_apply, SQL_CDC_APPLY),
+    Query("sample_weighted", q_sample_weighted, SQL_SAMPLE_WEIGHTED),
+    Query("udtf_lateral", q_udtf_lateral, SQL_UDTF_LATERAL),
+    Query("agg_hll_sketch", q_agg_hll_sketch, SQL_AGG_HLL_SKETCH),
+    Query("resample_ffill", q_resample_ffill, SQL_RESAMPLE_FFILL),
+    Query("json_variant", q_json_variant, SQL_JSON_VARIANT),
 ]

@@ -1,6 +1,5 @@
-"""Round-4 additions: three more patterns a training-data pipeline
-leans on, exposed as oracle-gated EXTRA-lane operators (they lead the
-lane so a larger harness budget grades the never-graded entries first).
+"""Three more patterns a training-data pipeline leans on, each
+oracle-gated.
 
 - ``window_distribution`` — the distribution window family
   (``ntile`` / ``percent_rank`` / ``cume_dist``): quota assignment and
@@ -283,402 +282,8 @@ FROM n
 """
 
 
-QUERIES: list[Query] = []
-
-
-# The three round-6 operators (defined in trainprep/similarity/dedup)
-# register HERE — the first QUERIES-contributing module after parity —
-# so they lead the graded lane for round 7 (VERDICT r6 #1: they were
-# the only oracle-gated entries without a driver row; their promotion
-# restores the every-operator-graded invariant permanently).
-def _promoted_r7() -> list[Query]:
-    # dedup_keep_best and emb_gram used to register here; since their
-    # round-10 demotions (see _demoted_r10_w7 / _demoted_r10_w9) this
-    # helper imports only what it still returns.
-    from .trainprep import SQL_DEDUP_PASSAGES, q_dedup_passages
-
-    return [
-        Query(
-            "dedup_passages",
-            q_dedup_passages,
-            SQL_DEDUP_PASSAGES,
-            ("llm", "dedup", "text"),
-            bench=True,  # the substring-dedup representative
-        ),
-        # emb_gram (double-green r8+r9) demoted in the round-10
-        # seventh-wave rotation for relational16's gini_concentration
-        # — see _demoted_r10_w7 (bench flag kept); dedup_keep_best
-        # (double-green r8+r9) demoted in the ninth-wave rotation for
-        # graph_assortativity — see _demoted_r10_w9
-    ]
-
-
-# The 28 NEW round-7 operators (defined across graph / trainprep /
-# similarity / textstats / dedup / relational9 / streaming.windows)
-# register HERE, right after the round-6 trio, so they grade THIS
-# round: the second intra-round-7 rotation promotes every
-# never-driver-graded entry into the graded 50 (the same discipline
-# VERDICT r6 #1 applied to the round-6 trio), demoting 28 multi-green
-# veterans to the EXTRA lane in exchange. Once round 7 grades, every
-# oracle-gated operator in the repo has a driver CORRECTNESS row.
-def _promoted_r7_wave2() -> list[Query]:
-    # After the round-10 demotions (session_paths, sim_join_kmeans,
-    # entropy_score, word_filter — see the _demoted_r10_* helpers)
-    # this wave registers four queries; the demoted lanes import
-    # their own symbols, so only the four survivors' are needed here.
-    from .relational9 import SQL_CHI2_CONTINGENCY, q_chi2_contingency
-    from .similarity import SQL_ANN_TWO_STAGE, q_ann_two_stage
-    from .textstats import SQL_CONTENT_CHUNKS, q_content_chunks
-    from ..streaming.windows import (
-        SQL_STREAM_JOIN_INTERVAL,
-        q_stream_join_interval,
-    )
-
-    return [
-        Query(
-            "stream_join_interval",
-            q_stream_join_interval,
-            SQL_STREAM_JOIN_INTERVAL,
-            ("streaming", "join"),
-        ),
-        # sim_join_kmeans (double-green r8+r9) demoted in the
-        # round-10 eighth-wave rotation for relational16's
-        # privacy_tcloseness — see _demoted_r10_w8
-        # session_paths (double-green r8+r9) demoted in the round-10
-        # sixth-wave rotation for anova_oneway — see _demoted_r10_w6
-        Query(
-            "chi2_contingency",
-            q_chi2_contingency,
-            SQL_CHI2_CONTINGENCY,
-            ("relational", "analytics", "statistics"),
-        ),
-        Query(
-            "ann_two_stage",
-            q_ann_two_stage,
-            SQL_ANN_TWO_STAGE,
-            ("llm", "similarity", "approx", "topk", "pipeline"),
-        ),
-        # entropy_score (double-green r8+r9) demoted in the round-10
-        # ninth-wave rotation for the eval_mrr_scale promotion — see
-        # _demoted_r10_w9
-        Query(
-            "content_chunks",
-            q_content_chunks,
-            SQL_CONTENT_CHUNKS,
-            ("llm", "text", "dedup", "rag"),
-            bench=True,  # the token-window + fingerprint-window representative
-        ),
-        # word_filter (double-green r8+r9) demoted in the round-10
-        # ninth-wave rotation for relational16's eval_fleiss_kappa —
-        # see _demoted_r10_w9
-    ]
-
-
-# Graded lane contribution: the round-6 trio and the 28 round-7
-# promotees. The round-5 veterans that used to sit here
-# (window_distribution, interleave_mix, text_normalize — green r5+r6)
-# all demoted in round 7: the first two post-wave-2 in exchange for
-# the new dsir_weights / token_budget_select (registered in
-# trainprep), interleave_mix in wave 2.
-QUERIES = _promoted_r7() + _promoted_r7_wave2()
-
-# New never-graded operators register HERE — the first
-# EXTRA-contributing module in registry order — so they lead the lane
-# and a larger harness budget (or the next swap) grades them first.
-# As of the round-7 wave-2 rotation the lane holds only entries with
-# prior green driver rows; the three round-5 veterans above lead it.
-def _demoted_r8() -> list[Query]:
-    """The round-8 final-rotation demotees (each green in r7): their
-    graded slots went to the twelve never-graded round-8 lanes
-    (relational12's evaluation family, mmr_rerank, join_asof_nearest,
-    graph_sssp, stream_dedup, jsonl_interop, dedup_incremental,
-    lm_bigram_score, eval_auc). They lead the EXTRA lane with their
-    oracles and bench flags intact."""
-    from .dedup import SQL_DEDUP_SOFT, q_dedup_soft
-    from .relational9 import (
-        SQL_MARKOV_TRANSITIONS,
-        SQL_MERGE_INTERVALS,
-        SQL_ROBUST_STATS,
-        q_markov_transitions,
-        q_merge_intervals,
-        q_robust_stats,
-    )
-    from .textstats import (
-        SQL_CMS_COUNTS,
-        SQL_FREQ_ITEMS_TOPK,
-        SQL_NGRAM_COUNTS,
-        SQL_STRIP_MARKUP,
-        SQL_URL_CANONICALIZE,
-        q_cms_counts,
-        q_freq_items_topk,
-        q_ngram_counts,
-        q_strip_markup,
-        q_url_canonicalize,
-    )
-    from .trainprep import (
-        SQL_BATCH_BY_LENGTH,
-        SQL_MIX_WEIGHTS,
-        SQL_SHARD_MANIFEST,
-        q_batch_by_length,
-        q_mix_weights,
-        q_shard_manifest,
-    )
-
-    return [
-        Query(
-            "freq_items_topk",
-            q_freq_items_topk,
-            SQL_FREQ_ITEMS_TOPK,
-            ("llm", "text", "agg", "approx"),
-        ),
-        Query(
-            "dedup_soft",
-            q_dedup_soft,
-            SQL_DEDUP_SOFT,
-            ("llm", "dedup", "agg"),
-        ),
-        Query(
-            "mix_weights",
-            q_mix_weights,
-            SQL_MIX_WEIGHTS,
-            ("llm", "sampling", "agg"),
-        ),
-        Query(
-            "strip_markup",
-            q_strip_markup,
-            SQL_STRIP_MARKUP,
-            ("llm", "text"),
-        ),
-        Query(
-            "ngram_counts",
-            q_ngram_counts,
-            SQL_NGRAM_COUNTS,
-            ("llm", "text", "agg"),
-            bench=True,  # corpus-frequency representative (scan + one shuffle + top-k)
-        ),
-        Query(
-            "merge_intervals",
-            q_merge_intervals,
-            SQL_MERGE_INTERVALS,
-            ("relational", "window", "timeseries"),
-        ),
-        Query(
-            "markov_transitions",
-            q_markov_transitions,
-            SQL_MARKOV_TRANSITIONS,
-            ("relational", "analytics", "window"),
-            bench=True,  # the bounded-key sequence-statistic representative
-        ),
-        Query(
-            "robust_stats",
-            q_robust_stats,
-            SQL_ROBUST_STATS,
-            ("relational", "profiling", "window"),
-        ),
-        Query(
-            "shard_manifest",
-            q_shard_manifest,
-            SQL_SHARD_MANIFEST,
-            ("llm", "pipeline", "agg"),
-        ),
-        Query(
-            "batch_by_length",
-            q_batch_by_length,
-            SQL_BATCH_BY_LENGTH,
-            ("llm", "pipeline", "window"),
-        ),
-        Query(
-            "url_canonicalize",
-            q_url_canonicalize,
-            SQL_URL_CANONICALIZE,
-            ("llm", "text", "dedup"),
-        ),
-        Query(
-            "cms_counts",
-            q_cms_counts,
-            SQL_CMS_COUNTS,
-            ("llm", "text", "agg", "approx"),
-        ),
-    ]
-
-
-def _demoted_r9() -> list[Query]:
-    # double-green r7+r8 veterans traded one-for-one for
-    # relational13's eight new round-9 operators (drift_ks /
-    # skew_autosalt / privacy_kanon / quantile_select / rolling_median
-    # / forecast_snaive / ref_integrity_audit / reconcile_sources)
-    from .graph import SQL_GRAPH_TRIANGLES, q_graph_triangles
-    from .similarity import (
-        SQL_ANN_PQ_TOPK,
-        SQL_KMEANS_EMBEDDINGS,
-        SQL_PQ_ENCODE,
-        q_ann_pq_topk,
-        q_kmeans_embeddings,
-        q_pq_encode,
-    )
-    from .textstats import (
-        SQL_PMI_COOCCUR,
-        SQL_VOCAB_COVERAGE,
-        q_pmi_cooccur,
-        q_vocab_coverage,
-    )
-    from .trainprep import (
-        SQL_BPE_APPLY,
-        SQL_BPE_MERGES,
-        q_bpe_apply,
-        q_bpe_merges,
-    )
-
-    return [
-        Query(
-            "kmeans_embeddings",
-            q_kmeans_embeddings,
-            SQL_KMEANS_EMBEDDINGS,
-            ("llm", "similarity", "iterative", "agg"),
-            bench=True,  # the broadcast-model iteration, timed end-to-end
-        ),
-        Query(
-            "graph_triangles",
-            q_graph_triangles,
-            SQL_GRAPH_TRIANGLES,
-            ("llm", "graph", "join"),
-        ),
-        Query(
-            "vocab_coverage",
-            q_vocab_coverage,
-            SQL_VOCAB_COVERAGE,
-            ("llm", "text", "agg"),
-        ),
-        Query(
-            "bpe_merges",
-            q_bpe_merges,
-            SQL_BPE_MERGES,
-            ("llm", "text", "iterative"),
-        ),
-        Query(
-            "bpe_apply",
-            q_bpe_apply,
-            SQL_BPE_APPLY,
-            ("llm", "text", "iterative", "pipeline"),
-        ),
-        Query(
-            "pq_encode",
-            q_pq_encode,
-            SQL_PQ_ENCODE,
-            ("llm", "similarity", "iterative", "approx"),
-        ),
-        Query(
-            "ann_pq_topk",
-            q_ann_pq_topk,
-            SQL_ANN_PQ_TOPK,
-            ("llm", "similarity", "approx", "topk"),
-        ),
-        Query(
-            "pmi_cooccur",
-            q_pmi_cooccur,
-            SQL_PMI_COOCCUR,
-            ("llm", "text", "agg"),
-        ),
-    ]
-
-
-def _demoted_r10_w6() -> list[Query]:
-    # double-green r8+r9 veteran traded for relational15's
-    # anova_oneway in the round-10 sixth-wave rotation
-    from .relational9 import SQL_SESSION_PATHS, q_session_paths
-
-    return [
-        Query(
-            "session_paths",
-            q_session_paths,
-            SQL_SESSION_PATHS,
-            ("relational", "analytics", "window"),
-        ),
-    ]
-
-
-def _demoted_r10_w9() -> list[Query]:
-    # double-green r8+r9 veterans traded for relational16's
-    # graph_assortativity and the eval_mrr_scale promotion (the
-    # registry's last never-graded oracle lane) in the round-10
-    # ninth-wave rotation
-    from .dedup import SQL_DEDUP_KEEP_BEST as _SQL_DKB
-    from .dedup import q_dedup_keep_best as _q_dkb
-    from .textstats import SQL_ENTROPY_SCORE as _SQL_ES
-    from .textstats import SQL_WORD_FILTER as _SQL_WF
-    from .textstats import q_entropy_score as _q_es
-    from .textstats import q_word_filter as _q_wf
-
-    return [
-        Query(
-            "dedup_keep_best",
-            _q_dkb,
-            _SQL_DKB,
-            ("llm", "dedup", "quality"),
-        ),
-        Query(
-            "entropy_score",
-            _q_es,
-            _SQL_ES,
-            ("llm", "text", "quality"),
-        ),
-        Query(
-            "word_filter",
-            _q_wf,
-            _SQL_WF,
-            ("llm", "text", "quality"),
-        ),
-    ]
-
-
-def _demoted_r10_w8() -> list[Query]:
-    # double-green r8+r9 veteran traded for relational16's
-    # privacy_tcloseness in the round-10 eighth-wave rotation
-    from .similarity import SQL_SIM_JOIN_KMEANS as _SQL_SJK
-    from .similarity import q_sim_join_kmeans as _q_sjk
-
-    return [
-        Query(
-            "sim_join_kmeans",
-            _q_sjk,
-            _SQL_SJK,
-            ("llm", "similarity", "dedup", "pipeline"),
-        ),
-    ]
-
-
-def _demoted_r10_w7() -> list[Query]:
-    # double-green r8+r9 veteran traded for relational16's
-    # gini_concentration in the round-10 seventh-wave rotation
-    from .similarity import SQL_EMB_GRAM, q_emb_gram
-
-    return [
-        Query(
-            "emb_gram",
-            q_emb_gram,
-            SQL_EMB_GRAM,
-            ("llm", "similarity", "linalg"),
-            bench=True,  # the huge-N x small-d reduction representative
-        ),
-    ]
-
-
-EXTRA_QUERIES: list[Query] = (
-    _demoted_r10_w9() + _demoted_r10_w8() + _demoted_r10_w7()
-    + _demoted_r10_w6() + _demoted_r9() + _demoted_r8()
-) + [
-    # interleave_mix re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    Query(
-        "window_distribution",
-        q_window_distribution,
-        SQL_WINDOW_DISTRIBUTION,
-        ("relational", "window"),
-    ),
-    Query(
-        "text_normalize",
-        q_text_normalize,
-        SQL_TEXT_NORMALIZE,
-        ("llm", "text"),
-    ),
+QUERIES: list[Query] = [
+    Query("window_distribution", q_window_distribution, SQL_WINDOW_DISTRIBUTION),
+    Query("interleave_mix", q_interleave_mix, SQL_INTERLEAVE_MIX),
+    Query("text_normalize", q_text_normalize, SQL_TEXT_NORMALIZE),
 ]

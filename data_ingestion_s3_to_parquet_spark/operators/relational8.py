@@ -1,7 +1,5 @@
-"""Round-4 additions, second wave: four more operator families a
-complete analytics + training-data engine needs, exposed as
-oracle-gated EXTRA-lane entries (never driver-graded yet, so they lead
-the lane with the first-wave round-4 trio).
+"""Four more operator families a complete analytics + training-data
+engine needs, each oracle-gated.
 
 - ``unpivot_stack`` — wide→long reshaping (the inverse of ``pivot``):
   melt a set of measure columns into (measure, value) rows. Feature
@@ -670,57 +668,13 @@ GROUP BY event_type
 """
 
 
-QUERIES: list[Query] = []
-
-# Graded lane contribution: none since round 8 — anomaly_zscore
-# (green r6+r7) demoted below in exchange for the never-graded
-# rank_bm25 (relational10), per the one-for-one rotation rule.
-QUERIES = []
-
-# Demoted to the EXTRA lane: sample_span_mask / lm_unigram_score in
-# round 7 after re-earning green rows in round 6 on the CAST-fixed
-# oracles (VERDICT r6 #1); window_range_interval / profile_table /
-# agg_skew_salted in the round-7 wave-2 rotation (green r5+r6);
-# anomaly_zscore in round 8 (green r6+r7) for rank_bm25. All keep
-# their oracles + bench entries and stay in the local sweep.
-EXTRA_QUERIES: list[Query] = [
-    Query(
-        "anomaly_zscore",
-        q_anomaly_zscore,
-        SQL_ANOMALY_ZSCORE,
-        ("relational", "quality", "timeseries"),
-    ),
-    # demoted in the round-7 THIRD-wave rotation (green r6) in
-    # exchange for the never-graded winnow_overlap
-    Query(
-        "unpivot_stack",
-        q_unpivot_stack,
-        SQL_UNPIVOT_STACK,
-        ("relational", "reshape"),
-    ),
-    # knn_graph re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    Query(
-        "window_range_interval",
-        q_window_range_interval,
-        SQL_WINDOW_RANGE_INTERVAL,
-        ("relational", "window", "timeseries"),
-    ),
-    Query(
-        "profile_table",
-        q_profile_table,
-        SQL_PROFILE_TABLE,
-        ("relational", "quality", "profiling"),
-    ),
-    # agg_skew_salted re-promoted to the graded lane in round 13 (r6
-    # driver row; it registers via relational19)
-    Query(
-        "sample_span_mask",
-        q_sample_span_mask,
-        SQL_SAMPLE_SPAN_MASK,
-        ("llm", "sampling", "text"),
-        bench=True,  # the token-stream-shuffle representative
-    ),
-    # lm_unigram_score re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
+QUERIES: list[Query] = [
+    Query("unpivot_stack", q_unpivot_stack, SQL_UNPIVOT_STACK),
+    Query("window_range_interval", q_window_range_interval, SQL_WINDOW_RANGE_INTERVAL),
+    Query("sample_span_mask", q_sample_span_mask, SQL_SAMPLE_SPAN_MASK, bench=True),
+    Query("anomaly_zscore", q_anomaly_zscore, SQL_ANOMALY_ZSCORE),
+    Query("knn_graph", q_knn_graph, SQL_KNN_GRAPH),
+    Query("lm_unigram_score", q_lm_unigram_score, SQL_LM_UNIGRAM_SCORE, bench=True),
+    Query("profile_table", q_profile_table, SQL_PROFILE_TABLE),
+    Query("agg_skew_salted", q_agg_skew_salted, SQL_AGG_SKEW_SALTED),
 ]

@@ -1,4 +1,4 @@
-"""Round-4 additions, third wave: the product/telemetry analytics
+"""The product/telemetry analytics
 staples — time-weighted averaging over irregular samples, funnel
 conversion, and cohort retention. These are the queries an analytics
 engine is USED for daily; each is a distinct plan shape the registry
@@ -3329,109 +3329,35 @@ FROM base
 SQL_SAMPLE_SIZE_CALC = _sql_sample_size_calc()
 
 
-
-
-QUERIES: list[Query] = []
-
-# Graded lane contribution after the round-7 wave-2 rotation: two
-# round-5 promotees kept graded (recursive_cte, data_expectations —
-# green r5+r6) and the nine round-6 promotees (green r6), earning
-# further rows. time_weighted_avg and ab_test_metrics carried the
-# same latent HUGEINT oracle defect as sample_span_mask and now CAST
-# their integer SUM output columns (span_sec, n_a, n_b) to BIGINT.
-QUERIES = [
-    # NEW in round 7 (post-wave-2): graded immediately so it earns a
-    # driver row this round; knn_graph (green r5+r6, LSH twin benched)
-    # demoted from relational8 in exchange.
-    Query(
-        "corr_pearson",
-        q_corr_pearson,
-        SQL_CORR_PEARSON,
-        ("relational", "analytics", "statistics"),
-    ),
-]
-
-# Demoted in the round-7 wave-2 rotation (green r5+r6) in exchange
-# for never-graded round-7 promotees; all stay in the local sweep.
-# recursive_cte / data_expectations (green r5+r6) and value_histogram
-# (green r6) demoted in the round-7 THIRD-wave rotation for the new
-# doc_winnow / inverted_index / changepoint_cusum (relational10.py).
-EXTRA_QUERIES: list[Query] = [
-    # demoted in the round-8 SECOND-wave rotation (green r6+r7) in
-    # exchange for the never-graded orc_interop / acf_lags /
-    # ccnet_buckets / zorder_layout (relational11); chunk_text keeps
-    # its bench flag — the bench suite merges all lanes
-    Query(
-        "chunk_text",
-        q_chunk_text,
-        SQL_CHUNK_TEXT,
-        ("llm", "text", "rag"),
-        bench=True,  # the explode-heavy map-only representative
-    ),
-    Query(
-        "basket_pairs",
-        q_basket_pairs,
-        SQL_BASKET_PAIRS,
-        ("relational", "analytics", "association"),
-    ),
-    Query(
-        "period_growth",
-        q_period_growth,
-        SQL_PERIOD_GROWTH,
-        ("relational", "analytics", "timeseries"),
-    ),
-    Query(
-        "ab_test_metrics",
-        q_ab_test_metrics,
-        SQL_AB_TEST_METRICS,
-        ("relational", "analytics", "experimentation"),
-    ),
-    # demoted in round 8 (green r6+r7) in exchange for the
-    # never-graded ewma_smooth and rank_fusion_rrf (relational10)
-    Query(
-        "time_weighted_avg",
-        q_time_weighted_avg,
-        SQL_TIME_WEIGHTED_AVG,
-        ("relational", "timeseries", "window"),
-    ),
-    Query(
-        "funnel_conversion",
-        q_funnel_conversion,
-        SQL_FUNNEL_CONVERSION,
-        ("relational", "analytics"),
-    ),
-    Query(
-        "retention_cohort",
-        q_retention_cohort,
-        SQL_RETENTION_COHORT,
-        ("relational", "analytics"),
-    ),
-    Query(
-        "corpus_report",
-        q_corpus_report,
-        SQL_CORPUS_REPORT,
-        ("llm", "text", "report"),
-    ),
-    Query(
-        "recursive_cte",
-        q_recursive_hierarchy,
-        SQL_RECURSIVE_HIERARCHY,
-        ("relational", "sql", "iterative"),
-    ),
-    # data_expectations re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    Query(
-        "value_histogram",
-        q_value_histogram,
-        SQL_VALUE_HISTOGRAM,
-        ("relational", "profiling"),
-    ),
-    # fuzzy_match_strings re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    Query(
-        "skyline_frontier",
-        q_skyline_frontier,
-        SQL_SKYLINE_FRONTIER,
-        ("relational", "analytics", "window"),
-    ),
+QUERIES: list[Query] = [
+    Query("time_weighted_avg", q_time_weighted_avg, SQL_TIME_WEIGHTED_AVG),
+    Query("funnel_conversion", q_funnel_conversion, SQL_FUNNEL_CONVERSION),
+    Query("retention_cohort", q_retention_cohort, SQL_RETENTION_COHORT),
+    Query("recursive_cte", q_recursive_hierarchy, SQL_RECURSIVE_HIERARCHY),
+    Query("data_expectations", q_data_expectations, SQL_DATA_EXPECTATIONS),
+    Query("fuzzy_match_strings", q_fuzzy_match_strings, SQL_FUZZY_MATCH_STRINGS),
+    Query("chunk_text", q_chunk_text, SQL_CHUNK_TEXT, bench=True),
+    Query("corpus_report", q_corpus_report, SQL_CORPUS_REPORT),
+    Query("value_histogram", q_value_histogram, SQL_VALUE_HISTOGRAM),
+    Query("skyline_frontier", q_skyline_frontier, SQL_SKYLINE_FRONTIER),
+    Query("basket_pairs", q_basket_pairs, SQL_BASKET_PAIRS),
+    Query("corr_pearson", q_corr_pearson, SQL_CORR_PEARSON),
+    Query("period_growth", q_period_growth, SQL_PERIOD_GROWTH),
+    Query("ab_test_metrics", q_ab_test_metrics, SQL_AB_TEST_METRICS),
+    Query("perm_test_diff", q_perm_test_diff, SQL_PERM_TEST_DIFF),
+    Query("bootstrap_ci_diff", q_bootstrap_ci_diff, SQL_BOOTSTRAP_CI_DIFF),
+    Query("perm_test_ratio", q_perm_test_ratio, SQL_PERM_TEST_RATIO),
+    Query("srm_check", q_srm_check, SQL_SRM_CHECK),
+    Query("merge_intervals", q_merge_intervals, SQL_MERGE_INTERVALS),
+    Query("markov_transitions", q_markov_transitions, SQL_MARKOV_TRANSITIONS, bench=True),
+    Query("robust_stats", q_robust_stats, SQL_ROBUST_STATS),
+    Query("session_paths", q_session_paths, SQL_SESSION_PATHS),
+    Query("chi2_contingency", q_chi2_contingency, SQL_CHI2_CONTINGENCY),
+    Query("metric_cuped", q_metric_cuped, SQL_METRIC_CUPED),
+    Query("metric_did", q_metric_did, SQL_METRIC_DID),
+    Query("fdr_bh", q_fdr_bh, SQL_FDR_BH),
+    Query("fdr_holm", q_fdr_holm, SQL_FDR_HOLM),
+    Query("chisq_independence", q_chisq_independence, SQL_CHISQ_INDEPENDENCE),
+    Query("power_mde", q_power_mde, SQL_POWER_MDE),
+    Query("sample_size_calc", q_sample_size_calc, SQL_SAMPLE_SIZE_CALC),
 ]

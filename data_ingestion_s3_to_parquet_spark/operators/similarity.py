@@ -1120,23 +1120,6 @@ WHERE a.vec_id < b.vec_id
 """
 
 
-# All graded contributions from this module now register via
-# relational7 (emb_gram in the round-6 trio; kmeans_embeddings,
-# sim_join_kmeans, pq_encode, ann_pq_topk, ann_two_stage in the
-# round-7 wave-2 promotion).
-QUERIES: list[Query] = []
-
-# Demoted to the EXTRA lane: sim_topk in round 6 (four consecutive
-# green driver rows — VERDICT r5 #4); sim_join and ann_ivf_topk in
-# the round-7 wave-2 rotation (multiple green rows each, latest r6).
-# ann_ivf_topk / sim_topk re-promoted to the graded lane in round 13
-# (r6/r5 driver rows — among the oldest after the r12 rotation; they
-# register via relational19, bench flags intact).
-EXTRA_QUERIES = [
-    Query("sim_join", q_sim_join, SQL_SIM_JOIN, ("llm", "similarity"), bench=True),
-]
-
-
 def q_knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate k-NN graph from LSH candidates — the 100 TB lane of
     ``relational8.q_knn_graph`` (which ranks exact label-block pairs).
@@ -1170,3 +1153,18 @@ def q_knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rank") <= KNN_K)
         .select("src", "dst", "rank", "cos_sim")
     )
+
+
+QUERIES: list[Query] = [
+    Query("sim_topk", q_sim_topk, SQL_SIM_TOPK, bench=True),
+    Query("sim_join", q_sim_join, SQL_SIM_JOIN, bench=True),
+    Query("sim_join_lsh", q_sim_join_lsh, None, bench=True),
+    Query("ann_ivf_topk", q_ann_ivf_check, SQL_ANN_IVF_CHECK),
+    Query("emb_gram", q_emb_gram, SQL_EMB_GRAM, bench=True),
+    Query("kmeans_embeddings", q_kmeans_embeddings, SQL_KMEANS_EMBEDDINGS, bench=True),
+    Query("pq_encode", q_pq_encode, SQL_PQ_ENCODE),
+    Query("ann_pq_topk", q_ann_pq_topk, SQL_ANN_PQ_TOPK),
+    Query("ann_two_stage", q_ann_two_stage, SQL_ANN_TWO_STAGE),
+    Query("sim_join_kmeans", q_sim_join_kmeans, SQL_SIM_JOIN_KMEANS),
+    Query("knn_graph_lsh", q_knn_graph_lsh, None, bench=True),
+]

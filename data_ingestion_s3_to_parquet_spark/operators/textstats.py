@@ -2387,11 +2387,6 @@ FROM g
 SQL_TEXT_MATTR = _sql_text_mattr()
 
 
-# All graded contributions from this module now register via
-# relational7 (the round-7 wave-2 promotion: vocab_coverage,
-# freq_items_topk, strip_markup, ngram_counts, url_canonicalize,
-# cms_counts, pmi_cooccur, entropy_score, content_chunks,
-# word_filter).
 # --------------------------------------------------------------------
 # tokenizer_vocab_overlap
 # --------------------------------------------------------------------
@@ -2723,32 +2718,32 @@ FROM scored
 SQL_EVAL_LANG_CONFUSION = _sql_eval_lang_confusion()
 
 
-QUERIES: list[Query] = []
-
-# Rotated to the EXTRA lane: quality_gopher / pii_redact in round 4
-# (green driver rows in r3 — VERDICT r3 #1); the five below in the
-# round-7 wave-2 rotation (multiple green rows each, latest r6).
-EXTRA_QUERIES = [
-    Query("text_stats", q_text_stats, SQL_TEXT_STATS, ("llm", "text"), bench=True),
-    # doc_fingerprint re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    # lang_id re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    Query(
-        "tfidf_top_terms",
-        q_tfidf_top_terms,
-        SQL_TFIDF_TOP_TERMS,
-        ("llm", "text", "window"),
-        bench=True,  # track the multi-stage window lane round-over-round
-    ),
-    Query(
-        "quality_classifier",
-        q_quality_classifier,
-        SQL_QUALITY_CLASSIFIER,
-        ("llm", "text", "quality", "pipeline"),
-        bench=True,  # the composed three-signal gate, timed end-to-end
-    ),
-    # quality_gopher / pii_redact re-promoted to the graded lane in
-    # round 11 (r3 driver rows — the registry's oldest; they register
-    # via relational17, which also registers the new text_readability)
+QUERIES: list[Query] = [
+    Query("text_stats", q_text_stats, SQL_TEXT_STATS, bench=True),
+    Query("doc_fingerprint", q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+    Query("lang_id", q_lang_id, SQL_LANG_ID),
+    Query("lang_id_ngram", q_lang_id_ngram, None),
+    Query("quality_gopher", q_quality_gopher, SQL_QUALITY_GOPHER),
+    Query("pii_redact", q_pii_redact, SQL_PII_REDACT),
+    Query("tfidf_top_terms", q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS, bench=True),
+    Query("quality_classifier", q_quality_classifier, SQL_QUALITY_CLASSIFIER, bench=True),
+    Query("strip_markup", q_strip_markup, SQL_STRIP_MARKUP),
+    Query("ngram_counts", q_ngram_counts, SQL_NGRAM_COUNTS, bench=True),
+    Query("entropy_score", q_entropy_score, SQL_ENTROPY_SCORE),
+    Query("content_chunks", q_content_chunks, SQL_CONTENT_CHUNKS, bench=True),
+    Query("word_filter", q_word_filter, SQL_WORD_FILTER),
+    Query("pmi_cooccur", q_pmi_cooccur, SQL_PMI_COOCCUR),
+    Query("freq_items_topk", q_freq_items_topk, SQL_FREQ_ITEMS_TOPK),
+    Query("vocab_coverage", q_vocab_coverage, SQL_VOCAB_COVERAGE),
+    Query("url_canonicalize", q_url_canonicalize, SQL_URL_CANONICALIZE),
+    Query("cms_counts", q_cms_counts, SQL_CMS_COUNTS),
+    Query("text_readability", q_text_readability, SQL_TEXT_READABILITY),
+    Query("zipf_fit", q_zipf_fit, SQL_ZIPF_FIT),
+    Query("heaps_fit", q_heaps_fit, SQL_HEAPS_FIT),
+    Query("text_yule_k", q_text_yule_k, SQL_TEXT_YULE_K),
+    Query("len_lognormal_fit", q_len_lognormal_fit, SQL_LEN_LOGNORMAL_FIT),
+    Query("word_adaptation", q_word_adaptation, SQL_WORD_ADAPTATION),
+    Query("text_mattr", q_text_mattr, SQL_TEXT_MATTR),
+    Query("tokenizer_vocab_overlap", q_tokenizer_vocab_overlap, SQL_TOKENIZER_VOCAB_OVERLAP),
+    Query("eval_lang_confusion", q_eval_lang_confusion, SQL_EVAL_LANG_CONFUSION),
 ]

@@ -2465,61 +2465,28 @@ JOIN pop p ON a.status = p.status
 SQL_SAMPLE_ALLOC_EXECUTED = _sql_sample_alloc_executed()
 
 
-QUERIES = [
-    # NEW in round 8: graded immediately (retention_cohort and
-    # corpus_report, green r6+r7, demoted from relational9 in
-    # exchange)
-    Query(
-        "pipeline_fineweb",
-        q_pipeline_fineweb,
-        _sql_pipeline_fineweb(),
-        ("llm", "pipeline", "dedup", "quality", "text"),
-    ),
-    Query(
-        "dup_span_max",
-        q_dup_span_max,
-        SQL_DUP_SPAN_MAX,
-        ("llm", "dedup", "text", "quality"),
-    ),
-    # NEW in round 7 (post-wave-2): graded immediately so they earn
-    # driver rows this round; window_distribution and text_normalize
-    # (green r5+r6) demoted from relational7 in exchange.
-    Query(
-        "dsir_weights",
-        q_dsir_weights,
-        SQL_DSIR_WEIGHTS,
-        ("llm", "sampling", "quality", "text"),
-    ),
-    Query(
-        "token_budget_select",
-        q_token_budget_select,
-        SQL_TOKEN_BUDGET_SELECT,
-        ("llm", "sampling", "quality", "window"),
-    ),
-]
-
-# Rotated to the EXTRA lane: seq_pack + embedding_quantize in round 4
-# (green driver rows in r3 — VERDICT r3 #1); sample_split,
-# decontaminate, corpus_prep, emb_centroids in round 6 after four
-# consecutive green driver rows each (VERDICT r5 #4 — their graded
-# slots went to the eleven never-graded round-4 operators).
-# NOTE: the NEW q_dedup_passages registers through relational7's
-# EXTRA_QUERIES (the first EXTRA-contributing module) so the one
-# never-graded entry LEADS the lane and a larger harness budget — or
-# the next rotation — grades it first.
-EXTRA_QUERIES = [
-    # demoted in the round-7 THIRD-wave rotation (green rows through
-    # r6) in exchange for the never-graded graph promotees
-    Query(
-        "sample_stratified",
-        q_sample_stratified,
-        SQL_SAMPLE_STRATIFIED,
-        ("llm", "sampling", "window"),
-    ),
-    # seq_pack / embedding_quantize re-promoted to the graded lane in
-    # round 11 (r3 driver rows — the registry's oldest; they register
-    # via relational17); sample_split / decontaminate / corpus_prep /
-    # emb_centroids re-promoted in round 13 (r5 driver rows — the
-    # oldest after the r12 rotation; they register via relational19,
-    # bench flags intact)
+QUERIES: list[Query] = [
+    Query("sample_split", q_sample_split, SQL_SAMPLE_SPLIT),
+    Query("emb_centroids", q_emb_centroids, SQL_EMB_CENTROIDS, bench=True),
+    Query("corpus_prep", q_corpus_prep, SQL_CORPUS_PREP, bench=True),
+    Query("decontaminate", q_decontaminate, SQL_DECONTAMINATE, bench=True),
+    Query("seq_pack", q_seq_pack, SQL_SEQ_PACK),
+    Query("embedding_quantize", q_embedding_quantize, SQL_EMBEDDING_QUANTIZE),
+    Query("sample_stratified", q_sample_stratified, SQL_SAMPLE_STRATIFIED),
+    Query("dedup_passages", q_dedup_passages, SQL_DEDUP_PASSAGES, bench=True),
+    Query("dedup_passages_scale", q_dedup_passages_scale, None, bench=True),
+    Query("dup_span_max", q_dup_span_max, SQL_DUP_SPAN_MAX),
+    Query("pipeline_fineweb", q_pipeline_fineweb, _sql_pipeline_fineweb()),
+    Query("mix_weights", q_mix_weights, SQL_MIX_WEIGHTS),
+    Query("dsir_weights", q_dsir_weights, SQL_DSIR_WEIGHTS),
+    Query("token_budget_select", q_token_budget_select, SQL_TOKEN_BUDGET_SELECT),
+    Query("bpe_merges", q_bpe_merges, SQL_BPE_MERGES),
+    Query("bpe_apply", q_bpe_apply, SQL_BPE_APPLY),
+    Query("shard_manifest", q_shard_manifest, SQL_SHARD_MANIFEST),
+    Query("batch_by_length", q_batch_by_length, SQL_BATCH_BY_LENGTH),
+    Query("bootstrap_ci_mean", q_bootstrap_ci_mean, SQL_BOOTSTRAP_CI_MEAN),
+    Query("bootstrap_ci_ratio", q_bootstrap_ci_ratio, SQL_BOOTSTRAP_CI_RATIO),
+    Query("bootstrap_ci_quantile", q_bootstrap_ci_quantile, SQL_BOOTSTRAP_CI_QUANTILE),
+    Query("sample_alloc_neyman", q_sample_alloc_neyman, SQL_SAMPLE_ALLOC_NEYMAN),
+    Query("sample_alloc_executed", q_sample_alloc_executed, SQL_SAMPLE_ALLOC_EXECUTED),
 ]

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,5 +25,4 @@ class Query:
     name: str
     fn: QueryFn
     oracle: str | None
-    tags: tuple[str, ...] = field(default=())
     bench: bool = False  # include in bench.py's headline suite

@@ -26,9 +26,12 @@ chosen to be correct on a 1000-executor cluster:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # Confs that are dynamic (plain SQLConf) — safe to set on a running
 # session, including the verify driver's.
@@ -127,8 +130,8 @@ def tune(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf may be static in exotic builds
-            pass
+        except Exception as e:  # pragma: no cover - conf may be static in exotic builds
+            _log.warning("tune: could not set %s=%s (%s)", k, v, e)
     _ship_package(spark)
     return spark
 

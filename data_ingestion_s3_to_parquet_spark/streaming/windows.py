@@ -559,17 +559,12 @@ WHERE l.event_type = 'view' AND r.event_type = 'click'
 """
 
 
-# All graded contributions from this module now register via
-# relational7 (stream_join_interval in the round-7 wave-2 promotion);
-# the three window queries demoted to the EXTRA lane in the same
-# rotation (green rows incl. r6) keep oracles + bench entries.
-# stream_dedup graded in the round-8 final rotation (never-graded).
 QUERIES: list[Query] = [
-    Query("stream_dedup", q_stream_dedup, SQL_STREAM_DEDUP, ("streaming", "dedup")),
-]
-
-EXTRA_QUERIES = [
-    Query("stream_tumbling", q_stream_tumbling, SQL_STREAM_TUMBLING, ("streaming",), bench=True),
-    Query("stream_sliding", q_stream_sliding, SQL_STREAM_SLIDING, ("streaming",)),
-    Query("stream_session", q_stream_session, SQL_STREAM_SESSION, ("streaming",)),
+    Query("stream_tumbling", q_stream_tumbling, SQL_STREAM_TUMBLING, bench=True),
+    Query("stream_sliding", q_stream_sliding, SQL_STREAM_SLIDING),
+    Query("stream_session", q_stream_session, SQL_STREAM_SESSION),
+    Query("stream_dedup", q_stream_dedup, SQL_STREAM_DEDUP),
+    Query("stream_bootstrap", q_stream_bootstrap, SQL_STREAM_BOOTSTRAP),
+    Query("stream_srm", q_stream_srm, SQL_STREAM_SRM),
+    Query("stream_join_interval", q_stream_join_interval, SQL_STREAM_JOIN_INTERVAL),
 ]

@@ -303,11 +303,12 @@ def test_text_normalize_is_idempotent_and_flags_changes(spark, sf_dir):
     }
 
 
-def test_ref_pairs_cache_matches_rebuild(spark, sf_dir):
+def test_ref_pairs_cache_matches_rebuild(spark, sf_dir, caplog):
     # the persisted dedup_fuzzy reference set must equal a fresh PPJoin
     # rebuild, and a corrupted checksum must force a rebuild (never
-    # grade against a torn cache)
+    # grade against a torn cache) that logs its reason
     import json
+    import logging
     import os
 
     from data_ingestion_s3_to_parquet_spark.operators.dedup import (
@@ -334,12 +335,19 @@ def test_ref_pairs_cache_matches_rebuild(spark, sf_dir):
         "checksum.json",
     )
     assert os.path.exists(meta)
+    caplog.set_level(logging.WARNING, logger="data_ingestion_s3_to_parquet_spark.artifacts")
     with open(meta, "w") as fh:
         json.dump({"count": -1, "hashsum": 0}, fh)   # corrupt it
     assert {(r.doc_a, r.doc_b) for r in _ref_pairs(spark, sf_dir).collect()} == fresh
+    assert "unreadable cache (KeyError" in caplog.text
     with open(meta) as fh:
         repaired = json.load(fh)
     assert repaired["count"] == len(fresh)            # rebuild re-stamped it
+    caplog.clear()
+    with open(meta, "w") as fh:
+        json.dump({**repaired, "count": -1}, fh)     # well-formed, wrong signature
+    assert {(r.doc_a, r.doc_b) for r in _ref_pairs(spark, sf_dir).collect()} == fresh
+    assert "signature mismatch; rebuilding" in caplog.text
 
 
 def test_quadratic_lane_guard_names_scale_safe_twin(spark, sf_dir, monkeypatch):
@@ -505,6 +513,52 @@ def test_dedup_semantic_selection_invariants(spark, sf_dir):
     }
     for r in rows:
         assert r.best_score == scores[r.doc_id]         # kept row carries its own score
+
+
+def test_dedup_fuzzy_branch_jobs_keep_caller_job_group(spark, sf_dir):
+    # dedup_fuzzy builds its two branches on driver threads; those
+    # threads must inherit the caller's job group, or the lane's jobs
+    # escape per-lane attribution and cancelJobGroup
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import q_dedup_fuzzy
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("dedup-fuzzy-group-test", "dedup_fuzzy")
+    try:
+        q_dedup_fuzzy(spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert tracker.getJobIdsForGroup("dedup-fuzzy-group-test")
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_overlap_failure_cancels_sibling_branch(spark):
+    # when one branch raises, the other branch's running job is
+    # cancelled by its tag (not left to finish) and the first error is
+    # the one re-raised
+    import time
+
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import _overlap
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def slow():
+        return spark.range(1, numPartitions=1).rdd.map(
+            lambda x: time.sleep(20) or x
+        ).count()
+
+    def fail_once_slow_runs():
+        deadline = time.monotonic() + 30
+        while not tracker.getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.05)
+        raise ValueError("branch failed")
+
+    t0 = time.monotonic()
+    with pytest.raises(ValueError, match="branch failed"):
+        _overlap(spark, ("slow", slow), ("fail", fail_once_slow_runs))
+    assert time.monotonic() - t0 < 15
 
 
 def test_connected_components_star_chain_beyond_hashmin_cap(spark):
@@ -775,151 +829,6 @@ def test_registry_extra_lane_has_oracles():
         assert q.oracle is not None
 
 
-def test_extra_lane_doc_counts_match_registry():
-    # ADVICE r3: the EXTRA-lane size drifted in prose twice ("sixteen"
-    # vs 17). Pin the spelled-out count in both docstrings to len(EXTRA).
-    import inspect
-    import re
-
-    import __spark_entry__ as entry_mod
-    from data_ingestion_s3_to_parquet_spark.plans import registry
-
-    words = {
-        14: "fourteen", 15: "fifteen", 16: "sixteen", 17: "seventeen",
-        18: "eighteen", 19: "nineteen", 20: "twenty",
-        21: "twenty-one", 22: "twenty-two", 23: "twenty-three",
-        24: "twenty-four", 25: "twenty-five", 26: "twenty-six",
-        27: "twenty-seven", 28: "twenty-eight", 29: "twenty-nine",
-        30: "thirty", 31: "thirty-one", 32: "thirty-two",
-        33: "thirty-three", 34: "thirty-four", 35: "thirty-five",
-        36: "thirty-six", 37: "thirty-seven", 38: "thirty-eight",
-        39: "thirty-nine", 40: "forty", 41: "forty-one",
-        42: "forty-two", 43: "forty-three", 44: "forty-four",
-        45: "forty-five", 46: "forty-six", 47: "forty-seven",
-        48: "forty-eight", 49: "forty-nine", 50: "fifty",
-        51: "fifty-one", 52: "fifty-two", 53: "fifty-three",
-        54: "fifty-four", 55: "fifty-five", 56: "fifty-six",
-        57: "fifty-seven", 58: "fifty-eight", 59: "fifty-nine",
-        60: "sixty", 61: "sixty-one", 62: "sixty-two",
-        63: "sixty-three", 64: "sixty-four", 65: "sixty-five",
-        66: "sixty-six", 67: "sixty-seven", 68: "sixty-eight",
-        69: "sixty-nine", 70: "seventy", 71: "seventy-one",
-        72: "seventy-two", 73: "seventy-three", 74: "seventy-four",
-        75: "seventy-five", 76: "seventy-six", 77: "seventy-seven",
-        78: "seventy-eight", 79: "seventy-nine", 80: "eighty",
-        81: "eighty-one", 82: "eighty-two", 83: "eighty-three",
-        84: "eighty-four", 85: "eighty-five", 86: "eighty-six",
-        87: "eighty-seven", 88: "eighty-eight", 89: "eighty-nine",
-        90: "ninety", 91: "ninety-one", 92: "ninety-two",
-        93: "ninety-three", 94: "ninety-four", 95: "ninety-five",
-        96: "ninety-six", 97: "ninety-seven", 98: "ninety-eight",
-        99: "ninety-nine", 100: "one hundred",
-        # 101+: "a hundred and N" so no entry is a substring of
-        # another (the stale-word scan is substring-based)
-        101: "a hundred and one", 102: "a hundred and two",
-        103: "a hundred and three", 104: "a hundred and four",
-        105: "a hundred and five", 106: "a hundred and six",
-        107: "a hundred and seven", 108: "a hundred and eight",
-        109: "a hundred and nine", 110: "a hundred and ten",
-        111: "a hundred and eleven", 112: "a hundred and twelve",
-        115: "a hundred and fifteen",
-        113: "a hundred and thirteen", 114: "a hundred and fourteen",
-        116: "a hundred and sixteen", 117: "a hundred and seventeen",
-        118: "a hundred and eighteen", 119: "a hundred and nineteen",
-        120: "a hundred and twenty", 121: "a hundred and twenty-one",
-        122: "a hundred and twenty-two",
-        123: "a hundred and twenty-three",
-        124: "a hundred and twenty-four",
-        125: "a hundred and twenty-five",
-        126: "a hundred and twenty-six",
-        127: "a hundred and twenty-seven",
-        128: "a hundred and twenty-eight",
-        129: "a hundred and twenty-nine",
-        130: "a hundred and thirty",
-        131: "a hundred and thirty-one",
-        132: "a hundred and thirty-two",
-        133: "a hundred and thirty-three",
-        134: "a hundred and thirty-four",
-        135: "a hundred and thirty-five",
-        136: "a hundred and thirty-six",
-        137: "a hundred and thirty-seven",
-        138: "a hundred and thirty-eight",
-        139: "a hundred and thirty-nine",
-        140: "a hundred and forty",
-        141: "a hundred and forty-one",
-        142: "a hundred and forty-two",
-        143: "a hundred and forty-three",
-        144: "a hundred and forty-four",
-        145: "a hundred and forty-five",
-        146: "a hundred and forty-six",
-        147: "a hundred and forty-seven",
-        148: "a hundred and forty-eight",
-        149: "a hundred and forty-nine",
-        150: "a hundred and fifty",
-        151: "a hundred and fifty-one",
-        152: "a hundred and fifty-two",
-        153: "a hundred and fifty-three",
-        154: "a hundred and fifty-four",
-        155: "a hundred and fifty-five",
-        156: "a hundred and fifty-six",
-        157: "a hundred and fifty-seven",
-        158: "a hundred and fifty-eight",
-        159: "a hundred and fifty-nine",
-        160: "a hundred and sixty",
-        161: "a hundred and sixty-one",
-        162: "a hundred and sixty-two",
-        163: "a hundred and sixty-three",
-        164: "a hundred and sixty-four",
-        165: "a hundred and sixty-five",
-        166: "a hundred and sixty-six",
-        167: "a hundred and sixty-seven",
-        168: "a hundred and sixty-eight",
-        169: "a hundred and sixty-nine",
-        170: "a hundred and seventy",
-        171: "a hundred and seventy-one",
-        172: "a hundred and seventy-two",
-        173: "a hundred and seventy-three",
-        174: "a hundred and seventy-four",
-        175: "a hundred and seventy-five",
-        176: "a hundred and seventy-six",
-        177: "a hundred and seventy-seven",
-        178: "a hundred and seventy-eight",
-        179: "a hundred and seventy-nine",
-        180: "a hundred and eighty",
-        181: "a hundred and eighty-one",
-        182: "a hundred and eighty-two",
-        183: "a hundred and eighty-three",
-        184: "a hundred and eighty-four",
-        185: "a hundred and eighty-five",
-        186: "a hundred and eighty-six",
-        187: "a hundred and eighty-seven",
-        188: "a hundred and eighty-eight",
-        189: "a hundred and eighty-nine",
-        190: "a hundred and ninety",
-    }
-    expected = words[len(registry.EXTRA)]
-    # exclude words embedded in the expected phrase itself: 114 spells
-    # "a hundred and fourteen", which legitimately contains the map's
-    # "fourteen" — only counts NOT part of the current phrase are stale
-    stale = {w for w in words.values() if w != expected and w not in expected}
-    for text in (entry_mod.__doc__, inspect.getsource(registry)):
-        # Scope the stale-word scan to the sentences that state the
-        # EXTRA-lane size (they all name the lane): round-5 shipped
-        # red because the scan matched "fifteen" in an unrelated
-        # rotation-history sentence (VERDICT r5 #3). Rotation-history
-        # counts are digits by convention; only the lane-size sentence
-        # spells its count, and only there can it go stale.
-        lane_sentences = [s for s in text.split(".") if "lane" in s.lower()]
-        assert any(re.search(rf"\b{expected}\b", s) for s in lane_sentences), (
-            f"no EXTRA-lane sentence spells out the lane size '{expected}'"
-        )
-        for s in lane_sentences:
-            for w in stale:
-                # \b…\b(?!-) so bare "twenty" doesn't false-match inside
-                # the hyphenated compounds ("twenty-four")
-                assert not re.search(rf"\b{w}\b(?!-)", s), (w, s)
-
-
 def test_sha2_keyed_dedup_matches_text_keyed_output(spark, sf_dir):
     # the sha2-fingerprint shuffle key is a pure plan optimization —
     # output must be row-identical to the naive groupBy(text)
@@ -1048,188 +957,53 @@ def test_survey_2c_table_matches_registry():
     assert [k for _, k in rows] == list(REGISTRY)
 
 
-def test_lane_counts_match_docs():
-    # VERDICT r3/r4 both flagged lane-count doc drift; this pins the
-    # counts the docstrings (__spark_entry__, registry, SURVEY §2C)
-    # cite. A rotation that changes a lane size must update ALL of
-    # those alongside this test.
-    from data_ingestion_s3_to_parquet_spark.plans.registry import (
-        BENCH_ONLY,
-        EXTRA,
-        REGISTRY,
-    )
+def test_registry_matches_golden():
+    # tests/golden/registry.json pins what the driver and the tools see:
+    # the queries() order, each oracle's text, BENCH_ONLY and the bench
+    # lanes. A lane rotation updates ORDER and this file together.
+    import hashlib
+    import json
+    from pathlib import Path
 
-    assert len(REGISTRY) == 50
-    assert len(EXTRA) == 185
-    assert len(BENCH_ONLY) == 7
-    # round-14 rotation: the twelve-lane promotion cohort grades
-    # immediately after ingest_parity — the MEASURED-oldest driver
-    # rows in the registry at the start of round 14 (the first
-    # twelve alphabetical of the 36-lane r6-row cohort) — followed
-    # by the thirteen round-13 first-timers that keep their graded
-    # slots (relational19), and eval_mrr. NEW round-14 operators
-    # prepend at position 1 as their waves land
-    # (never-graded-first), each demoting one r13-refreshed veteran
-    # one-for-one (see the relational20 wave comments).
-    assert list(REGISTRY)[1:27] == [
-        "metric_cuped", "rank_test_u", "fdr_bh",
-        "chisq_independence", "power_mde", "stream_srm",
-        "eval_pass_at_k", "survival_km", "tokenizer_vocab_overlap",
-        "fdr_holm", "sample_alloc_executed", "metric_did",
-        "eval_lang_confusion",
-        "cdc_apply", "data_expectations", "doc_fingerprint",
-        "fuzzy_match_strings", "higher_order_funcs",
-        "interleave_mix", "join_bloom_prefilter", "json_variant",
-        "knn_graph", "label_propagation", "lang_id",
-        "lm_unigram_score",
-        "eval_mrr",
-    ]
-    assert list(REGISTRY)[26:28] == [
-        "eval_mrr", "dedup_passages",
-    ]
-    assert list(REGISTRY)[-11:] == [
-        "scan_parquet", "project_filter", "filter_compound",
-        "scalar_funcs", "agg_rollup_cube", "agg_distinct",
-        "join_outer", "join_semi_anti",
-        "sort_limit_topk", "set_ops", "regexp_funcs",
-    ]
-    # the twelve round-14 demotees (the full r13 promotion cohort,
-    # via relational19.EXTRA_QUERIES) LEAD the EXTRA lane, ahead of
-    # the round-13 demotees (the eleven r12 single-green
-    # first-timers plus window_analytic, via
-    # relational18.EXTRA_QUERIES), ahead of the r12 demotee cohort
-    # (the seven r11 single-green first-timers first, then the eight
-    # r11-refreshed veterans, the r12 wave-2/3 join_broadcast /
-    # join_asof — relational17.EXTRA_QUERIES — and the wave-4/5
-    # dedup_containment / gini_concentration leading
-    # relational16's), ahead of the r10/r9 demotee cohorts
-    assert list(EXTRA)[:90] == [
-        "sample_size_calc", "survival_logrank",
-        "bootstrap_ci_quantile", "perm_test_diff", "stream_bootstrap",
-        "bootstrap_ci_diff", "srm_check", "eval_win_rate",
-        "metric_winsorized", "ngram_novelty", "eval_brier",
-        "eval_bradley_terry", "sample_alloc_neyman",
-        "perm_test_ratio", "bootstrap_ci_winsorized",
-        "corpus_prep", "decontaminate", "dedup_fuzzy",
-        "dedup_ngram_jaccard", "emb_centroids",
-        "map_in_pandas_tokens", "sample_split", "sim_topk",
-        "agg_hll_sketch", "agg_skew_salted", "ann_ivf_topk",
-        "array_map_json",
-        "eval_kripp_alpha_ordinal", "graph_community_profile",
-        "event_interarrival", "text_yule_k", "len_lognormal_fit",
-        "word_adaptation", "eval_qwk", "text_mattr",
-        "bootstrap_ci_mean", "event_interarrival_scale",
-        "bootstrap_ci_ratio", "window_analytic", "subquery_scalar",
-        "agg_percentile", "pivot", "join_skew_salted", "sql_frontend",
-        "agg_argminmax", "udaf_grouped", "join_null_safe",
-        "dedup_exact", "dedup_embedding", "dedup_components",
-        "join_inner", "join_range",
-        "graph_modularity", "text_readability",
-        "graph_clustering_coeff", "zipf_fit", "heaps_fit",
-        "eval_kripp_alpha", "event_burstiness",
-        "datetime_funcs", "seq_pack", "embedding_quantize",
-        "quality_gopher", "pii_redact", "media_frame_sample",
-        "agg_approx_quantile", "agg_group", "join_broadcast",
-        "join_asof",
-        "rolling_quantile", "schema_drift_report",
-        "dedup_threshold_sweep", "alert_rate_spike", "bpe_fertility",
-        "compaction_plan", "privacy_ldiv", "eval_regression",
-        "eval_mrr_scale",
-        "dedup_cluster_stats", "corr_spearman", "trend_linfit",
-        "anova_oneway", "rank_mannwhitney",
-        "dedup_containment", "gini_concentration",
-        "graph_assortativity", "eval_fleiss_kappa",
-        "quantile_weighted",
-        "eval_cohen_kappa", "privacy_tcloseness",
-    ]
-    assert "cms_counts" in EXTRA and "ngram_counts" in EXTRA
-    assert set(BENCH_ONLY) == {
-        "sim_join_lsh",
-        "knn_graph_lsh",
-        "dedup_components_lsh",
-        "dedup_semantic",
-        "lang_id_ngram",
-        "media_phash",
-        "dedup_passages_scale",  # r8: VERDICT r7 #7
-    }
-    # the multi-green veterans that stay graded
-    for k in ("stream_dedup",
-              "dedup_incremental",
-              "pipeline_fineweb", "dup_span_max"):
-        assert k in REGISTRY, k
-    # the graph family, session_paths, and ewma_smooth (all
-    # multi-green) demoted in the sixth-wave rotation: stay
-    # oracle-carrying EXTRA (bench flags intact on kcore/sssp)
-    for k in ("link_predict", "kcore_decompose", "graph_sssp",
-              "session_paths", "ewma_smooth", "emb_gram",
-              "lm_bigram_score", "jsonl_interop", "rank_fusion_rrf",
-              "sim_join_kmeans", "dedup_keep_best", "entropy_score",
-              "word_filter"):
-        assert k in EXTRA and k not in REGISTRY, k
-    # earlier-round demotees stay EXTRA with their green rows
-    demoted = {
-        "chunk_text", "basket_pairs", "period_growth", "ab_test_metrics",
-        "anomaly_zscore", "time_weighted_avg", "funnel_conversion",
-        "retention_cohort", "corpus_report",
-    }
-    assert demoted <= set(EXTRA)
-    assert not demoted & set(REGISTRY)
-    # every pre-final-rotation graded cohort stays graded (membership,
-    # not positions — the final rotation reordered the prefix; round 9
-    # demoted doc_winnow / inverted_index / changepoint_cusum /
-    # winnow_overlap, asserted at the EXTRA head above)
-    for k in (
-        "dedup_passages",
-        "stream_join_interval",
-        "chi2_contingency", "ann_two_stage",
-        "content_chunks", "corr_pearson",
-        "dsir_weights",
-        "token_budget_select",
-    ):
-        assert k in REGISTRY, k
-    # demoted cohorts from every earlier rotation stay EXTRA (each has
-    # at least one green driver row); agg_skew_salted / ann_ivf_topk /
-    # array_map_json / agg_hll_sketch left this cohort in the round-13
-    # promotion (asserted graded via the [1:27] prefix above)
-    # (the round-14 rotation re-promoted twelve of the historical r7
-    # demotees — cdc_apply, data_expectations, doc_fingerprint,
-    # fuzzy_match_strings, higher_order_funcs, interleave_mix,
-    # join_bloom_prefilter, json_variant, knn_graph,
-    # label_propagation, lang_id, lm_unigram_score — so they now
-    # live in REGISTRY, not EXTRA)
-    for k in (
-        # r7 wave-1/wave-2/wave-3 + post-wave-2 demotees
-        "sample_span_mask", "udf_scalar",
-        "window_range_interval", "profile_table",
-        "skyline_frontier",
-        "sim_join", "text_stats",
-        "tfidf_top_terms",
-        "quality_classifier", "multimodal_cols",
-        "stream_tumbling", "stream_sliding", "stream_session",
-        "sample_weighted",
-        "udtf_lateral", "resample_ffill",
-        "scd2_history",
-        "recursive_cte", "value_histogram",
-        "pagerank", "sample_stratified", "unpivot_stack",
-        "window_distribution", "text_normalize",
-        # r8 final-rotation demotees (green r7)
-        "freq_items_topk", "dedup_soft", "mix_weights", "strip_markup",
-        "ngram_counts", "merge_intervals", "markov_transitions",
-        "robust_stats", "shard_manifest", "batch_by_length",
-        "url_canonicalize", "cms_counts",
-    ):
-        assert k in EXTRA, k
-    for k in (
-        "cdc_apply", "data_expectations", "doc_fingerprint",
-        "fuzzy_match_strings", "higher_order_funcs",
-        "interleave_mix", "join_bloom_prefilter", "json_variant",
-        "knn_graph", "label_propagation", "lang_id",
-        "lm_unigram_score",
-    ):
-        assert k in REGISTRY, k
-    assert "winnow_overlap" in EXTRA  # r9 demotee (double-green r7+r8)
-    assert "window_distribution" in EXTRA
-    assert "text_normalize" in EXTRA
+    from data_ingestion_s3_to_parquet_spark.plans import registry
+
+    golden = json.loads((Path(__file__).parent / "golden" / "registry.json").read_text())
+    assert list(registry.queries()) == golden["queries"]
+    assert {
+        n: hashlib.sha256(s.encode()).hexdigest() for n, s in registry.oracle_sql().items()
+    } == golden["oracle_sha256"]
+    assert list(registry.BENCH_ONLY) == golden["bench_only"]
+    assert sorted(n for n, q in registry.LANES.items() if q.bench) == golden["bench"]
+
+
+def _fake_lane(name, oracle="SELECT 1"):
+    from data_ingestion_s3_to_parquet_spark.plans.spec import Query
+
+    return Query(name, lambda spark, sf_dir: None, oracle)
+
+
+@pytest.mark.parametrize(
+    "names, order, error",
+    [
+        ([("a", "SELECT 1"), ("a", "SELECT 2")], ("a",), "duplicate lane name"),
+        ([("a", "SELECT 1"), ("b", "SELECT 2")], ("a",), "missing from ORDER"),
+        ([("a", "SELECT 1")], ("a", "b"), "no lane"),
+        ([("a", "SELECT 1"), ("b", None)], ("a", "b"), "no oracle"),
+        ([("a", "SELECT 1")], ("a", "a"), "twice"),
+    ],
+)
+def test_check_lanes_rejects(names, order, error):
+    from data_ingestion_s3_to_parquet_spark.plans.registry import check_lanes
+
+    with pytest.raises(ValueError, match=error):
+        check_lanes([_fake_lane(n, o) for n, o in names], order)
+
+
+def test_check_lanes_indexes_oracle_and_bench_only_lanes():
+    from data_ingestion_s3_to_parquet_spark.plans.registry import check_lanes
+
+    lanes = [_fake_lane("a"), _fake_lane("b", None), _fake_lane("c")]
+    assert list(check_lanes(lanes, ("c", "a"))) == ["a", "b", "c"]
 
 
 def test_bench_stdout_line_fits_driver_tail_window():
@@ -1244,17 +1018,9 @@ def test_bench_stdout_line_fits_driver_tail_window():
     # headline queries can't silently re-break the contract.
     import json
 
-    from data_ingestion_s3_to_parquet_spark.plans.registry import (
-        BENCH_ONLY,
-        EXTRA,
-        REGISTRY,
-    )
+    from data_ingestion_s3_to_parquet_spark.plans.registry import LANES
 
-    names = [
-        n
-        for n, q in {**REGISTRY, **EXTRA, **BENCH_ONLY}.items()
-        if q.bench
-    ] + ["etl_scan_project_write"]
+    names = [n for n, q in LANES.items() if q.bench] + ["etl_scan_project_write"]
     line = json.dumps(
         {
             "metric": "headline_suite_seconds",
@@ -1282,19 +1048,15 @@ def test_bench_timing_order_is_canonical_and_warmup_pinned():
     # ~1.5x, and registry rotations used to reorder the suite every
     # round. The timing order must be (a) lexicographic and (b)
     # independent of dict insertion order; the fixed warm-up set must
-    # resolve against REGISTRY+EXTRA so rotations can't break it.
+    # resolve against LANES so rotations can't break it.
     import bench
-    from data_ingestion_s3_to_parquet_spark.plans.registry import (
-        EXTRA,
-        REGISTRY,
-    )
+    from data_ingestion_s3_to_parquet_spark.plans.registry import LANES
 
     names = ["zeta", "alpha", "mid"]
     assert bench.canonical_order(names) == sorted(names)
     assert bench.canonical_order(reversed(names)) == sorted(names)
-    merged = {**REGISTRY, **EXTRA}
     for lane in bench.WARMUP_LANES:
-        assert lane in merged, f"warm-up lane {lane} left the registry"
+        assert lane in LANES, f"warm-up lane {lane} left the registry"
     # the main loop must consume the canonical order, not dict order
     import inspect
 
@@ -2281,14 +2043,14 @@ def test_no_registry_oracle_emits_hugeint(sf_dir):
     _sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent.parent))
     import duckdb
 
-    from data_ingestion_s3_to_parquet_spark.plans.registry import EXTRA
+    from data_ingestion_s3_to_parquet_spark.plans.registry import LANES
     from data_ingestion_s3_to_parquet_spark.sources.catalog import TABLES
 
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     offenders = {}
-    for name, q in {**REGISTRY, **EXTRA}.items():
+    for name, q in LANES.items():
         if q.oracle is None:
             continue
         # relation API: resolves the full output schema with REAL

@@ -51,18 +51,15 @@ def main() -> int:
 
     from data_ingestion_s3_to_parquet_spark.plans.registry import (
         EXTRA,
+        LANES,
+        ORDER,
         REGISTRY,
     )
 
-    lanes = {
-        "graded": dict(REGISTRY),
-        "extra": dict(EXTRA),
-        "all": {**REGISTRY, **EXTRA},
-    }[args.lane]
-    names = args.names or list(lanes)
+    names = args.names or list({"graded": REGISTRY, "extra": EXTRA, "all": ORDER}[args.lane])
     failed = []
     for name in names:
-        q = lanes.get(name) or {**REGISTRY, **EXTRA}[name]
+        q = LANES[name]
         t0 = time.perf_counter()
         try:
             df = q.fn(spark, args.sf)

@@ -29,11 +29,7 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from data_ingestion_s3_to_parquet_spark.plans.registry import (  # noqa: E402
-    BENCH_ONLY,
-    EXTRA,
-    REGISTRY,
-)
+from data_ingestion_s3_to_parquet_spark.plans.registry import LANES  # noqa: E402
 
 # Queries where a layout-dependent implementation is the natural bug:
 # value-derived sampling, greedy packing, window ranks under ties,
@@ -103,10 +99,9 @@ DEFAULT_NAMES = [
 
 def _values(spark: SparkSession, names: list[str], sf_dir: str, parts: int):
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    merged = {**REGISTRY, **EXTRA, **BENCH_ONLY}
     out = {}
     for n in names:
-        rows = merged[n].fn(spark, sf_dir).collect()
+        rows = LANES[n].fn(spark, sf_dir).collect()
         # None-safe total order: NULL cells sort behind values of any
         # type (lanes legitimately emit NULL — undefined rho/kappa/F)
         out[n] = sorted(

@@ -29,16 +29,9 @@ from pyspark.sql.types import ArrayType, MapType, StructType
 
 sys.path.insert(0, ".")
 
-from data_ingestion_s3_to_parquet_spark.plans.registry import (  # noqa: E402
-    EXTRA,
-    REGISTRY,
-)
+from data_ingestion_s3_to_parquet_spark.plans.registry import LANES, ORDER  # noqa: E402
 from data_ingestion_s3_to_parquet_spark.session import get_spark  # noqa: E402
 from data_ingestion_s3_to_parquet_spark.sources.catalog import TABLES  # noqa: E402
-
-# Graded lane + oracle-carrying ungraded extras: the local replica
-# checks BOTH so a query moved out of the graded 50 keeps its evidence.
-ALL_QUERIES = {**REGISTRY, **EXTRA}
 
 
 def norm_cell(v) -> str:
@@ -151,10 +144,12 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = get_spark("oracle-check")
-    names = args.names or list(ALL_QUERIES)
+    # every oracle lane, graded or EXTRA, so a lane moved out of the
+    # graded 50 keeps its evidence
+    names = args.names or list(ORDER)
     failures = []
     for name in names:
-        q = ALL_QUERIES[name]
+        q = LANES[name]
         t0 = time.time()
         try:
             sdf = q.fn(spark, args.sf)

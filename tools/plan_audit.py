@@ -25,11 +25,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-from data_ingestion_s3_to_parquet_spark.plans.registry import (  # noqa: E402
-    BENCH_ONLY,
-    EXTRA,
-    REGISTRY,
-)
+from data_ingestion_s3_to_parquet_spark.plans.registry import LANES  # noqa: E402
 from data_ingestion_s3_to_parquet_spark.session import get_spark  # noqa: E402
 
 
@@ -68,8 +64,7 @@ def main() -> None:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    queries = {**REGISTRY, **EXTRA, **BENCH_ONLY}
-    names = args.names or list(queries)
+    names = args.names or list(LANES)
 
     spark = get_spark("plan_audit")
     spark.sparkContext.setLogLevel("ERROR")
@@ -77,7 +72,7 @@ def main() -> None:
     hdr = ("query", "exch", "bcast", "smj/shj", "wgl", "topk", "py", "pushed")
     print("%-24s %5s %6s %8s %4s %5s %3s %7s" % hdr)
     for name in names:
-        q = queries[name]
+        q = LANES[name]
         try:
             a = audit(q.fn(spark, args.sf))
             print(

@@ -43,11 +43,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from data_ingestion_s3_to_parquet_spark.plans.registry import (  # noqa: E402
-    BENCH_ONLY,
-    EXTRA,
-    REGISTRY,
-)
+from data_ingestion_s3_to_parquet_spark.plans.registry import LANES  # noqa: E402
 from data_ingestion_s3_to_parquet_spark.sources.catalog import (  # noqa: E402
     TABLES,
     load_table,
@@ -155,12 +151,11 @@ def main() -> None:
     from data_ingestion_s3_to_parquet_spark.session import get_spark
 
     spark = get_spark("scale-probe", shuffle_partitions=32)
-    merged = {**REGISTRY, **EXTRA, **BENCH_ONLY}
     scaled = _build_scaled(spark, args.sf, args.factor)
 
     ok = True
     for n in names:
-        fn = merged[n].fn
+        fn = LANES[n].fn
         t1 = _timed(fn, spark, args.sf)
         tk = _timed(fn, spark, scaled)
         e1, b1 = _plan_counts(fn(spark, args.sf))
