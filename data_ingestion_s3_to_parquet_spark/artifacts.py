@@ -139,8 +139,11 @@ def persisted_frame(
     try:
         with open(meta) as fh:
             current = json.load(fh).get("token")
-    except Exception:
-        pass
+    except (OSError, ValueError, AttributeError) as e:
+        # no pointer yet, or a torn/foreign one: every generation is
+        # then a sweep candidate once past the grace period
+        _log.debug("artifact %s/%s: no committed pointer (%s: %s)",
+                   namespace, key, type(e).__name__, e)
     if os.path.isdir(base):
         import shutil
 

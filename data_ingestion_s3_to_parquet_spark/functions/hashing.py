@@ -11,9 +11,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def seeded_hash(col: Column, seed: int) -> Column:
-    """64-bit deterministic hash of ``col`` under an integer seed."""
-    return F.xxhash64(F.lit(seed), col)
+def _q(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def minhash_signature(
@@ -25,18 +25,17 @@ def minhash_signature(
     Implementation: one explode of the shingle array, then a single
     grouped aggregation computing all ``k`` minima at once (one shuffle
     by id, map-side partial mins — scales linearly in total shingle
-    count; never k explodes).
+    count; never k explodes). Each expression is one SQL string (see
+    :func:`simhash_signature`).
 
     Returns ``id_col, sig array<bigint>(k)``.
     """
-    exploded = df.select(id_col, F.explode(shingles_col).alias("_sh"))
-    mins = [
-        F.min(seeded_hash(F.col("_sh"), seed)).alias(f"_h{seed}")
-        for seed in range(k)
-    ]
-    agg = exploded.groupBy(id_col).agg(*mins)
-    return agg.select(
-        id_col, F.array(*[F.col(f"_h{s}") for s in range(k)]).alias("sig")
+    exploded = df.selectExpr(_q(id_col), f"explode({_q(shingles_col)}) AS _sh")
+    agg = exploded.groupBy(id_col).agg(
+        *[F.expr(f"min(xxhash64({s}, _sh)) AS _h{s}") for s in range(k)]
+    )
+    return agg.selectExpr(
+        _q(id_col), f"array({', '.join(f'_h{s}' for s in range(k))}) AS sig"
     )
 
 
@@ -50,18 +49,14 @@ def lsh_bands(
     candidate-bucket key. Two docs sharing any (band_idx, band_hash)
     bucket are near-dup candidates (standard LSH banding).
     """
-    entries = []
-    for b in range(bands):
-        band_slice = F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-        entries.append(
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.xxhash64(F.lit(b), band_slice).alias("band_hash"),
-            )
-        )
-    return sig_df.select(
-        id_col, F.explode(F.array(*entries)).alias("_band")
-    ).select(id_col, "_band.band_idx", "_band.band_hash")
+    entries = ", ".join(
+        f"struct({b} AS band_idx, "
+        f"xxhash64({b}, slice(sig, {b * rows_per_band + 1}, {rows_per_band})) AS band_hash)"
+        for b in range(bands)
+    )
+    return sig_df.selectExpr(_q(id_col), f"explode(array({entries})) AS _band").selectExpr(
+        _q(id_col), "_band.band_idx", "_band.band_hash"
+    )
 
 
 # Packed-counter layout for simhash_signature: counts for _PACK
@@ -95,43 +90,39 @@ def simhash_signature(
     (disjoint, so plain integer addition accumulates each counter
     independently), and each input row contributes via ONE
     multiply-spread — ``((h >>> g) & 7) * _SPREAD & _SLOTS`` fans the
-    three adjacent hash bits into their slots in four ALU ops. That
-    replaces the original 64 ``when``-branch sums (which pushed the
-    generated aggregate past the JIT's huge-method threshold:
-    measured 2.49 s at sf0.1) with 22 branch-free ones (0.89 s,
-    bit-identical output; the count-only floor of the same explode +
-    shuffle is 0.48 s). The unpack + threshold runs on the one row
-    per document the aggregation leaves.
+    three adjacent hash bits into their slots, keeping the generated
+    aggregate to 22 branch-free sums. The unpack + threshold runs on
+    the one row per document the aggregation leaves.
+
+    The 22 sums and the 64-term unpack are each passed to the JVM as
+    one SQL string: as ``Column`` calls they take about 770 calls, and
+    PySpark 4.1 records each call's Python call site at about 10
+    gateway round trips, so the build alone would cost ~10,000 py4j
+    commands and over a second of driver time, against a few hundred
+    commands as SQL. Catalyst plans the same expressions either way.
 
     Returns ``id_col, sim bigint``.
     """
-    ex = df.select(id_col, F.explode(shingles_col).alias("_sh")).select(
-        id_col, F.xxhash64(F.lit(0), F.col("_sh")).alias("_h")
+    ex = df.selectExpr(_q(id_col), f"explode({_q(shingles_col)}) AS _sh").selectExpr(
+        _q(id_col), "xxhash64(0, _sh) AS _h"
     )
-    one = F.lit(1).cast("long")
-    seven = F.lit(7).cast("long")
-    spread = F.lit(_SIMHASH_SPREAD).cast("long")
-    slots = F.lit(_SIMHASH_SLOTS).cast("long")
-    packs = []
-    for g in range(0, 64, _SIMHASH_PACK):
-        x = (
-            F.shiftrightunsigned(F.col("_h"), g) if g else F.col("_h")
-        ).bitwiseAND(seven)
-        packs.append(F.sum((x * spread).bitwiseAND(slots)).alias(f"_p{g}"))
-    agg = ex.groupBy(id_col).agg(F.count("*").alias("_n"), *packs)
-    mask = F.lit((1 << _SIMHASH_SLOT) - 1).cast("long")
-    sim = F.lit(0).cast("long")
-    for g in range(0, 64, _SIMHASH_PACK):
-        for k, j in enumerate(range(g, min(g + _SIMHASH_PACK, 64))):
-            cnt = F.shiftrightunsigned(F.col(f"_p{g}"), _SIMHASH_SLOT * k).bitwiseAND(
-                mask
-            )
-            sim = sim.bitwiseOR(
-                F.when(
-                    cnt * 2 > F.col("_n"), F.shiftleft(one, j)
-                ).otherwise(F.lit(0).cast("long"))
-            )
-    return agg.select(id_col, sim.alias("sim"))
+    groups = range(0, 64, _SIMHASH_PACK)
+    packs = [
+        F.expr(
+            f"sum(({f'shiftrightunsigned(_h, {g})' if g else '_h'} & 7L)"
+            f" * {_SIMHASH_SPREAD}L & {_SIMHASH_SLOTS}L) AS _p{g}"
+        )
+        for g in groups
+    ]
+    agg = ex.groupBy(id_col).agg(F.expr("count(*) AS _n"), *packs)
+    mask = (1 << _SIMHASH_SLOT) - 1
+    bits = " | ".join(
+        f"CASE WHEN (shiftrightunsigned(_p{g}, {_SIMHASH_SLOT * k}) & {mask}L) * 2 > _n"
+        f" THEN shiftleft(1L, {j}) ELSE 0L END"
+        for g in groups
+        for k, j in enumerate(range(g, min(g + _SIMHASH_PACK, 64)))
+    )
+    return agg.selectExpr(_q(id_col), f"0L | {bits} AS sim")
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -428,30 +428,17 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # double signature build runs both sides in parallel and costs
     # less than serializing the DAG through a cache materialization.
     sig = simhash_signature(sh, "doc_id", "sh")
-    slices = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("blk_idx"),
-                F.shiftrightunsigned("sim", 16 * i)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("blk_val"),
-            )
-            for i in range(4)
-        ]
+    slices = ", ".join(
+        f"struct({i} AS blk_idx, shiftrightunsigned(sim, {16 * i}) & 65535 AS blk_val)"
+        for i in range(4)
     )
     blocked = (
-        sig.select("doc_id", "sim", F.explode(slices).alias("s"))
-        .select("doc_id", "sim", F.col("s.blk_idx"), F.col("s.blk_val"))
+        sig.selectExpr("doc_id", "sim", f"explode(array({slices})) AS s")
+        .selectExpr("doc_id", "sim", "s.blk_idx", "s.blk_val")
         .hint("shuffle_hash")  # explode-derived: never broadcast
     )
-    x = blocked.select(
-        F.col("doc_id").alias("doc_a"), F.col("sim").alias("sim_a"),
-        "blk_idx", "blk_val",
-    )
-    y = blocked.select(
-        F.col("doc_id").alias("doc_b"), F.col("sim").alias("sim_b"),
-        "blk_idx", "blk_val",
-    )
+    x = blocked.selectExpr("doc_id AS doc_a", "sim AS sim_a", "blk_idx", "blk_val")
+    y = blocked.selectExpr("doc_id AS doc_b", "sim AS sim_b", "blk_idx", "blk_val")
     return (
         x.join(y, ["blk_idx", "blk_val"])
         .where(F.col("doc_a") < F.col("doc_b"))

@@ -26,8 +26,10 @@ chosen to be correct on a 1000-executor cluster:
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -120,8 +122,11 @@ def _ship_package(spark: SparkSession) -> None:
                 zf.write(full, rel)
     try:
         sc.addPyFile(zpath)
-    except Exception:  # pragma: no cover - e.g. same file re-added
-        pass
+    except Exception as e:  # pragma: no cover - e.g. same file re-added
+        _log.warning(
+            "could not ship %s to executors (%s: %s); Python UDFs may fail "
+            "to import it there", zpath, type(e).__name__, e,
+        )
     _SHIPPED_APPS.add(app_id)
 
 
@@ -159,3 +164,25 @@ def get_spark(
     for k, v in {**RUNTIME_CONFS, **(extra_confs or {})}.items():
         builder = builder.config(k, v)
     return tune(builder.getOrCreate())
+
+
+@contextlib.contextmanager
+def gateway_commands(spark: SparkSession) -> Iterator[list[int]]:
+    """Count the py4j commands the driver sends to the JVM inside the
+    block, from any thread: ``with gateway_commands(spark) as n: ...``,
+    then read ``n[0]``. PySpark pays DataFrame construction in gateway
+    round trips per API call, so for a block that only builds
+    DataFrames this is a deterministic measure of its driver cost."""
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent = [0]
+
+    def counting(*args, **kwargs):
+        sent[0] += 1
+        return real(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        client.send_command = real

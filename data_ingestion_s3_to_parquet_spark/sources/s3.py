@@ -28,7 +28,7 @@ try:  # pragma: no cover - exercised only where boto3 exists
     import boto3  # type: ignore
 
     HAVE_BOTO3 = True
-except Exception:  # pragma: no cover
+except ImportError:  # pragma: no cover
     boto3 = None
     HAVE_BOTO3 = False
 

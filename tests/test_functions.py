@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import hashlib
+import json
 import math
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +23,7 @@ from data_ingestion_s3_to_parquet_spark.functions.text import (
     with_shingles,
 )
 from data_ingestion_s3_to_parquet_spark.functions.vectors import cosine, dot, l2_norm
+from data_ingestion_s3_to_parquet_spark.session import gateway_commands
 
 
 def test_dot_and_norm(spark):
@@ -126,3 +130,59 @@ def test_lang_markers(spark):
     )
     got = [r.p for r in df.select(lang_by_markers(F.col("text")).alias("p")).collect()]
     assert got == ["en", "es", "und"]
+
+
+def _sorted_rows_sha256(df) -> dict:
+    rows = sorted(json.dumps(list(r)) for r in df.collect())
+    return {"rows": len(rows), "sha256": hashlib.sha256("\n".join(rows).encode()).hexdigest()}
+
+
+def _sketch_digests(spark, sf_dir: str) -> dict:
+    """Row count and sha256 of the sorted collected rows of each sketch
+    and of the two rows-only sketch dedup lanes at ``sf_dir``."""
+    from data_ingestion_s3_to_parquet_spark.operators import dedup
+
+    sh = dedup._shingled(spark, sf_dir)
+    sig = minhash_signature(sh, "doc_id", "sh", k=16)
+    frames = {
+        "minhash_signature": sig,
+        "lsh_bands": lsh_bands(sig, "doc_id", bands=4, rows_per_band=4),
+        "simhash_signature": simhash_signature(sh, "doc_id", "sh"),
+        "q_dedup_minhash_lsh": dedup.q_dedup_minhash_lsh(spark, sf_dir),
+        "q_dedup_simhash": dedup.q_dedup_simhash(spark, sf_dir),
+    }
+    return {name: _sorted_rows_sha256(df) for name, df in frames.items()}
+
+
+def test_sketches_match_golden(spark, sf_dir):
+    # tests/golden/sketches.json pins the exact bits of the sketches and
+    # of the two rows-only dedup lanes the oracle cannot check. Any
+    # change to a seed, packing constant or expression shows up here.
+    golden = json.loads((Path(__file__).parent / "golden" / "sketches.json").read_text())
+    for sf in ("sf0.001", "sf0.01"):
+        assert _sketch_digests(spark, str(Path(sf_dir).parent / sf)) == golden[sf], sf
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda sh, sig: minhash_signature(sh, "doc_id", "sh", k=16),
+        lambda sh, sig: simhash_signature(sh, "doc_id", "sh"),
+        lambda sh, sig: lsh_bands(sig, "doc_id", bands=4, rows_per_band=4),
+    ],
+    ids=["minhash_signature", "simhash_signature", "lsh_bands"],
+)
+def test_sketch_builders_stay_within_gateway_budget(spark, build):
+    # Each PySpark Column call costs ~10 py4j round trips (call-site
+    # capture), so a builder that chains hundreds of them spends seconds
+    # on the driver before any job runs. Building a sketch must stay a
+    # few hundred JVM calls, not ten per operator.
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
+    )
+    sh = with_shingles(docs, "text", "sh", 3).select("doc_id", "sh")
+    sig = minhash_signature(sh, "doc_id", "sh", k=16)
+    build(sh, sig)  # warm-up: first-use imports and JVM class loading
+    with gateway_commands(spark) as sent:
+        build(sh, sig)
+    assert sent[0] <= 200, sent[0]

@@ -9,6 +9,11 @@ check them in one command instead of reading 65 `.explain` dumps:
 - whether the parquet scan carries pushed filters
 - python-boundary nodes (ArrowEvalPythonUDTF / MapInPandas / pandas
   UDF evals) — the deliberate Arrow crossings
+- ``gw``: py4j gateway commands sent while building the lane
+  (``q.fn(spark, sf)``) — driver-side construction cost, since PySpark
+  pays ~10 round trips per ``Column`` call. Exact for a build that runs
+  no job; a build that collects or checkpoints also counts that job's
+  traffic, which varies by ~10% between runs
 
 Usage::
 
@@ -26,7 +31,10 @@ import sys
 sys.path.insert(0, ".")
 
 from data_ingestion_s3_to_parquet_spark.plans.registry import LANES  # noqa: E402
-from data_ingestion_s3_to_parquet_spark.session import get_spark  # noqa: E402
+from data_ingestion_s3_to_parquet_spark.session import (  # noqa: E402
+    gateway_commands,
+    get_spark,
+)
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -69,14 +77,16 @@ def main() -> None:
     spark = get_spark("plan_audit")
     spark.sparkContext.setLogLevel("ERROR")
 
-    hdr = ("query", "exch", "bcast", "smj/shj", "wgl", "topk", "py", "pushed")
-    print("%-24s %5s %6s %8s %4s %5s %3s %7s" % hdr)
+    hdr = ("query", "exch", "bcast", "smj/shj", "wgl", "topk", "py", "pushed", "gw")
+    print("%-24s %5s %6s %8s %4s %5s %3s %7s %6s" % hdr)
     for name in names:
         q = LANES[name]
         try:
-            a = audit(q.fn(spark, args.sf))
+            with gateway_commands(spark) as gw:
+                df = q.fn(spark, args.sf)
+            a = audit(df)
             print(
-                "%-24s %5d %6d %8d %4d %5d %3d %7d"
+                "%-24s %5d %6d %8d %4d %5d %3d %7d %6d"
                 % (
                     name,
                     a["exchanges"],
@@ -86,6 +96,7 @@ def main() -> None:
                     a["topk"],
                     a["python"],
                     a["pushed"],
+                    gw[0],
                 )
             )
         except Exception as exc:  # pragma: no cover - diagnostic tool
