@@ -8,31 +8,35 @@ Runs every ``bench=True`` registry query against
      "queries": {"q": min_sec, ...}, "sf": 0.1}
 
 ``queries`` keeps the driver's name→seconds contract (min of the
-timed runs); the min/median spread of the same runs is written to a
-sidecar file ``BENCH_SPREAD.json`` next to this script — NOT onto the
-stdout line, because the driver captures only a bounded tail of stdout
-and round 7's inline spread pushed ``"value"`` out of the window
-(``BENCH_r07.json`` ``"parsed": null``). The spread exists so
-round-over-round comparisons can separate ambient-load drift from
-real plan damage (VERDICT r6 #3: five untouched queries drifted
-+20-30% in lockstep in round 6 — and indeed round 7's first run
-measured the "regressed" ``dedup_components_lsh`` back at its round-5
-time with no code change; min-vs-med gap is the noise signature).
+timed runs). Everything else goes to the sidecar ``BENCH_SPREAD.json``
+next to this script, NOT onto the stdout line: the bench's caller
+captures only a bounded tail of stdout, and a longer line pushes
+``"value"`` out of that window. The sidecar holds:
+
+- ``spread``: min and median of each lane's timed runs;
+- ``layers``: each lane's jobs, stages and tasks in its last timed
+  run, read from Spark's status store under a job group named after
+  the lane (:func:`lane_counts`). These counts do not move with host
+  load, so a change in them, not in wall time, says a lane's plan
+  changed. ``stages`` and ``tasks`` include skipped stages (a shuffle
+  whose output an earlier job of the run already wrote), so they are
+  not comparable with perfbench's ``operators.stages``, which counts
+  completed stages only;
+- ``artifact_build_sec``: the fresh, timed build of each persisted
+  derived table, done before any timed lane so lane times are
+  query-only.
 
 Each query is fully materialized through the ``noop`` sink (forces
 end-to-end execution including shuffles, without paying sink I/O or
-driver collection). Each query gets one untimed warm-up run before
-the timed runs (three; five for sub-second lanes — VERDICT r14 #2),
-so numbers reflect steady state rather than per-plan codegen
-compilation or a stray GC pause (fixed costs that vanish at scale). ``spark.catalog.clearCache()`` runs before EVERY run
-(warm-up and timed): any operator may ``.cache()`` a shared subtree,
-and Spark's CacheManager matches canonicalized plans — so without the
+driver collection). Each query gets one untimed warm-up run and then
+five timed runs, so numbers reflect steady state rather than per-plan
+codegen compilation or a stray GC pause (fixed costs that vanish at
+scale). ``spark.catalog.clearCache()`` runs before EVERY run (warm-up
+and timed): any operator may ``.cache()`` a shared subtree, and
+Spark's CacheManager matches canonicalized plans — so without the
 clear, the warm-up would populate a cache the timed runs silently
 read, and the timing would exclude the dominant build. With it, "no
-run is ever faster than the real plan" holds. (Round 7 removed the
-dedup-family caches outright after the stage profile showed each one
-a net loss — see ``operators/dedup.py`` — but the clear stays as a
-guard for the rest of the registry.)
+run is ever faster than the real plan" holds.
 """
 
 from __future__ import annotations
@@ -40,8 +44,9 @@ from __future__ import annotations
 import json
 import os
 import re
-import statistics
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -49,29 +54,50 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from data_ingestion_s3_to_parquet_spark.plans.registry import LANES
 from data_ingestion_s3_to_parquet_spark.session import get_spark
 
+TIMED_RUNS = 5
+
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def lane_counts(sc, group: str) -> dict[str, int]:
+    """Jobs, stages and tasks run under job group ``group``; stages
+    and tasks include skipped ones (a shuffle an earlier job of the
+    run already wrote). Read from each job's totals in the status
+    store, not from per-stage records: past ``spark.ui.retainedStages``
+    stages the store evicts skipped stages first, so
+    ``statusTracker().getStageInfo`` of a skipped stage can be None
+    mid-lane. The store is fed asynchronously by the listener bus, so
+    the bus is drained first. Read a group soon after its jobs ran:
+    the store keeps only ``spark.ui.retainedJobs`` jobs."""
+    jvm_sc = sc._jsc.sc()
+    jvm_sc.listenerBus().waitUntilEmpty()
+    jobs = [
+        jvm_sc.statusStore().job(j)
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    ]
+    return {
+        "jobs": len(jobs),
+        "stages": sum(j.stageIds().size() for j in jobs),
+        "tasks": sum(j.numCompletedTasks() + j.numSkippedTasks() for j in jobs),
+    }
+
+
 # Fixed untimed warm-up lanes run before ANY timing: a scan-shaped,
 # a join-shaped, and an agg-shaped plan, so JVM/JIT/codegen/shuffle
 # machinery is warm before the first timed lane regardless of which
-# lane happens to sit at the suite head (VERDICT r11 #5: agg_group /
-# join_inner / join_range inflated 1.29-1.48x purely by moving to the
-# head of the suite after a rotation — position-induced, not plan
-# damage). Looked up in registry.LANES so rotations never break
-# the warm-up.
+# lane happens to sit at the suite head (lanes at the head used to
+# read up to ~1.5x slow purely from position). Looked up in
+# registry.LANES so registry reorders never break the warm-up.
 WARMUP_LANES = ("scan_parquet", "join_inner", "agg_group")
 
 
 def canonical_order(names) -> list:
     """The pinned timing order: lexicographic by lane name,
-    INDEPENDENT of registry (grading) order — rotations move lanes
-    between graded/EXTRA and reorder the registry every round, and
-    r11 showed suite position shifts lane timings by up to ~1.5x.
-    With a canonical order, per-lane corridors stay comparable
-    round-over-round (VERDICT r11 #5)."""
+    INDEPENDENT of registry (grading) order, because suite position
+    shifts lane timings by up to ~1.5x; a fixed order keeps each
+    lane's timings comparable from one run of the suite to the next."""
     return sorted(names)
 
 
@@ -81,24 +107,17 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
 
     bench_queries = {n: q for n, q in LANES.items() if q.bench}
 
-    # Persisted-artifact setup pass (VERDICT r14 #2/#5): the six
-    # fingerprint-keyed derived tables (SCALE.md §30) are deleted and
-    # rebuilt FRESH here, timed, and reported in the sidecar as
-    # ``artifact_build_sec`` — so the lanes that consume them
-    # (pagerank, label_propagation, kcore_decompose, graph_sssp,
-    # dedup_fuzzy, dedup_semantic, quality_classifier, ...) are
-    # readable as query-only by construction, with the end-to-end
-    # build cost (compute + parquet write + checksum) on the record
-    # next to them instead of hidden outside the timed region. The
-    # stdout contract is unchanged — this runs BEFORE any timed lane
-    # and reports only to BENCH_SPREAD.json.
-    import shutil
-    import tempfile
-
+    # Persisted-artifact setup pass: the six fingerprint-keyed derived
+    # tables (SCALE.md §30) are deleted and rebuilt FRESH here, timed,
+    # so the lanes that consume them (pagerank, graph_sssp,
+    # dedup_fuzzy, quality_classifier, ...) are query-only by
+    # construction and the build cost (compute + parquet write +
+    # checksum) is on the record next to them.
     from data_ingestion_s3_to_parquet_spark.operators import (
         dedup as _dedup,
         graph as _graph,
@@ -119,110 +138,56 @@ def main() -> None:
             os.path.join(tempfile.gettempdir(), f"spark_graft_{ns}"),
             ignore_errors=True,
         )
-        spark.sparkContext.setJobDescription(f"artifact build: {ns}")
+        sc.setJobDescription(f"artifact build: {ns}")
         t0 = time.perf_counter()
         helper(spark, sf_dir)  # persisted_frame builds eagerly
         artifact_build_sec[ns] = round(time.perf_counter() - t0, 3)
-    spark.sparkContext.setJobDescription(None)
+    sc.setJobDescription(None)
 
     # warm-up: JVM/codegen/parquet-footer caches AND shuffle/join/agg
-    # machinery (looked up in LANES so the warm-up survives graded/EXTRA
-    # rotations of any warm-up lane; see WARMUP_LANES)
+    # machinery (see WARMUP_LANES)
     for wname in WARMUP_LANES:
         spark.catalog.clearCache()
         materialize(LANES[wname].fn(spark, sf_dir))
 
-    # Per-query: one warm-up run, then the timed runs (3, or 5 when
-    # the warm-up reads sub-second — see below). Warm
-    # steady-state is the honest 100 TB proxy — whole-stage-codegen
-    # compilation (1-3s per distinct plan) is a fixed cost amortized
+    # Per lane: one untimed warm-up run, then TIMED_RUNS timed runs.
+    # Warm steady state is the honest 100 TB proxy: whole-stage-codegen
+    # compilation (1-3 s per distinct plan) is a fixed cost amortized
     # over minutes of execution at scale, but at sf0.1 it would be
-    # 3-5x the actual query time and would drown real regressions.
-    # Min of the timed runs is the headline (single runs showed rare
-    # 5-10x outliers from JIT/GC pauses in the shared local JVM; min
-    # is the steady-state estimator robust to those while staying
-    # honest — no run is ever faster than the real plan, see module
-    # docstring on clearCache); the median rides along in ``spread``
-    # so a wide min-med gap flags ambient noise (VERDICT r6 #3).
-    # Heavy-lane corridor (VERDICT r13 #2): the expensive iterative
-    # lanes oscillated 3.2->4.4 s across r12/r13 on unchanged code
-    # while the trivial corridor read clean — their wall time is
-    # dominated by per-round fixed costs (checkpoint/scheduling jobs
-    # on small frames), which track JVM/JIT warmth, not CPU load, so
-    # the trivial-lane index cannot vouch for them. Their inflation is
-    # reported against clean-host floors SEPARATELY below (kept out of
-    # the ambient median on purpose: folding multi-second iterative
-    # lanes into the trivial-lane index would let heavy-lane JVM noise
-    # masquerade as host load and mask real regressions). Floors are
-    # clean-host 32-core mins of the CURRENT code; each re-floor is
-    # recorded here and the values are published in the sidecar
-    # (heavy_corridor_floors) so the inflation series stays readable
-    # across rounds (ADVICE r14). Defined before the timing loop
-    # because corridor lanes also get the 5-run protocol.
-    heavy_corridors = {
-        # re-floored r15: the fused hash-min round (1 join/round) +
-        # the bounded driver solve of collapsed residuals took the
-        # clean min from ~3.2 to 1.59 (interleaved A/B) / 1.79
-        # (full-suite run); floor sits under both
-        "dedup_components": 1.55,
-        # re-floored r15: concurrent method-branch builds (guide
-        # §2.6) took the clean min from ~2.9 to 2.07 (A/B) / 2.23
-        # (full-suite)
-        "dedup_fuzzy": 2.0,
-        # re-floored r15: closing runs read 0.94-1.0 after the r14
-        # loop-frame sizing settled; the r14 floor (1.05) sat above
-        # the clean min
-        "graph_sssp": 0.9,
-        # added r15 (VERDICT r14 #2): the lanes whose r14 driver
-        # readings diverged most between windows on unchanged code.
-        # dedup_ngram_jaccard's same-code window spread is 2.2-3.5 s
-        # (measured this round, plan identical); its floor is the
-        # interleaved-A/B clean min
-        # dedup_semantic re-floored after the r15 branch-overlap
-        # change (clean bench read 1.50)
-        "dedup_semantic": 1.45,
-        "dedup_passages": 1.4,
-        "dedup_ngram_jaccard": 2.1,
-    }
-
-    # Sub-second lanes AND the heavy-corridor lanes get FIVE timed
-    # runs instead of three (VERDICT r14 #2): on this host min-of-3
-    # is not noise-robust below ~1 s (same-code swings up to 3.7×
-    # across windows), and the corridor lanes are by definition the
-    # ones whose window noise has repeatedly read as regression. Two
-    # extra runs shrink the min's variance at a bounded wall cost.
-    # The warm-up run (untimed before, now timed only to pick the
-    # count) decides; the headline stays min-of-the-timed-runs.
+    # 3-5x the actual query time. Min of the timed runs is the
+    # headline (single runs show rare 5-10x JIT/GC outliers in the
+    # shared local JVM); the median rides along in ``spread``. Each
+    # run gets its own job group so the counts read the last timed run
+    # alone.
     timings: dict[str, float] = {}
     spread: dict[str, dict[str, float]] = {}
+    layers: dict[str, dict[str, int]] = {}
     for name in canonical_order(bench_queries):
         q = bench_queries[name]
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        materialize(q.fn(spark, sf_dir))
-        warm_sec = time.perf_counter() - t0
-        n_timed = 5 if (warm_sec < 1.0 or name in heavy_corridors) else 3
-        runs: list[float] = []
-        for _ in range(n_timed):
+
+        def run(i: int) -> float:
+            sc.setJobGroup(f"{name}#{i}", name)
             spark.catalog.clearCache()
             t0 = time.perf_counter()
             materialize(q.fn(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        runs.sort()
+            return time.perf_counter() - t0
+
+        run(0)  # untimed warm-up
+        runs = sorted(run(i) for i in range(1, TIMED_RUNS + 1))
+        layers[name] = lane_counts(sc, f"{name}#{TIMED_RUNS}")
         timings[name] = round(runs[0], 3)
         spread[name] = {
             "min": round(runs[0], 3),
             "med": round(runs[len(runs) // 2], 3),
-            "n_runs": n_timed,
+            "n_runs": TIMED_RUNS,
         }
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setJobDescription(None)
 
     # the reference's canonical workload: scan -> project -> parquet
     # write (real sink I/O, not noop), per SURVEY.md §2A A3+A5+A6.
-    # Same warm-up + min-of-2 protocol as the noop-sink queries — a
-    # single cold run was exposed to disk noise (1.31 s vs 2.15 s
-    # across rounds on an unchanged plan).
-    import tempfile
-
+    # One warm-up, then min of three: a single cold run was exposed to
+    # disk noise.
     def etl_run(out: str) -> None:
         (
             spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -250,63 +215,6 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
 
-    # Trivial-lane inflation index (VERDICT r8 #4): cheap, unchanged
-    # lanes against their documented clean-host corridors. These lanes
-    # have been plan-stable since round 3; when THEY inflate, the host
-    # is loaded and every number this run is suspect — the next judge
-    # can normalize mechanically instead of re-litigating sub-second
-    # drift (round 8's same-day spread on join_inner was 0.67->4.76
-    # ->0.90 with no code change). index = min(observed)/corridor_min
-    # per lane; ambient verdict: clean <=1.3x median, loaded >2x.
-    corridors = {  # clean-host min-of-3 floors, rounds 3-8
-        "join_inner": 0.67,
-        "agg_group": 0.79,
-        "dedup_exact": 0.21,
-        "sim_topk": 0.30,
-        "stream_tumbling": 0.26,
-        # 0.19 was a round-1 reading predating the current operator;
-        # the r2-r9 clean range is 0.37-0.5, and the stale floor made
-        # the index read a clean host as ~2x inflated
-        "text_stats": 0.37,
-    }
-    inflation = {
-        n: round(timings[n] / floor_s, 2)
-        for n, floor_s in corridors.items()
-        if n in timings
-    }
-    infl_values = sorted(inflation.values())
-    # statistics.median (mean of the two middle values for even-sized
-    # sets): the upper-middle element systematically overstated the
-    # 6-lane corridor median and could tip a borderline host from
-    # "clean" to "warm" at the 1.3x threshold (ADVICE r9)
-    infl_median = (
-        round(statistics.median(infl_values), 2) if infl_values else None
-    )
-    # median alone under-reports bursty load (round 9's first run:
-    # median 1.25 yet text_stats at 4.9x) — any TWO lanes past 2x also
-    # demotes the verdict, since independent trivial lanes don't
-    # co-inflate without an external cause
-    n_hot = sum(1 for v in infl_values if v > 2.0)
-    ambient = (
-        None
-        if infl_median is None
-        else "loaded"
-        if infl_median > 2.0
-        else "warm"
-        if infl_median > 1.3 or n_hot >= 2
-        else "clean"
-    )
-    heavy_inflation = {
-        n: round(timings[n] / floor_s, 2)
-        for n, floor_s in heavy_corridors.items()
-        if n in timings
-    }
-    # The spread dict goes to a sidecar file, NOT the stdout JSON line:
-    # round 7 put it on the same line, the line outgrew the driver's
-    # tail-capture window, and the head (including "value") was cut off
-    # — BENCH_r07.json recorded "parsed": null (VERDICT r7 defect #1).
-    # The driver-facing contract is ONE compact line as the LAST stdout
-    # line: {metric, value, unit, queries, sf} only.
     sidecar = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_SPREAD.json"
     )
@@ -315,24 +223,14 @@ def main() -> None:
             {
                 "spread": spread,
                 "sf": sf,
-                "trivial_lane_inflation": inflation,
-                "inflation_median": infl_median,
-                "ambient_verdict": ambient,
-                "heavy_lane_inflation": heavy_inflation,
-                # the floors themselves ride along (ADVICE r14: a
-                # re-floor redefines the inflation series; publishing
-                # the per-round floor values keeps BENCH_*.json
-                # comparable across rounds without archaeology)
-                "heavy_corridor_floors": heavy_corridors,
-                # end-to-end build cost of each persisted derived-table
-                # artifact, rebuilt fresh at suite start (VERDICT r14
-                # #2/#5) — lane times are query-only by construction
+                "layers": layers,
                 "artifact_build_sec": artifact_build_sec,
             },
             f,
             indent=1,
             sort_keys=True,
         )
+    # ONE compact line, printed LAST (see the module docstring)
     print(
         json.dumps(
             {

@@ -138,31 +138,12 @@ def verify_columns(
     return report
 
 
-def read_csv(
-    spark: SparkSession,
-    csv_path: str,
-    *,
-    schema: StructType | None = None,
-    infer: bool = False,
-) -> DataFrame:
-    """A3: CSV scan. Explicit schema by default; inference is opt-in
-    (it costs an extra pass over the data — the reference paid that
-    price twice per run). Declining both is an error, never a silent
-    fallback to inference."""
+def read_csv(spark: SparkSession, csv_path: str, *, schema: StructType) -> DataFrame:
+    """A3: CSV scan with an explicit schema — inference would cost an
+    extra pass over the data (the reference paid that price twice per
+    run)."""
     tune(spark)
-    if schema is None and not infer:
-        raise ValueError("read_csv needs an explicit schema or infer=True")
-    if schema is not None and infer:
-        raise ValueError(
-            "read_csv: schema and infer are mutually exclusive — an "
-            "explicit schema would be silently discarded by inference"
-        )
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(csv_path)
+    return spark.read.option("header", True).schema(schema).csv(csv_path)
 
 
 def csv_header_columns(spark: SparkSession, csv_path: str) -> list[str]:

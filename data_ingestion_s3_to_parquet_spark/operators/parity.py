@@ -26,15 +26,18 @@ short-circuit arm).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import fixture_fingerprint
 from ..ingest import run_pipeline
 from ..plans.spec import Query
 from ..sources.catalog import load_table
+from .relational11 import _sweep_stale_siblings
 
 # Deterministic source subset: every 8th order's lineitems.
 _ROW_FILTER_MOD = 8
@@ -84,12 +87,18 @@ def q_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     result against the oracle's direct projection of the same lineitem
     rows, giving the reference-parity layer a real correctness row
     instead of pytest-only evidence.
+
+    Every file lands in one fixture-fingerprint-keyed temp dir (the
+    ``orc_interop`` rule), overwritten on each call, so repeated calls
+    reuse one dir instead of leaving one behind each.
     """
-    tmp = tempfile.mkdtemp(prefix="spark_graft_parity_")
+    name = f"spark_graft_parity_{fixture_fingerprint(sf_dir, 'lineitem')}"
+    _sweep_stale_siblings("spark_graft_parity_", name)
+    tmp = os.path.join(tempfile.gettempdir(), name)
     csv_dir = os.path.join(tmp, "csv_out")
-    _airquality_frame(spark, sf_dir).coalesce(1).write.option(
-        "header", True
-    ).csv(csv_dir)
+    _airquality_frame(spark, sf_dir).coalesce(1).write.mode(
+        "overwrite"
+    ).option("header", True).csv(csv_dir)
     part = next(
         os.path.join(csv_dir, f)
         for f in sorted(os.listdir(csv_dir))
@@ -100,11 +109,15 @@ def q_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         zf.write(part, arcname="airquality.csv")
 
     out_path = os.path.join(tmp, "datafile.parquet")
+    unzip_dir = os.path.join(tmp, "unzipped")
+    # a previous call's extraction would send run_pipeline down its
+    # warm path; the lane exercises the extract arm
+    shutil.rmtree(unzip_dir, ignore_errors=True)
     report = run_pipeline(
         spark,
-        unzipped_data=os.path.join(tmp, "unzipped", "airquality.csv"),
+        unzipped_data=os.path.join(unzip_dir, "airquality.csv"),
         destination=zip_path,
-        unzip_dir=os.path.join(tmp, "unzipped"),
+        unzip_dir=unzip_dir,
         out_path=out_path,
     )
     assert report.all_present, f"verifier reported missing: {report.missing}"

@@ -100,26 +100,44 @@ def _ship_package(spark: SparkSession) -> None:
     worker must import the defining module. A foreign session (the
     verify driver's) has no reason to carry this repo on its workers'
     sys.path, so every tune() ships the package once per application.
+
+    The zip is named by a hash of the package's files, so every driver
+    process running the same code shares one zip in the temp dir. It is
+    written only when absent, through a per-process temp file and an
+    atomic rename, so concurrent drivers never see a partial zip.
     """
     sc = spark.sparkContext
     app_id = sc.applicationId
     if app_id in _SHIPPED_APPS:
         return
+    import hashlib
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    files = []
+    for root, _, names in os.walk(pkg_dir):
+        for fname in names:
+            if fname.endswith((".pyc", ".pyo")):
+                continue
+            full = os.path.join(root, fname)
+            rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+            with open(full, "rb") as fh:
+                files.append((rel, fh.read()))
+    files.sort()
+    digest = hashlib.sha256()
+    for rel, data in files:
+        digest.update(f"{rel}\0{len(data)}\0".encode())
+        digest.update(data)
     zpath = os.path.join(
-        tempfile.gettempdir(), f"dis2p_spark_pkg_{os.getpid()}.zip"
+        tempfile.gettempdir(), f"dis2p_spark_pkg_{digest.hexdigest()[:16]}.zip"
     )
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for root, _, files in os.walk(pkg_dir):
-            for fname in files:
-                if fname.endswith((".pyc", ".pyo")):
-                    continue
-                full = os.path.join(root, fname)
-                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                zf.write(full, rel)
+    if not os.path.exists(zpath):
+        part = f"{zpath}.tmp-{os.getpid()}"
+        with zipfile.ZipFile(part, "w") as zf:
+            for rel, data in files:
+                zf.writestr(rel, data)
+        os.replace(part, zpath)
     try:
         sc.addPyFile(zpath)
     except Exception as e:  # pragma: no cover - e.g. same file re-added

@@ -30,19 +30,11 @@ def write_parquet(
     *,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
 ) -> None:
-    """Parquet directory sink, optionally hive-partitioned.
-
-    ``maxRecordsPerFile`` caps file sizes without a repartition (tasks
-    roll to new files); for target-sized files at scale prefer AQE +
-    ``spark.sql.files.maxRecordsPerFile`` globally.
-    """
+    """Parquet directory sink, optionally hive-partitioned."""
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.parquet(path)
 
 

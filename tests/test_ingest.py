@@ -321,3 +321,43 @@ def test_extract_zip_publishes_entries_atomically(tmp_path, monkeypatch):
     names = set(os.listdir(outdir2))
     assert len(names & {"one.csv", "two.csv"}) == 1  # only the first landed
     assert [f for f in names if ".part" in f] == []
+
+
+def test_ship_package_reuses_one_zip_per_code_version(tmp_path, monkeypatch):
+    # two driver processes (different pids) on two applications must
+    # share one content-named zip in the temp dir, not write one each
+    import itertools
+    import tempfile
+    from types import SimpleNamespace
+
+    from data_ingestion_s3_to_parquet_spark import session
+
+    shipped = []
+    pids = itertools.count(101)
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(os, "getpid", lambda: next(pids))
+    for app_id in ("ship-test-app-1", "ship-test-app-2"):
+        sc = SimpleNamespace(applicationId=app_id, addPyFile=shipped.append)
+        session._ship_package(SimpleNamespace(sparkContext=sc))
+    zips = list(tmp_path.iterdir())
+    assert len(zips) == 1 and zips[0].suffix == ".zip"
+    assert shipped == [str(zips[0])] * 2
+    with zipfile.ZipFile(zips[0]) as zf:
+        assert "data_ingestion_s3_to_parquet_spark/session.py" in zf.namelist()
+
+
+def test_ingest_parity_reuses_one_scratch_dir(spark, sf_dir, tmp_path, monkeypatch):
+    # repeated calls of the graded parity lane overwrite one
+    # fixture-keyed dir instead of leaving a new temp dir per call
+    import tempfile
+
+    from data_ingestion_s3_to_parquet_spark.operators.parity import (
+        q_ingest_parity,
+    )
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    first = sorted(q_ingest_parity(spark, sf_dir).collect())
+    second = sorted(q_ingest_parity(spark, sf_dir).collect())
+    dirs = [p for p in tmp_path.iterdir() if p.name.startswith("spark_graft_parity_")]
+    assert len(dirs) == 1
+    assert first and first == second

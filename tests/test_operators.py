@@ -1065,6 +1065,33 @@ def test_bench_timing_order_is_canonical_and_warmup_pinned():
     assert "WARMUP_LANES" in src
 
 
+def test_bench_lane_counts_repeat_exactly(spark, sf_dir):
+    # the bench's plan-change signal: a lane's jobs/stages/tasks under
+    # its job group are identical on every run, including dedup_fuzzy's
+    # overlap-thread jobs, none of which may escape the group
+    import bench
+    from data_ingestion_s3_to_parquet_spark.plans.registry import LANES
+
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    try:
+        for name in ("join_inner", "dedup_fuzzy"):
+            counts = []
+            for i in range(2):
+                group = f"bench-count-test-{name}-{i}"
+                sc.setJobGroup(group, name)
+                bench.materialize(LANES[name].fn(spark, sf_dir))
+                counts.append(bench.lane_counts(sc, group))
+            assert counts[0]["jobs"] > 0
+            assert counts[0] == counts[1], (name, counts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    # a difference, not equality: the status store may have evicted
+    # old ungrouped jobs in the meantime
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+
+
 def test_quality_classifier_buckets_split_and_agree_with_signals(spark, sf_dir):
     # the composed gate must (a) populate all three buckets on the
     # fixture corpus (the "calibrated" requirement), (b) keep only
