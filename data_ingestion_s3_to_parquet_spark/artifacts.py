@@ -43,6 +43,34 @@ _log = logging.getLogger(__name__)
 SWEEP_GRACE_SECONDS = 600
 
 
+def sweep_stale_siblings(prefix: str, keep: str) -> None:
+    """Remove the temp dir's superseded ``prefix*`` entries (every one
+    but ``keep``: older fingerprint generations of an interop copy,
+    zips of older package versions) once they age past the grace
+    period — the decommission rule of :func:`persisted_frame`, minus
+    the pointer file these write-once-overwrite entries don't need. A
+    younger entry may still be read by another live driver, so it
+    stays. Without this, every fixture rewrite or code edit would
+    strand one entry in /tmp forever."""
+    import shutil
+    import time
+
+    tmp = tempfile.gettempdir()
+    now = time.time()
+    for name in os.listdir(tmp):
+        if not name.startswith(prefix) or name == keep:
+            continue
+        p = os.path.join(tmp, name)
+        try:
+            if now - os.path.getmtime(p) >= SWEEP_GRACE_SECONDS:
+                if os.path.isdir(p):
+                    shutil.rmtree(p, ignore_errors=True)
+                else:
+                    os.remove(p)
+        except OSError:
+            continue
+
+
 def fixture_fingerprint(sf_dir: str, table: str) -> str:
     """Identity of one fixture table: path + per-file sizes + mtimes,
     hashed. Any rewrite of the fixture invalidates dependent caches."""

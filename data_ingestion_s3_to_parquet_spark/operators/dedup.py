@@ -39,7 +39,7 @@ from ..functions.hashing import (
 from ..functions.text import with_hashed_shingles, with_shingles
 from ..functions.vectors import cosine
 from ..plans.spec import Query
-from ..sources.catalog import load_table, spread
+from ..sources.catalog import load_table, local_frame, spread
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -601,7 +601,8 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("method")
         .agg(F.count("*").alias("n_hit"))
     )
-    methods = spark.createDataFrame(
+    methods = local_frame(
+        spark,
         [("minhash_lsh", MINHASH_RECALL_FLOOR), ("simhash", SIMHASH_RECALL_FLOOR)],
         "method string, floor double",
     )
@@ -906,8 +907,10 @@ def _local_components(contracted: DataFrame, reps: DataFrame) -> DataFrame:
                 parent[ru] = rv
     if not nodes:
         return reps.select("vec_id", F.col("vec_id").alias("component"))
-    mdf = contracted.sparkSession.createDataFrame(
-        [(n, find(n)) for n in sorted(nodes)], "vec_id long, component long"
+    mdf = local_frame(
+        contracted.sparkSession,
+        [(n, find(n)) for n in sorted(nodes)],
+        "vec_id long, component long",
     )
     return reps.join(mdf.hint("broadcast"), "vec_id", "left").select(
         "vec_id", F.coalesce("component", "vec_id").alias("component")

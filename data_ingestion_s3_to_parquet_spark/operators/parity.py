@@ -33,11 +33,10 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..artifacts import fixture_fingerprint
+from ..artifacts import fixture_fingerprint, sweep_stale_siblings
 from ..ingest import run_pipeline
 from ..plans.spec import Query
 from ..sources.catalog import load_table
-from .relational11 import _sweep_stale_siblings
 
 # Deterministic source subset: every 8th order's lineitems.
 _ROW_FILTER_MOD = 8
@@ -93,7 +92,7 @@ def q_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse one dir instead of leaving one behind each.
     """
     name = f"spark_graft_parity_{fixture_fingerprint(sf_dir, 'lineitem')}"
-    _sweep_stale_siblings("spark_graft_parity_", name)
+    sweep_stale_siblings("spark_graft_parity_", name)
     tmp = os.path.join(tempfile.gettempdir(), name)
     csv_dir = os.path.join(tmp, "csv_out")
     _airquality_frame(spark, sf_dir).coalesce(1).write.mode(

@@ -48,7 +48,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..artifacts import fixture_fingerprint
+from ..artifacts import fixture_fingerprint, sweep_stale_siblings
 from ..plans.spec import Query
 from ..sources.catalog import load_table
 
@@ -68,38 +68,13 @@ ORC_COLS = (
 )
 
 
-def _sweep_stale_siblings(prefix: str, keep: str) -> None:
-    """Remove superseded fingerprint generations of an interop copy
-    (same prefix, different key) once they age past the artifacts
-    grace period — the :mod:`..artifacts` decommission rule, minus the
-    pointer file these write-once-overwrite dirs don't need. Without
-    this, every fixture rewrite would strand one dir per lane in
-    /tmp forever."""
-    import shutil
-    import time
-
-    from ..artifacts import SWEEP_GRACE_SECONDS
-
-    tmp = tempfile.gettempdir()
-    now = time.time()
-    for name in os.listdir(tmp):
-        if not name.startswith(prefix) or name == keep:
-            continue
-        p = os.path.join(tmp, name)
-        try:
-            if now - os.path.getmtime(p) >= SWEEP_GRACE_SECONDS:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            continue
-
-
 def _orc_path(sf_dir: str) -> str:
     """Fingerprint-keyed ORC copy location under the system temp dir
     (the :mod:`..artifacts` identity rule: any rewrite of the fixture
     changes the path, so a stale copy can never satisfy the query)."""
     fp = fixture_fingerprint(sf_dir, "lineitem")
     name = f"spark_graft_orc_{fp}"
-    _sweep_stale_siblings("spark_graft_orc_", name)
+    sweep_stale_siblings("spark_graft_orc_", name)
     return os.path.join(tempfile.gettempdir(), name)
 
 
@@ -496,7 +471,7 @@ JSONL_SCHEMA = (
 def _jsonl_path(sf_dir: str) -> str:
     fp = fixture_fingerprint(sf_dir, "orders")
     name = f"spark_graft_jsonl_{fp}"
-    _sweep_stale_siblings("spark_graft_jsonl_", name)
+    sweep_stale_siblings("spark_graft_jsonl_", name)
     return os.path.join(tempfile.gettempdir(), name)
 
 

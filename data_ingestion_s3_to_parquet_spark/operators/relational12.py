@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
 from ..plans.spec import Query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 
 # --------------------------------------------------------------------
 # eval_ndcg
@@ -836,9 +836,7 @@ def _mmr_pairs(
     ``mmr_rerank`` run executed the corpus-wide scoring chain twice and
     re-planned its ~40-node subtree per collect (guide §2.4 / §5 —
     measured min-of-5 at sf0.1: 2.41 s → 2.00 s, output identical)."""
-    ids_df = spark.createDataFrame(
-        [(int(d),) for d in sorted(pool_ids)], "doc_id long"
-    )
+    ids_df = local_frame(spark, [(int(d),) for d in sorted(pool_ids)], "doc_id long")
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.join(F.broadcast(ids_df), "doc_id")
@@ -918,7 +916,8 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         sim[(r.doc_a, r.doc_b)] = r.sim_micro
         sim[(r.doc_b, r.doc_a)] = r.sim_micro
     selected = mmr_greedy(rel, sim, k=MMR_K, lam_tenths=MMR_LAMBDA_TENTHS)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         selected,
         "rank int, doc_id long, rel_micro long, penalty_micro long,"
         " obj_micro long",

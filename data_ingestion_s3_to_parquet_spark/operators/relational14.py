@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.spec import Query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 
 # --------------------------------------------------------------------
 # eval_mrr
@@ -566,12 +566,11 @@ def _drift_batch_paths(sf_dir: str) -> tuple[str, str]:
     dir (the :mod:`..artifacts` identity rule, same as
     ``orc_interop``: a fixture rewrite changes the path, so a stale
     landing can never satisfy the query)."""
-    from ..artifacts import fixture_fingerprint
-    from .relational11 import _sweep_stale_siblings
+    from ..artifacts import fixture_fingerprint, sweep_stale_siblings
 
     fp = fixture_fingerprint(sf_dir, "orders")
     name = f"spark_graft_drift_{fp}"
-    _sweep_stale_siblings("spark_graft_drift_", name)
+    sweep_stale_siblings("spark_graft_drift_", name)
     base = os.path.join(tempfile.gettempdir(), name)
     return os.path.join(base, "v1"), os.path.join(base, "v2")
 
@@ -638,7 +637,8 @@ def q_schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     t1 = dict(spark.read.parquet(p1).dtypes)
     t2 = dict(spark.read.parquet(p2).dtypes)
     cols = sorted(t1.keys() | t2.keys())
-    verdicts = spark.createDataFrame(
+    verdicts = local_frame(
+        spark,
         [(c, t1.get(c), t2.get(c)) for c in cols],
         "column_name string, t1 string, t2 string",
     )

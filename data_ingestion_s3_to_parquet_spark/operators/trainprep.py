@@ -21,7 +21,7 @@ from ..functions.text import (
     with_hashed_shingles,
 )
 from ..plans.spec import Query
-from ..sources.catalog import load_table, spread
+from ..sources.catalog import load_table, local_frame, spread
 
 # First 4 hex chars of md5(doc_id) below this bound → test split.
 # 0x1999 / 0x10000 ≈ 10.0%. Lowercase-hex string comparison IS numeric
@@ -1178,8 +1178,8 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     merges, base, _ = _bpe_learn(spark, sf_dir)
     base.unpersist()
-    return spark.createDataFrame(
-        merges, "merge_rank long, pair string, merged string, n long"
+    return local_frame(
+        spark, merges, "merge_rank long, pair string, merged string, n long"
     )
 
 

@@ -104,7 +104,8 @@ def _ship_package(spark: SparkSession) -> None:
     The zip is named by a hash of the package's files, so every driver
     process running the same code shares one zip in the temp dir. It is
     written only when absent, through a per-process temp file and an
-    atomic rename, so concurrent drivers never see a partial zip.
+    atomic rename, so concurrent drivers never see a partial zip. Each
+    write sweeps the aged zips of superseded code versions.
     """
     sc = spark.sparkContext
     app_id = sc.applicationId
@@ -113,6 +114,8 @@ def _ship_package(spark: SparkSession) -> None:
     import hashlib
     import tempfile
     import zipfile
+
+    from .artifacts import sweep_stale_siblings
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     files = []
@@ -129,15 +132,15 @@ def _ship_package(spark: SparkSession) -> None:
     for rel, data in files:
         digest.update(f"{rel}\0{len(data)}\0".encode())
         digest.update(data)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"dis2p_spark_pkg_{digest.hexdigest()[:16]}.zip"
-    )
+    zname = f"dis2p_spark_pkg_{digest.hexdigest()[:16]}.zip"
+    zpath = os.path.join(tempfile.gettempdir(), zname)
     if not os.path.exists(zpath):
         part = f"{zpath}.tmp-{os.getpid()}"
         with zipfile.ZipFile(part, "w") as zf:
             for rel, data in files:
                 zf.writestr(rel, data)
         os.replace(part, zpath)
+        sweep_stale_siblings("dis2p_spark_pkg_", keep=zname)
     try:
         sc.addPyFile(zpath)
     except Exception as e:  # pragma: no cover - e.g. same file re-added

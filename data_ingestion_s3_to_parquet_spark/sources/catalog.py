@@ -21,8 +21,11 @@ keep Catalyst free to push filters/projections into the parquet reader
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import tune
 
@@ -56,6 +59,37 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
         )
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], ddl: str
+) -> DataFrame:
+    """A small driver-side table (tuples in ``ddl`` column order) as a
+    one-partition DataFrame that plans as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, ddl)`` pickles the rows into a
+    Python RDD: every execution then runs a Python stage of
+    ``defaultParallelism`` tasks, and a fresh SparkContext forks a
+    Python daemon and its workers just to unpickle a few rows. Built
+    column by column as a ``pyarrow.Table`` instead, the rows reach the
+    JVM as one Arrow stream, Catalyst sees exact size statistics, and
+    no Python worker starts — whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. Not built
+    through pandas: a failed Arrow conversion there silently falls back
+    to the Python RDD. One partition, because the table is driver-sized
+    by construction and its scan would otherwise split it into
+    ``min(rows, defaultParallelism)`` tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = [
+        pa.array([r[i] for r in rows], type=f.type)
+        for i, f in enumerate(arrow_schema)
+    ]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -346,6 +346,33 @@ def test_ship_package_reuses_one_zip_per_code_version(tmp_path, monkeypatch):
         assert "data_ingestion_s3_to_parquet_spark/session.py" in zf.namelist()
 
 
+def test_ship_package_sweeps_aged_superseded_zips(tmp_path, monkeypatch):
+    # a write of a new code version's zip removes superseded zips past
+    # the grace period, and keeps younger ones another driver may ship
+    import tempfile
+    import time
+    from types import SimpleNamespace
+
+    from data_ingestion_s3_to_parquet_spark import session
+    from data_ingestion_s3_to_parquet_spark.artifacts import SWEEP_GRACE_SECONDS
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    aged = tmp_path / "dis2p_spark_pkg_4242.zip"
+    fresh = tmp_path / "dis2p_spark_pkg_0123456789abcdef.zip"
+    for p in (aged, fresh):
+        p.write_bytes(b"stale")
+    old = time.time() - SWEEP_GRACE_SECONDS - 60
+    os.utime(aged, (old, old))
+    shipped = []
+    sc = SimpleNamespace(applicationId="sweep-test-app", addPyFile=shipped.append)
+    session._ship_package(SimpleNamespace(sparkContext=sc))
+    assert not aged.exists()
+    assert fresh.exists()
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(
+        [fresh.name, os.path.basename(shipped[0])]
+    )
+
+
 def test_ingest_parity_reuses_one_scratch_dir(spark, sf_dir, tmp_path, monkeypatch):
     # repeated calls of the graded parity lane overwrite one
     # fixture-keyed dir instead of leaving a new temp dir per call

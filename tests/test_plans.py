@@ -1956,3 +1956,31 @@ def test_bootstrap_ci_winsorized_composed_shape(spark):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 8
     assert len(re.findall(r"\(\d+\) BroadcastExchange", plan)) == 4
     assert len(re.findall(r"\(\d+\) (?:SortMergeJoin|ShuffledHashJoin)", plan)) == 0
+
+
+def test_create_dataframe_only_inside_local_frame():
+    # createDataFrame(<list>) plans a pickled Python RDD: a Python stage
+    # of defaultParallelism tasks per execution. Literal tables must go
+    # through sources.catalog.local_frame, the one sanctioned call.
+    import ast
+    import pathlib
+
+    import data_ingestion_s3_to_parquet_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                allowed.update(id(n) for n in ast.walk(node))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
