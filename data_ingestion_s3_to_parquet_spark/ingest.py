@@ -38,7 +38,7 @@ from pyspark.sql.types import DoubleType, LongType, StringType, StructField, Str
 from .session import tune
 from .sources.s3 import fetch_s3
 from .sources.sinks import write_parquet
-from .sources.zipsource import extract_zip
+from .sources.zipsource import extract_zip, is_csv_entry
 
 logger = logging.getLogger(__name__)
 
@@ -219,7 +219,7 @@ def run_pipeline(
         object_key = object_key or os.environ["OBJECT"]
         fetch_s3(bucket, object_key, destination)
     extracted = extract_zip(destination, unzip_dir)
-    csvs = [p for p in extracted if p.lower().endswith(".csv")]
+    csvs = [p for p in extracted if is_csv_entry(p)]
     if not csvs:
         raise FileNotFoundError(f"no CSV entries found in {destination}")
     return ingest_csv(spark, csvs[0], out_path)

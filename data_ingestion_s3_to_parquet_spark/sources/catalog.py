@@ -113,9 +113,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def read_evolving_parquet(
-    spark: SparkSession, *paths: str, strict: bool = False
-) -> DataFrame:
+def read_evolving_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     """Read parquet batches whose schemas drifted over time (landed
     micro-batches gain or drop columns as upstream producers evolve).
 
@@ -126,12 +124,9 @@ def read_evolving_parquet(
 
     Scale note: schema merging reads every file FOOTER up front
     (distributed, but it is real work on millions of files). Production
-    tables should pin the contract schema in a catalog and pass
-    ``strict=True`` paths through a plain read instead; mergeSchema is
-    for exploration and backfill over drifted history.
+    tables should pin the contract schema in a catalog and read through
+    a plain ``spark.read.parquet`` instead; mergeSchema is for
+    exploration and backfill over drifted history.
     """
     tune(spark)
-    reader = spark.read
-    if not strict:
-        reader = reader.option("mergeSchema", True)
-    return reader.parquet(*paths)
+    return spark.read.option("mergeSchema", True).parquet(*paths)

@@ -40,9 +40,6 @@ Contract:
   would push down to row-group ranges over a presorted layout
   (write_clustered_parquet provides exactly that layout); the offset
   protocol and batch shape stay identical.
-
-This mirrors sources/pyds.py (batch zip-CSV DataSource): together
-they cover both halves of the Spark 4 Python DataSource API surface.
 """
 
 from __future__ import annotations

@@ -11,9 +11,12 @@ Two implementations behind one interface:
 - :func:`read_zipped_csvs` — the 100 TB path: zip is a non-splittable
   container, so distribution happens at archive granularity —
   ``spark.read.format("binaryFile")`` lists the archives, and a
-  ``mapInPandas`` stage decompresses + parses each archive's entries on
-  executors (one task per archive, Arrow-batched output). No driver
-  bottleneck, no shared filesystem needed.
+  ``mapInArrow`` stage decompresses + parses each archive's entries on
+  executors with ``pyarrow.csv`` (one task per archive, Arrow batches
+  end to end). No driver bottleneck, no shared filesystem needed.
+
+Both paths skip unsafe names (:func:`_is_safe_name`), and only entries
+that :func:`is_csv_entry` accepts are parsed as CSV.
 """
 
 from __future__ import annotations
@@ -24,8 +27,10 @@ import os
 import zipfile
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.csv as pacsv
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ..session import tune
@@ -39,6 +44,12 @@ def _is_safe_name(name: str) -> bool:
         return False
     parts = name.replace("\\", "/").split("/")
     return ".." not in parts
+
+
+def is_csv_entry(name: str) -> bool:
+    """The one CSV-entry rule of every zip path: a ``.csv`` suffix in
+    any case."""
+    return name.lower().endswith(".csv")
 
 
 def extract_zip(zip_path: str, output_dir: str) -> list[str]:
@@ -85,54 +96,45 @@ def extract_zip(zip_path: str, output_dir: str) -> list[str]:
 
 
 def read_zipped_csvs(
-    spark: SparkSession,
-    zip_glob: str,
-    schema: StructType,
-    *,
-    header: bool = True,
+    spark: SparkSession, zip_glob: str, schema: StructType
 ) -> DataFrame:
     """Distributed zip→CSV scan: one executor task per archive.
 
-    ``binaryFile`` ships each archive's bytes to a task; pandas parses
-    every safe CSV entry inside it and yields Arrow batches. The schema
-    is explicit (never inferred — no double scan, stable types at any
-    scale). Projection is pushed into the parser: when a header row is
-    present, ``usecols`` (callable form — tolerant of schema columns
-    absent from a given file, per the warn-missing/never-abort
-    contract) skips tokenizing/boxing values outside the schema, so a
-    k-of-n column read costs ~k, not n (measured: 8/19 columns ≈ -40%
-    parse wall; SCALE.md §18). Headerless CSVs bind names
-    positionally, so there is nothing to prune.
+    ``binaryFile`` ships each archive's bytes to a task; ``pyarrow.csv``
+    parses every safe CSV entry inside it (header row required) and
+    yields its Arrow batches. The schema alone configures the parser
+    (never inferred — no double scan, stable types at any scale):
+
+    - only schema columns are converted; extra CSV columns are dropped
+      unparsed, so a k-of-n column read costs ~k, not n (SCALE.md §24);
+    - a schema column absent from an entry reads as NULL (the
+      warn-missing/never-abort contract);
+    - each column is parsed straight to its schema type;
+    - empty and ``NA``-style cells are NULL in every column, strings
+      included.
     """
     tune(spark)
-    names = [f.name for f in schema.fields]
-    name_set = set(names)
+    convert = pacsv.ConvertOptions(
+        column_types=to_arrow_schema(schema),
+        include_columns=schema.fieldNames(),
+        include_missing_columns=True,
+        strings_can_be_null=True,
+    )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                with zipfile.ZipFile(io.BytesIO(row["content"])) as zf:
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for content in batch.column("content").to_pylist():
+                with zipfile.ZipFile(io.BytesIO(content)) as zf:
                     for info in zf.infolist():
-                        if info.is_dir() or not _is_safe_name(info.filename):
+                        name = info.filename
+                        if info.is_dir() or not _is_safe_name(name):
                             continue
-                        if not info.filename.lower().endswith(".csv"):
+                        if not is_csv_entry(name):
                             continue
-                        with zf.open(info) as fh:
-                            out = pd.read_csv(
-                                fh,
-                                header=0 if header else None,
-                                names=None if header else names,
-                                usecols=(
-                                    (lambda c: c in name_set)
-                                    if header
-                                    else None
-                                ),
-                            )
-                        # reindex, don't subset: a CSV missing a schema
-                        # column yields nulls there (warn-missing/never-
-                        # abort contract), and extra columns are dropped
-                        # — the Arrow batch must match the schema exactly
-                        yield out.reindex(columns=names)
+                        table = pacsv.read_csv(
+                            pa.BufferReader(zf.read(info)), convert_options=convert
+                        )
+                        yield from table.to_batches()
 
     binaries = spark.read.format("binaryFile").load(zip_glob)
-    return binaries.select("content").mapInPandas(parse, schema=schema)
+    return binaries.select("content").mapInArrow(parse, schema=schema)

@@ -14,6 +14,7 @@ handling closes idle sessions without waiting for a new event.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Iterable, Iterator
 
@@ -58,6 +59,47 @@ SESSION_STATE_SCHEMA = StructType(
 
 def _us(ts: pd.Timestamp) -> int:
     return int(ts.value // 1000)
+
+
+# CalendarInterval unit → seconds, the subset Spark accepts in
+# withWatermark delay strings ("10 minutes", "1 hour", ...).
+_DELAY_UNIT_S = {
+    "microsecond": 1e-6, "millisecond": 1e-3, "second": 1,
+    "minute": 60, "hour": 3600, "day": 86400, "week": 604800,
+}
+
+
+def _parse_delay_seconds(delay: str) -> float:
+    """Parse a watermark delay string ("10 minutes") to seconds —
+    used to validate the caller's watermark against the hardcoded
+    close horizon before Spark ever sees it. ADVICE r13: the
+    quantity must be an INTEGER — Spark's ``withWatermark`` rejects
+    fractional CalendarInterval quantities ("1.5 hours"), so
+    accepting them here would pass validation only to fail later
+    inside Spark with a murkier error; reject in this one place."""
+    m = re.fullmatch(r"\s*(\d+)\s*([a-zA-Z]+?)s?\s*", delay)
+    if not m:
+        raise ValueError(
+            f"unparseable watermark delay: {delay!r} (expected an "
+            "integer quantity and a CalendarInterval unit, e.g. "
+            "'10 minutes')"
+        )
+    unit = m.group(2).lower()
+    if unit not in _DELAY_UNIT_S:
+        raise ValueError(f"unknown watermark delay unit: {delay!r}")
+    return float(m.group(1)) * _DELAY_UNIT_S[unit]
+
+
+def _check_watermark(op: str, watermark: str, horizon_s: int, why: str) -> None:
+    """Reject a watermark delay longer than ``op``'s hardcoded close
+    horizon: such a watermark admits events for state the operator
+    has already closed. Rejected loudly rather than clamped silently."""
+    delay_s = _parse_delay_seconds(watermark)
+    if delay_s > horizon_s:
+        raise ValueError(
+            f"{op}: watermark {watermark!r} ({delay_s}s) exceeds the close"
+            f" horizon of {horizon_s}s; {why}"
+        )
 
 
 def _emit(user_id, start_us, last_us, n, total, closed_by) -> pd.DataFrame:
@@ -159,11 +201,12 @@ def sessionize_stateful(events: DataFrame, *, watermark: str = "10 minutes") -> 
 # F.window covers the standard tumbling aggregation; this twin exists
 # for the cases it can't express (per-window custom close policies,
 # side outputs, early emission) and to pin the custom-stateful lane's
-# window semantics to the batch operator (see the parity test).
+# window semantics to the batch operator (see the parity test). Its
+# state machine is ``sliding_fn`` with slide = window.
 
 TUMBLING_WINDOW_SECONDS = 3600
-# Per-key allowed lateness before an event-time close — mirrors the
-# stream's watermark delay so both closing paths agree.
+# Per-key allowed lateness before an event-time close — the stream's
+# watermark delay may not exceed it, so both closing paths agree.
 TUMBLING_LATENESS_SECONDS = 600
 
 TUMBLING_OUT_SCHEMA = StructType(
@@ -188,8 +231,7 @@ TUMBLING_STATE_SCHEMA = StructType(
 
 def _window_rows(etype, buckets, starts_to_close, win_us):
     """Close the given window starts: pop them from ``buckets`` and
-    emit one output row each (shared by the tumbling and sliding
-    twins — only ``win_us`` differs)."""
+    emit one output row each."""
     out = {
         "event_type": [],
         "window_start": [],
@@ -207,83 +249,6 @@ def _window_rows(etype, buckets, starts_to_close, win_us):
     return pd.DataFrame(out)
 
 
-def tumbling_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-event-type tumbling count/sum with floor(ts/window)
-    bucketing — identical window assignment to ``F.window(ts, w)``
-    ([start, end) half-open intervals). Windows close when event time
-    for the key moves ``TUMBLING_LATENESS_SECONDS`` past their end
-    (in-batch, same contract as the watermark) or when the state
-    times out at the watermark (idle key).
-    """
-    (etype,) = key
-    win_us = TUMBLING_WINDOW_SECONDS * 1_000_000
-    late_us = TUMBLING_LATENESS_SECONDS * 1_000_000
-
-    if state.hasTimedOut:
-        starts, ns, totals = state.get
-        buckets = {s: (n, t) for s, n, t in zip(starts, ns, totals)}
-        state.remove()
-        yield _window_rows(etype, buckets, sorted(buckets), win_us)
-        return
-
-    if state.exists:
-        starts, ns, totals = state.get
-        buckets = {s: [n, t] for s, n, t in zip(starts, ns, totals)}
-    else:
-        buckets = {}
-
-    max_ts = 0
-    for pdf in pdfs:
-        for ts, value in zip(pdf["ts"], pdf["value"]):
-            t = _us(ts)
-            s = t // win_us * win_us
-            if s in buckets:
-                buckets[s][0] += 1
-                buckets[s][1] += float(value)
-            else:
-                buckets[s] = [1, float(value)]
-            max_ts = max(max_ts, t)
-
-    closable = sorted(s for s in buckets if s + win_us + late_us <= max_ts)
-    if closable:
-        yield _window_rows(etype, buckets, closable, win_us)
-
-    if not buckets:
-        state.remove()
-        return
-    state.update(
-        (
-            list(buckets),
-            [buckets[s][0] for s in buckets],
-            [buckets[s][1] for s in buckets],
-        )
-    )
-    # idle-key close once the watermark passes the newest open window
-    latest_end_ms = (max(buckets) + win_us + late_us) // 1000
-    state.setTimeoutTimestamp(latest_end_ms)
-
-
-def tumbling_stateful(events: DataFrame, *, watermark: str = "10 minutes") -> DataFrame:
-    """Custom tumbling-window aggregation over a *streaming* events
-    frame; ``events`` needs columns (event_type, ts, value)."""
-    from ..session import tune
-
-    tune(events.sparkSession)
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            tumbling_fn,
-            outputStructType=TUMBLING_OUT_SCHEMA,
-            stateStructType=TUMBLING_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 # --- custom stateful sliding windows ----------------------------------------
 # F.window(ts, win, slide) covers standard sliding aggregation; this
 # twin exists for what it can't express (per-window close policies,
@@ -299,25 +264,33 @@ SLIDING_LATENESS_SECONDS = 600
 
 
 def sliding_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+    window_s: int,
+    slide_s: int,
+    lateness_s: int,
+    key: tuple,
+    pdfs: Iterable[pd.DataFrame],
+    state: GroupState,
 ) -> Iterator[pd.DataFrame]:
     """Per-event-type sliding count/sum with epoch-aligned starts —
-    identical window assignment to ``F.window(ts, '1 hour', '15
-    minutes')``: an event at time t belongs to the window/slide = 4
-    half-open [start, start+window) intervals whose starts are the
-    4 slide-multiples in (t - window, t]. Windows close when the
-    key's event time moves ``SLIDING_LATENESS_SECONDS`` past their
-    end, or at the event-time timeout for idle keys.
+    identical window assignment to ``F.window(ts, window, slide)``: an
+    event at time t belongs to the window/slide half-open
+    [start, start+window) intervals whose starts are the slide
+    multiples in (t - window, t]. With slide = window this is the
+    tumbling twin: one floor(ts/window) bucket per event. Windows
+    close when the key's event time moves ``lateness_s`` past their
+    end (in-batch, same contract as the watermark), or at the
+    event-time timeout for idle keys. The streaming entry points bind
+    (window_s, slide_s, lateness_s) with ``functools.partial``.
 
     State is O(open windows) = O(window/slide + lateness/slide) per
     key regardless of event volume — the same bound Spark's built-in
     sliding aggregation carries per (key, window) pair.
     """
     (etype,) = key
-    win_us = SLIDING_WINDOW_SECONDS * 1_000_000
-    slide_us = SLIDING_SLIDE_SECONDS * 1_000_000
-    late_us = SLIDING_LATENESS_SECONDS * 1_000_000
-    k_windows = SLIDING_WINDOW_SECONDS // SLIDING_SLIDE_SECONDS
+    win_us = window_s * 1_000_000
+    slide_us = slide_s * 1_000_000
+    late_us = lateness_s * 1_000_000
+    k_windows = window_s // slide_s
 
     if state.hasTimedOut:
         starts, ns, totals = state.get
@@ -360,26 +333,64 @@ def sliding_fn(
             [buckets[s][1] for s in buckets],
         )
     )
+    # idle-key close once the watermark passes the newest open window
     latest_end_ms = (max(buckets) + win_us + late_us) // 1000
     state.setTimeoutTimestamp(latest_end_ms)
 
 
-def sliding_stateful(events: DataFrame, *, watermark: str = "10 minutes") -> DataFrame:
-    """Custom sliding-window aggregation over a *streaming* events
-    frame; ``events`` needs columns (event_type, ts, value)."""
+# A watermark longer than a window twin's lateness admits events for
+# windows it has already closed and emitted.
+_REOPENS = "a late event would reopen a closed window and emit it twice"
+
+
+def _windows_stateful(
+    events: DataFrame,
+    watermark: str,
+    op: str,
+    window_s: int,
+    slide_s: int,
+    lateness_s: int,
+) -> DataFrame:
     from ..session import tune
 
+    _check_watermark(op, watermark, lateness_s, _REOPENS)
     tune(events.sparkSession)
     return (
         events.withWatermark("ts", watermark)
         .groupBy("event_type")
         .applyInPandasWithState(
-            sliding_fn,
+            functools.partial(sliding_fn, window_s, slide_s, lateness_s),
             outputStructType=TUMBLING_OUT_SCHEMA,
             stateStructType=TUMBLING_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
+    )
+
+
+def tumbling_stateful(events: DataFrame, *, watermark: str = "10 minutes") -> DataFrame:
+    """Custom tumbling-window aggregation over a *streaming* events
+    frame; ``events`` needs columns (event_type, ts, value)."""
+    return _windows_stateful(
+        events,
+        watermark,
+        "tumbling_stateful",
+        TUMBLING_WINDOW_SECONDS,
+        TUMBLING_WINDOW_SECONDS,
+        TUMBLING_LATENESS_SECONDS,
+    )
+
+
+def sliding_stateful(events: DataFrame, *, watermark: str = "10 minutes") -> DataFrame:
+    """Custom sliding-window aggregation over a *streaming* events
+    frame; ``events`` needs columns (event_type, ts, value)."""
+    return _windows_stateful(
+        events,
+        watermark,
+        "sliding_stateful",
+        SLIDING_WINDOW_SECONDS,
+        SLIDING_SLIDE_SECONDS,
+        SLIDING_LATENESS_SECONDS,
     )
 
 
@@ -515,6 +526,7 @@ def alert_stateful(events: DataFrame, *, watermark: str = "10 minutes") -> DataF
     ``events`` needs columns (event_type, ts)."""
     from ..session import tune
 
+    _check_watermark("alert_stateful", watermark, ALERT_LATENESS_SECONDS, _REOPENS)
     tune(events.sparkSession)
     return (
         events.withWatermark("ts", watermark)
@@ -642,34 +654,6 @@ def cdc_stateful(events: DataFrame, *, watermark: str = "10 minutes") -> DataFra
 
 IA_LATENESS_SECONDS = 600
 _IA_LIMB = 62  # Σd² limb width: sq = hi·2⁶² + lo
-
-# CalendarInterval unit → seconds, the subset Spark accepts in
-# withWatermark delay strings ("10 minutes", "1 hour", ...).
-_DELAY_UNIT_S = {
-    "microsecond": 1e-6, "millisecond": 1e-3, "second": 1,
-    "minute": 60, "hour": 3600, "day": 86400, "week": 604800,
-}
-
-
-def _parse_delay_seconds(delay: str) -> float:
-    """Parse a watermark delay string ("10 minutes") to seconds —
-    used to validate the caller's watermark against the hardcoded
-    close horizon before Spark ever sees it. ADVICE r13: the
-    quantity must be an INTEGER — Spark's ``withWatermark`` rejects
-    fractional CalendarInterval quantities ("1.5 hours"), so
-    accepting them here would pass validation only to fail later
-    inside Spark with a murkier error; reject in this one place."""
-    m = re.fullmatch(r"\s*(\d+)\s*([a-zA-Z]+?)s?\s*", delay)
-    if not m:
-        raise ValueError(
-            f"unparseable watermark delay: {delay!r} (expected an "
-            "integer quantity and a CalendarInterval unit, e.g. "
-            "'10 minutes')"
-        )
-    unit = m.group(2).lower()
-    if unit not in _DELAY_UNIT_S:
-        raise ValueError(f"unknown watermark delay unit: {delay!r}")
-    return float(m.group(1)) * _DELAY_UNIT_S[unit]
 
 IA_OUT_SCHEMA = StructType(
     [
@@ -821,14 +805,12 @@ def interarrival_stateful(
     r12). Rejected loudly here rather than clamped silently."""
     from ..session import tune
 
-    delay_s = _parse_delay_seconds(watermark)
-    if delay_s > IA_LATENESS_SECONDS:
-        raise ValueError(
-            f"interarrival_stateful: watermark {watermark!r} ({delay_s}s)"
-            f" exceeds the close horizon IA_LATENESS_SECONDS="
-            f"{IA_LATENESS_SECONDS}s; events older than the horizon"
-            " would fold as negative gaps"
-        )
+    _check_watermark(
+        "interarrival_stateful",
+        watermark,
+        IA_LATENESS_SECONDS,
+        "events older than the horizon would fold as negative gaps",
+    )
     tune(events.sparkSession)
     return (
         events.withWatermark("ts", watermark)

@@ -157,7 +157,7 @@ def test_cold_path_without_s3_uses_local_zip(spark, csv_file, tmp_path, monkeypa
 
 
 def test_distributed_zip_csv_scan(spark, csv_file, tmp_path):
-    # The 100 TB path: binaryFile + mapInPandas decompression.
+    # The 100 TB path: binaryFile + mapInArrow decompression.
     for i in range(3):
         with zipfile.ZipFile(tmp_path / f"part{i}.zip", "w") as zf:
             zf.write(csv_file, f"data{i}.csv")
@@ -181,35 +181,39 @@ def test_distributed_zip_scan_fills_missing_columns(spark, tmp_path):
     assert df.where("Temp IS NULL").count() == N_ROWS
 
 
-def test_zipcsv_python_datasource_partitions_per_entry(spark, tmp_path):
-    # the Spark-4 Python DataSource lane: one partition per CSV entry,
-    # zip-slip and non-CSV entries excluded at PLANNING time, rows
-    # identical to reading the extracted files directly
-    from data_ingestion_s3_to_parquet_spark.sources.pyds import register_zipcsv
+def test_distributed_zip_scan_entry_rules(spark, tmp_path):
+    # one archive exercising every entry rule: zip-slip names,
+    # directories and non-CSV entries yield no rows; the .csv match
+    # ignores case; extra columns drop, missing ones read as NULL, and
+    # empty cells are NULL in string and double columns alike
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-    zpath = str(tmp_path / "multi.zip")
+    schema = StructType(
+        [
+            StructField("name", StringType()),
+            StructField("score", DoubleType()),
+            StructField("note", StringType()),
+        ]
+    )
+    zpath = str(tmp_path / "mixed.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
-        zf.writestr("a.csv", "id,name\n1,alpha\n2,beta\n")
-        zf.writestr("sub/b.csv", "id,name\n3,gamma\n")
-        zf.writestr("../evil.csv", "id,name\n9,evil\n")  # zip-slip: skipped
-        zf.writestr("notes.txt", "not a csv")
+        zf.writestr("a.csv", "name,score,note\nalpha,1.5,x\n,,\n")
+        zf.writestr("sub/B.CSV", "name,score,note\nbeta,2.5,y\n")
+        zf.writestr("c.csv", "extra,score,name\nz,3.5,gamma\n")
+        zf.writestr("../evil.csv", "name,score,note\nevil,9.0,e\n")
+        zf.writestr("dir.csv/", "")
+        zf.writestr("notes.txt", "name,score,note\nnotes,8.0,t\n")
 
-    register_zipcsv(spark)
-    df = spark.read.format("zipcsv").load(zpath)
-    assert df.columns == ["id", "name"]
-    assert df.rdd.getNumPartitions() == 2  # one per safe CSV entry
-    rows = {(r.id, r.name) for r in df.collect()}
-    assert rows == {("1", "alpha"), ("2", "beta"), ("3", "gamma")}
-
-    # header mismatch in a later entry fails loudly, not misaligned
-    zpath2 = str(tmp_path / "bad.zip")
-    with zipfile.ZipFile(zpath2, "w") as zf:
-        zf.writestr("a.csv", "id,name\n1,alpha\n")
-        zf.writestr("z.csv", "other,cols\n2,beta\n")
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="does not match planned schema"):
-        spark.read.format("zipcsv").load(zpath2).collect()
+    df = read_zipped_csvs(spark, zpath, schema)
+    assert df.columns == ["name", "score", "note"]
+    assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
+    rows = sorted(df.collect(), key=lambda r: (r.score is None, r.score))
+    assert [tuple(r) for r in rows] == [
+        ("alpha", 1.5, "x"),
+        ("beta", 2.5, "y"),
+        ("gamma", 3.5, None),  # extra column dropped, missing one NULL
+        (None, None, None),  # empty cells are NULL, strings included
+    ]
 
 
 def test_fetch_s3_commits_atomically_and_retries_stream_errors(tmp_path, monkeypatch):

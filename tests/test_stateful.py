@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from data_ingestion_s3_to_parquet_spark.streaming.stateful import sessionize_stateful
 from data_ingestion_s3_to_parquet_spark.streaming.stream import EVENTS_STREAM_SCHEMA
 
@@ -706,18 +708,22 @@ def test_stateful_interarrival_state_roundtrips_across_batches(
     ) == (b.mean_gap_us_micro, b.cv_micro, b.b_index_micro)
 
 
-def test_stateful_interarrival_rejects_watermark_past_horizon(spark):
+@pytest.mark.parametrize(
+    "twin", ["interarrival", "tumbling", "sliding", "alert"]
+)
+def test_stateful_interarrival_rejects_watermark_past_horizon(spark, twin):
     # ADVICE r12: a watermark longer than the 600 s close horizon
-    # would admit events below the closed prefix and fold negative
-    # gaps into the accumulators — reject loudly, never clamp.
-    import pytest
-
+    # would admit events below the closed prefix — negative gaps in
+    # the inter-arrival accumulators, a second partial emission of an
+    # already-closed window in the window twins — so every twin
+    # rejects it loudly, never clamps.
+    from data_ingestion_s3_to_parquet_spark.streaming import stateful
     from data_ingestion_s3_to_parquet_spark.streaming.stateful import (
         IA_LATENESS_SECONDS,
         _parse_delay_seconds,
-        interarrival_stateful,
     )
 
+    build = getattr(stateful, f"{twin}_stateful")
     assert _parse_delay_seconds("10 minutes") == 600
     assert _parse_delay_seconds("1 hour") == 3600
     assert _parse_delay_seconds("90 seconds") == 90
@@ -725,12 +731,12 @@ def test_stateful_interarrival_rejects_watermark_past_horizon(spark):
 
     stream = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .selectExpr("timestamp AS ts", "'t' AS event_type")
+        .selectExpr("timestamp AS ts", "'t' AS event_type", "1.0 AS value")
     )
     # at the horizon: fine (builds the plan, no start)
-    interarrival_stateful(stream, watermark="10 minutes")
+    build(stream, watermark="10 minutes")
     with pytest.raises(ValueError, match="exceeds the close horizon"):
-        interarrival_stateful(stream, watermark="11 minutes")
+        build(stream, watermark="11 minutes")
     with pytest.raises(ValueError, match="unparseable"):
         _parse_delay_seconds("soon")
     # ADVICE r13: Spark's withWatermark rejects fractional interval
