@@ -80,11 +80,6 @@ def _app1_exif_segments(payload: bytes) -> list[tuple[int, int]]:
     ]
 
 
-def _find_app1_exif(payload: bytes):
-    segs = _app1_exif_segments(payload)
-    return segs[0] if segs else None
-
-
 def _read_ifd(tiff: bytes, off: int, end: str) -> dict[int, tuple]:
     """tag → (type, count, raw 4 value bytes) for one IFD."""
     (n,) = struct.unpack_from(end + "H", tiff, off)

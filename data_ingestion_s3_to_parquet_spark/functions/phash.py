@@ -15,51 +15,190 @@ division, and cell comparisons cross-multiply box SUMS against box
 AREAS instead of dividing (``sum_l * area_r > sum_r * area_l``), so
 no rounding rule is ever invoked. Two engines (or two library
 versions) cannot disagree.
+
+The module also holds what every media operator shares: the format
+table :data:`SNIFF` (which format a payload is, from its leading
+bytes) and the pixel decoders behind :func:`pixels_of`.
 """
 
 from __future__ import annotations
 
+import re
+import struct
+import zlib
+
 import numpy as np
+
+from .gif import decode_gif
+from .jpeg import decode_jpeg
+from .qoi import qoi_pixels
+from .tiff import decode_tiff
 
 _GRID_W = 9  # 9 columns → 8 horizontal gradients per row
 _GRID_H = 8
 
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+# Format detection for every media operator, in match order: a payload
+# is the first format whose pattern matches its leading bytes (the
+# claimed kind/mime is never trusted — corpora lie). Each rule is the
+# format decoder's own header check. ISO-BMFF goes first because its
+# ``ftyp`` sits at offset 4, where other formats keep a size field.
+SNIFF = [
+    (fmt, re.compile(pattern, re.S))
+    for fmt, pattern in (
+        ("mp4", rb"....ftyp"),
+        ("mp3", rb"ID3|\xff[\xe0-\xff]"),  # ID3 tag or a frame sync word
+        ("bmp", rb"BM"),
+        ("png", re.escape(_PNG_SIG)),
+        ("gif", rb"GIF8[79]a"),
+        ("avi", rb"RIFF....AVI "),
+        ("wav", rb"RIFF....WAVE"),
+        ("jpeg", rb"\xff\xd8\xff"),
+        ("tiff", rb"II|MM"),
+        ("qoi", rb"qoif"),
+        ("aiff", rb"FORM....AIF[FC]"),
+        ("au", rb"\.snd"),
+        ("webp", rb"RIFF....WEBP"),
+        ("webm", rb"\x1a\x45\xdf\xa3"),
+        ("flac", rb"fLaC"),
+        ("ogg", rb"OggS"),
+    )
+]
+
+
+def sniff(payload: bytes) -> str | None:
+    """The :data:`SNIFF` format name of ``payload``, or None."""
+    return next((fmt for fmt, rule in SNIFF if rule.match(payload)), None)
+
+
+def bmp_pixels(payload: bytes) -> np.ndarray:
+    """(h, w, 3) RGB uint8 pixels of an uncompressed 24-bit BMP: header
+    parsing (``struct``) and one numpy reshape."""
+    if payload[:2] != b"BM":
+        raise ValueError("not a BMP payload")
+    (data_off,) = struct.unpack_from("<I", payload, 10)
+    width, height = struct.unpack_from("<ii", payload, 18)
+    (bpp,) = struct.unpack_from("<H", payload, 28)
+    (compression,) = struct.unpack_from("<I", payload, 30)
+    if bpp != 24 or compression != 0:
+        raise NotImplementedError(
+            f"only uncompressed 24-bit BMP supported (bpp={bpp}, "
+            f"compression={compression})"
+        )
+    h = abs(height)
+    row = (width * 3 + 3) // 4 * 4  # rows padded to 4 bytes
+    raw = np.frombuffer(payload, dtype=np.uint8, count=row * h, offset=data_off)
+    bgr = raw.reshape(h, row)[:, : width * 3].reshape(h, width, 3)
+    rgb = bgr[:, :, ::-1]
+    if height > 0:  # positive height = bottom-up row order
+        rgb = rgb[::-1]
+    return np.ascontiguousarray(rgb)
+
+
+def png_pixels(payload: bytes) -> tuple[np.ndarray, int]:
+    """((h, w, channels) uint8 pixels, color_type) of an 8-bit
+    non-interlaced PNG: chunk parsing, zlib inflate, and the full
+    scanline un-filtering spec (None/Sub/Up/Average/Paeth) for gray,
+    RGB, gray+alpha and RGBA.
+
+    The un-filter walks rows (Sub/Paeth carry a per-pixel left
+    dependency, so full vectorization isn't possible); row interiors
+    use numpy. Decode runs executor-side over Arrow batches, so the
+    per-row Python cost parallelizes with the corpus.
+    """
+    if payload[:8] != _PNG_SIG:
+        raise ValueError("not a PNG payload")
+    pos, ihdr, idat = 8, None, bytearray()
+    while pos + 8 <= len(payload):
+        (length,) = struct.unpack_from(">I", payload, pos)
+        ctype = payload[pos + 4 : pos + 8]
+        data = payload[pos + 8 : pos + 8 + length]
+        pos += 12 + length  # length + type + data + crc
+        if ctype == b"IHDR":
+            ihdr = struct.unpack(">IIBBBBB", data)
+        elif ctype == b"IDAT":
+            idat.extend(data)
+        elif ctype == b"IEND":
+            break
+    if ihdr is None:
+        raise ValueError("PNG missing IHDR")
+    width, height, depth, color, comp, filt, interlace = ihdr
+    channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color)
+    if depth != 8 or channels is None or comp != 0 or filt != 0 or interlace != 0:
+        raise NotImplementedError(
+            f"only 8-bit non-interlaced gray/RGB/GA/RGBA PNG supported "
+            f"(depth={depth}, color_type={color}, interlace={interlace})"
+        )
+    raw = zlib.decompress(bytes(idat))
+    stride = width * channels
+    if len(raw) != height * (stride + 1):
+        raise ValueError("PNG scanline payload has wrong length")
+
+    bpp = channels  # bytes per pixel at depth 8
+    out = np.zeros((height, stride), dtype=np.uint8)
+    prev = np.zeros(stride, dtype=np.int32)
+    for y in range(height):
+        ftype = raw[y * (stride + 1)]
+        line = np.frombuffer(
+            raw, dtype=np.uint8, count=stride, offset=y * (stride + 1) + 1
+        ).astype(np.int32)
+        if ftype == 0:  # None
+            cur = line
+        elif ftype == 2:  # Up
+            cur = (line + prev) & 0xFF
+        elif ftype in (1, 3, 4):  # Sub / Average / Paeth: left-dependent
+            cur = np.zeros(stride, dtype=np.int32)
+            for x in range(stride):
+                a = cur[x - bpp] if x >= bpp else 0  # left
+                b = prev[x]  # up
+                if ftype == 1:
+                    cur[x] = (line[x] + a) & 0xFF
+                elif ftype == 3:
+                    cur[x] = (line[x] + (a + b) // 2) & 0xFF
+                else:  # Paeth predictor
+                    c = prev[x - bpp] if x >= bpp else 0  # up-left
+                    p = a + b - c
+                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+                    cur[x] = (line[x] + pred) & 0xFF
+        else:
+            raise ValueError(f"invalid PNG filter type {ftype}")
+        out[y] = cur.astype(np.uint8)
+        prev = cur
+
+    return out.reshape(height, width, channels), color
+
+
+def _png_rgb(payload: bytes) -> np.ndarray:
+    px, color = png_pixels(payload)
+    if color in (2, 6):  # RGB / RGBA (alpha ignored)
+        return np.ascontiguousarray(px[:, :, :3])
+    return np.repeat(px[:, :, :1], 3, axis=2)  # gray / gray+alpha
+
+
+# (h, w, 3) RGB uint8 pixels per image format; GIF gives its first frame
+IMAGE_PIXELS = {
+    "bmp": bmp_pixels,
+    "png": _png_rgb,
+    "gif": lambda payload: decode_gif(payload)["frames"][0],
+    "jpeg": decode_jpeg,
+    "tiff": decode_tiff,
+    "qoi": qoi_pixels,
+}
+
 
 def pixels_of(payload: bytes) -> np.ndarray:
     """(h, w, 3) RGB uint8 pixels of a BMP / PNG / GIF (first frame) /
-    baseline-JPEG / TIFF / QOI payload, dispatched on magic bytes —
-    the pixel-level
-    twin of ``operators.multimodal.decode_media``. Raises on anything
-    else (poison rows surface per-row through the usual ok/err
-    contract)."""
-    from ..operators.multimodal import _PNG_SIG, bmp_pixels, png_pixels
-
-    if payload[:2] == b"BM":
-        return bmp_pixels(payload)
-    if payload[:8] == _PNG_SIG:
-        px, color = png_pixels(payload)
-        if color in (2, 6):  # RGB / RGBA (alpha ignored)
-            return np.ascontiguousarray(px[:, :, :3])
-        return np.repeat(px[:, :, :1], 3, axis=2)  # gray / gray+alpha
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif import decode_gif
-
-        return decode_gif(payload)["frames"][0]
-    if payload[:3] == b"\xff\xd8\xff":
-        from .jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    if payload[:2] in (b"II", b"MM"):
-        from .tiff import decode_tiff
-
-        return decode_tiff(payload)
-    if payload[:4] == b"qoif":
-        from .qoi import qoi_pixels
-
-        return qoi_pixels(payload)
-    raise ValueError(
-        "unrecognized image container (BMP/PNG/GIF/JPEG/TIFF/QOI)"
-    )
+    baseline-JPEG / TIFF / QOI payload, by its :func:`sniff` format.
+    Raises on anything else (poison rows surface per-row through the
+    media operators' ok/err contract)."""
+    decode = IMAGE_PIXELS.get(sniff(payload))
+    if decode is None:
+        raise ValueError(
+            "unrecognized image container (BMP/PNG/GIF/JPEG/TIFF/QOI)"
+        )
+    return decode(payload)
 
 
 def dhash64(px: np.ndarray) -> int:
@@ -160,8 +299,6 @@ def build_test_bmp(px: np.ndarray) -> bytes:
     """Hand-compose a 24-bit top-down BMP (negative height) from an
     (h, w, 3) RGB uint8 array — test-vector builder, the image twin of
     ``build_mp3_frames`` / ``build_minimal_mp4``."""
-    import struct
-
     h, w = px.shape[:2]
     row_size = (w * 3 + 3) // 4 * 4
     bgr = px[:, :, ::-1]
@@ -219,13 +356,10 @@ def _png_filter_rows(px: np.ndarray) -> bytes:
 def build_png(px: np.ndarray) -> bytes:
     """Encode an (h, w, 3) RGB uint8 array as an 8-bit truecolor
     non-interlaced PNG — the lossless image WRITE path pairing the
-    from-spec reader (``multimodal.png_pixels``): adaptive per-row
+    from-spec reader (:func:`png_pixels`): adaptive per-row
     filtering (:func:`_png_filter_rows`) + stdlib zlib deflate + the
     chunk/CRC framing. Deterministic bytes for given pixels (fixed
     deflate level), so PNG-encoded artifacts dedup exactly."""
-    import struct
-    import zlib
-
     h, w = px.shape[:2]
     if h < 1 or w < 1:
         raise ValueError("empty image")
@@ -239,7 +373,7 @@ def build_png(px: np.ndarray) -> bytes:
         )
 
     return (
-        b"\x89PNG\r\n\x1a\n"
+        _PNG_SIG
         + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
         + chunk(b"IDAT", zlib.compress(_png_filter_rows(px), 6))
         + chunk(b"IEND", b"")

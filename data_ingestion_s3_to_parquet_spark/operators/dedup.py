@@ -39,7 +39,7 @@ from ..functions.hashing import (
 from ..functions.text import with_hashed_shingles, with_shingles
 from ..functions.vectors import cosine
 from ..plans.spec import Query
-from ..sources.catalog import load_table, local_frame, spread
+from ..sources.catalog import load_table, local_frame, loop_partitions, spread
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1073,11 +1073,12 @@ def _hashmin_labels(
     two longs per row, nothing else.
 
     Loop-frame layout: loop frames are repartitioned to ≈1M
-    rows/partition — the iteration touches only (id, id) longs, so
-    inheriting the input's partition count makes every round pay its
-    task-scheduling overhead (measured 0.5 s/round at 64 inherited
-    partitions for a 2k-row frame; ~0.1 s at the sized count), while
-    at scale the same formula keeps partitions ∝ |E|.
+    rows/partition (``catalog.loop_partitions``) — the iteration
+    touches only (id, id) longs, so inheriting the input's partition
+    count makes every round pay its task-scheduling overhead
+    (measured 0.5 s/round at 64 inherited partitions for a 2k-row
+    frame; ~0.1 s at the sized count), while at scale the same
+    formula keeps partitions ∝ |E|.
     """
     n_edges = p.count()  # free: p is materialized
     if n_edges == 0:
@@ -1092,7 +1093,7 @@ def _hashmin_labels(
             vertices.select("vec_id", F.col("vec_id").alias("component")),
             True,
         )
-    n_part = max(1, min(p.rdd.getNumPartitions(), -(-n_edges // 1_000_000)))
+    n_part = loop_partitions(p, n_edges)
     # undirected: propagate both ways
     edges = (
         p.union(p.select(F.col("v").alias("u"), F.col("u").alias("v")))

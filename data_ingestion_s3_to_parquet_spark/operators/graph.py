@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.spec import Query
+from ..sources.catalog import loop_partitions
 from .relational8 import SQL_KNN_GRAPH, q_knn_graph
 
 PAGERANK_ITERS = 5
@@ -605,10 +606,7 @@ def q_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured min-of-5 at sf0.1: 3.53 s → 1.73 s, identical output);
     # the formula keeps partitions ∝ |E| at scale.
     n_edges = und0.count()  # parquet footer count — metadata-only job
-    n_part = max(
-        1, min(und0.rdd.getNumPartitions(), -(-n_edges // 1_000_000))
-    )
-    und = und0.repartition(n_part).localCheckpoint()
+    und = und0.repartition(loop_partitions(und0, n_edges)).localCheckpoint()
     # survivor counts observed on each checkpoint job (r14): loop
     # control no longer costs a separate count job per peel round
     # (the CC-loop signature trick, dedup.py); the initial alive set
@@ -749,10 +747,7 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = und0.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und0.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    n_part = max(
-        1, min(und.rdd.getNumPartitions(), -(-2 * n_edges // 1_000_000))
-    )
-    und = und.repartition(n_part).localCheckpoint()
+    und = und.repartition(loop_partitions(und, 2 * n_edges)).localCheckpoint()
     deg = und.groupBy("u").agg(F.count("*").alias("deg"))
     src_row = deg.orderBy(F.desc("deg"), F.col("u")).limit(1)
     frontier = src_row.select(

@@ -15,34 +15,27 @@ Fixture-backed oracle queries:
 opaque blob — now lives in textstats.q_doc_fingerprint.)
 
 Plus the image/audio/video plumbing: binary payload + typed metadata →
-``mapInPandas`` byte features (:func:`media_features`) and REAL
-decoding (:func:`media_decode`) for every format the container can
-decode without codec libraries — PCM WAV (stdlib ``wave``) plus
-G.711 µ-law/A-law WAV (r8, ``functions/g711.py`` from-spec companding
-tables — the telephony corpus class stdlib wave rejects) and IMA/DVI
-ADPCM WAV (r8, ``functions/adpcm.py`` from-spec adaptive-delta
-expansion — format tag 17, the voice-memo/game-audio class), MJPEG AVI
-(r8, ``functions/avi.py`` container walk + the JPEG codec per frame —
-real video pixels), 24-bit BMP
-(``struct`` + numpy), 8-bit PNG (stdlib ``zlib`` + full scanline
-un-filtering), baseline JPEG (``functions/jpeg.py``: a complete
-from-spec Huffman + IDCT + chroma-upsample decoder plus the matching
-encoder that builds the test vectors), GIF87a/89a
-(``functions/gif.py``: variable-width LZW, interlace, multi-frame
-compositing with disposal + transparency — the real ANIMATION decode
-lane, lossless so round-trips test exact equality), and baseline TIFF
-(``functions/tiff.py``, r8: IFD walk, strips, PackBits RLE, gray/RGB,
-both byte orders — the scanned-document lane, also lossless). Only
-true video/audio codec formats (H.264/AAC) remain behind
-the clearly-marked :func:`_decode_stub` seam; the Spark-side contract —
-schema, batch shape, partitioning, per-row error capture — is real and
-unit-tested throughout.
+``mapInPandas`` byte features (:func:`media_features`) and per-payload
+operators that decode, probe, frame-sample, resize, hash and scrub real
+media with the from-spec codecs in ``functions/``, no codec library:
+24-bit BMP, 8-bit PNG, baseline JPEG, GIF87a/89a (multi-frame),
+baseline TIFF, QOI and MJPEG AVI for pixels; PCM, G.711 and IMA ADPCM
+WAV, AIFF and Sun AU for samples; header-only probes for MP4, MP3,
+WebP, WebM, FLAC and Ogg. ``functions.phash.sniff`` names a payload's
+format from its leading bytes, and :func:`_per_payload` runs each
+operator's row function with per-row error capture. Formats that need
+a real codec library (H.264, AAC, ...) stop at :func:`_decode_stub`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import io
+import struct
+import wave
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,9 +51,47 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.adpcm import (
+    WAVE_FORMAT_IMA_ADPCM,
+    adpcm_decode,
+    adpcm_decode_stereo,
+    adpcm_n_samples,
+)
+from ..functions.aiff import aiff_samples, probe_aiff
+from ..functions.au import au_samples, probe_au
+from ..functions.avi import iter_avi_frames, probe_avi
+from ..functions.ebml import probe_webm
+from ..functions.exif import _iter_jpeg_segments, probe_exif, scrub_gps
+from ..functions.flac import probe_flac
+from ..functions.g711 import (
+    WAVE_FORMAT_ALAW,
+    WAVE_FORMAT_MULAW,
+    alaw_decode,
+    parse_wav_fmt,
+    ulaw_decode,
+)
+from ..functions.gif import decode_gif, probe_gif
+from ..functions.hashing import hamming64
+from ..functions.jpeg import decode_jpeg
+from ..functions.mp3 import probe_mp3
+from ..functions.mp4 import probe_mp4
+from ..functions.ogg import probe_ogg
+from ..functions.phash import (
+    IMAGE_PIXELS,
+    box_resize,
+    build_test_bmp,
+    dhash64,
+    pixels_of,
+    seeded_test_image,
+    sniff,
+)
+from ..functions.qoi import probe_qoi
+from ..functions.tiff import probe_tiff
 from ..functions.vectors import dot
+from ..functions.webp import probe_webp
 from ..plans.spec import Query
-from ..sources.catalog import load_table
+from ..session import tune
+from ..sources.catalog import load_table, spread
 
 
 def q_multimodal_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,49 +209,25 @@ MEDIA_FEATURES_SCHEMA = StructType(
 
 
 def _decode_stub(kind: str, payload: bytes) -> None:
-    """CODEC-REQUIRING FORMATS ONLY (H.264/AAC/WebP/...).
-
-    This is the seam where pyav / torchaudio would decode compressed
-    video/audio payloads; those libraries are not in this container,
-    so it stays deliberately unimplemented. Formats decodable WITHOUT
-    external codecs have REAL decoders — PCM WAV (stdlib ``wave``),
-    uncompressed 24-bit BMP (header ``struct`` + numpy), 8-bit PNG
-    (stdlib ``zlib`` + the five-filter scanline spec), and since
-    round 7 baseline JPEG and animated GIF (``functions/jpeg.py`` /
-    ``functions/gif.py``, full from-spec implementations plus the
-    matching encoders used to build test vectors) —
-    :func:`decode_wav`, :func:`decode_bmp`, :func:`decode_png`,
-    :func:`decode_jpeg`, :func:`decode_gif`, dispatched by
-    :func:`decode_media` and run distributed by :func:`media_decode`.
-    """
+    """The seam for formats that need a codec library (H.264, AAC,
+    WebP, ...): pyav / torchaudio would decode them here, but neither
+    is in this environment, so it stays deliberately unimplemented.
+    Every format decodable without one has a from-spec decoder behind
+    :func:`decode_media`."""
     raise NotImplementedError(
         f"media decode for kind={kind!r} requires codec libraries "
         "(pyav/torchaudio) not present in this environment"
     )
 
 
-def wav_samples(payload: bytes) -> tuple[int, int, "np.ndarray"]:
+def wav_samples(payload: bytes) -> tuple[int, int, np.ndarray]:
     """(sample_rate, n_channels, int64 linear samples) of a WAV
     payload, across every codec the engine decodes from spec: PCM
     (stdlib ``wave``), G.711 µ-law/A-law (wFormatTag 7/6 — the
     telephony class stdlib rejects, ``functions/g711.py``), and
-    IMA/DVI ADPCM (wFormatTag 17, ``functions/adpcm.py``). The shared
-    decode seam under :func:`decode_wav`'s whole-clip features and
+    IMA/DVI ADPCM (wFormatTag 17, ``functions/adpcm.py``). Shared by
+    :func:`decode_media`'s whole-clip features and
     :func:`media_audio_frames`'s frame-level ones."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from ..functions.adpcm import WAVE_FORMAT_IMA_ADPCM
-    from ..functions.g711 import (
-        WAVE_FORMAT_ALAW,
-        WAVE_FORMAT_MULAW,
-        alaw_decode,
-        parse_wav_fmt,
-        ulaw_decode,
-    )
-
     fmt = parse_wav_fmt(payload)
     if fmt["format_tag"] in (WAVE_FORMAT_MULAW, WAVE_FORMAT_ALAW):
         dec = (
@@ -231,11 +238,7 @@ def wav_samples(payload: bytes) -> tuple[int, int, "np.ndarray"]:
         return fmt["sample_rate"], fmt["n_channels"], dec(
             fmt["data"]
         ).astype(np.int64)
-    if fmt["format_tag"] == WAVE_FORMAT_IMA_ADPCM:
-        # IMA/DVI ADPCM (tag 17): the from-spec adaptive-delta
-        # expansion in functions/adpcm.py (r8); mono and stereo
-        from ..functions.adpcm import adpcm_decode, adpcm_decode_stereo
-
+    if fmt["format_tag"] == WAVE_FORMAT_IMA_ADPCM:  # mono and stereo
         if "block_align" not in fmt:
             raise ValueError("IMA ADPCM fmt chunk without block align")
         if fmt["n_channels"] == 1:
@@ -261,358 +264,99 @@ def wav_samples(payload: bytes) -> tuple[int, int, "np.ndarray"]:
     return rate, n_ch, arr
 
 
-def decode_wav(payload: bytes) -> dict:
-    """REAL audio decode for WAV (PCM / G.711 / IMA ADPCM via
-    :func:`wav_samples`). Returned features are EXACT integers (sample
-    counts, int64 energy = Σ sample² over the decoded linear samples),
-    so downstream results are bitwise-stable across layouts and reruns
-    — the same determinism contract every operator here carries."""
-    rate, n_ch, arr = wav_samples(payload)
+_AUDIO_SAMPLES = {"wav": wav_samples, "aiff": aiff_samples, "au": au_samples}
+
+
+def _image_features(px: np.ndarray, n_frames: int | None = None) -> dict:
+    """Dims and exact int64 per-channel sums of (h, w, 3) RGB pixels,
+    plus ``n_frames`` for an animation or video. Integer features keep
+    results bitwise-stable across layouts and reruns."""
+    s = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
+    out = {
+        "width": int(px.shape[1]),
+        "height": int(px.shape[0]),
+        "sum_r": int(s[0]),
+        "sum_g": int(s[1]),
+        "sum_b": int(s[2]),
+    }
+    if n_frames is not None:
+        out["n_frames"] = n_frames
+    return out
+
+
+def _audio_features(rate: int, n_ch: int, arr: np.ndarray) -> dict:
+    """Sample counts and the exact int64 energy Σ sample² of linear
+    samples (interleaved channels count as samples)."""
     return {
         "sample_rate": rate,
         "n_channels": n_ch,
         "n_samples": int(arr.size),
         "energy": int((arr * arr).sum()),
-    }
-
-
-def decode_bmp(payload: bytes) -> dict:
-    """REAL image decode for uncompressed 24-bit BMP — pure header
-    parsing (``struct``) + one numpy reshape; no codec library. Exact
-    integer per-channel sums make the features engine/layout-stable."""
-    import struct
-
-    import numpy as np
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    (data_off,) = struct.unpack_from("<I", payload, 10)
-    width, height = struct.unpack_from("<ii", payload, 18)
-    (bpp,) = struct.unpack_from("<H", payload, 28)
-    (compression,) = struct.unpack_from("<I", payload, 30)
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(
-            f"only uncompressed 24-bit BMP supported (bpp={bpp}, "
-            f"compression={compression})"
-        )
-    h = abs(height)
-    row = (width * 3 + 3) // 4 * 4  # rows padded to 4 bytes
-    raw = np.frombuffer(payload, dtype=np.uint8, count=row * h, offset=data_off)
-    px = raw.reshape(h, row)[:, : width * 3].reshape(h, width, 3)  # BGR
-    s = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
-    return {
-        "width": width,
-        "height": h,
-        "sum_r": int(s[2]),
-        "sum_g": int(s[1]),
-        "sum_b": int(s[0]),
-    }
-
-
-def bmp_pixels(payload: bytes):
-    """(h, w, 3) RGB uint8 pixels of a 24-bit BMP — the pixel-level
-    companion of :func:`decode_bmp` (which reports sums), used by the
-    perceptual-hash lane. Same validation, same buffer arithmetic."""
-    import struct
-
-    import numpy as np
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    (data_off,) = struct.unpack_from("<I", payload, 10)
-    width, height = struct.unpack_from("<ii", payload, 18)
-    (bpp,) = struct.unpack_from("<H", payload, 28)
-    (compression,) = struct.unpack_from("<I", payload, 30)
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(
-            f"only uncompressed 24-bit BMP supported (bpp={bpp}, "
-            f"compression={compression})"
-        )
-    h = abs(height)
-    row = (width * 3 + 3) // 4 * 4
-    raw = np.frombuffer(payload, dtype=np.uint8, count=row * h, offset=data_off)
-    bgr = raw.reshape(h, row)[:, : width * 3].reshape(h, width, 3)
-    rgb = bgr[:, :, ::-1]
-    if height > 0:  # positive height = bottom-up row order
-        rgb = rgb[::-1]
-    return np.ascontiguousarray(rgb)
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def decode_png(payload: bytes) -> dict:
-    """REAL image decode for 8-bit non-interlaced PNG — chunk parsing
-    (``struct``), zlib inflate (stdlib), and the full scanline
-    un-filtering spec (None/Sub/Up/Average/Paeth), no codec library.
-    Gray / RGB / gray+alpha / RGBA color types; alpha is excluded from
-    the channel sums, gray maps to all three. Exact integer features,
-    like the other decoders.
-
-    The un-filter walks rows (Sub/Paeth carry a per-pixel left
-    dependency, so full vectorization isn't possible); row interiors
-    use numpy. Decode runs executor-side over Arrow batches, so the
-    per-row Python cost parallelizes with the corpus.
-    """
-    px, color = png_pixels(payload)
-    px = px.astype("int64")
-    height, width = px.shape[:2]
-    if color == 2 or color == 6:  # RGB / RGBA
-        s = px[:, :, :3].reshape(-1, 3).sum(axis=0)
-        sum_r, sum_g, sum_b = int(s[0]), int(s[1]), int(s[2])
-    else:  # gray / gray+alpha: one luminance channel
-        g = int(px[:, :, 0].sum())
-        sum_r = sum_g = sum_b = g
-    return {
-        "width": width,
-        "height": height,
-        "sum_r": sum_r,
-        "sum_g": sum_g,
-        "sum_b": sum_b,
-    }
-
-
-def png_pixels(payload: bytes):
-    """((h, w, channels) uint8 pixels, color_type) of an 8-bit
-    non-interlaced PNG — the full scanline un-filtering; shared by the
-    sum features (:func:`decode_png`) and the perceptual-hash lane."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, ihdr, idat = 8, None, bytearray()
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack_from(">I", payload, pos)
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # length + type + data + crc
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"IDAT":
-            idat.extend(data)
-        elif ctype == b"IEND":
-            break
-    if ihdr is None:
-        raise ValueError("PNG missing IHDR")
-    width, height, depth, color, comp, filt, interlace = ihdr
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color)
-    if depth != 8 or channels is None or comp != 0 or filt != 0 or interlace != 0:
-        raise NotImplementedError(
-            f"only 8-bit non-interlaced gray/RGB/GA/RGBA PNG supported "
-            f"(depth={depth}, color_type={color}, interlace={interlace})"
-        )
-    raw = zlib.decompress(bytes(idat))
-    stride = width * channels
-    if len(raw) != height * (stride + 1):
-        raise ValueError("PNG scanline payload has wrong length")
-
-    bpp = channels  # bytes per pixel at depth 8
-    out = np.zeros((height, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(height):
-        ftype = raw[y * (stride + 1)]
-        line = np.frombuffer(
-            raw, dtype=np.uint8, count=stride, offset=y * (stride + 1) + 1
-        ).astype(np.int32)
-        if ftype == 0:  # None
-            cur = line
-        elif ftype == 2:  # Up
-            cur = (line + prev) & 0xFF
-        elif ftype in (1, 3, 4):  # Sub / Average / Paeth: left-dependent
-            cur = np.zeros(stride, dtype=np.int32)
-            for x in range(stride):
-                a = cur[x - bpp] if x >= bpp else 0  # left
-                b = prev[x]  # up
-                if ftype == 1:
-                    cur[x] = (line[x] + a) & 0xFF
-                elif ftype == 3:
-                    cur[x] = (line[x] + (a + b) // 2) & 0xFF
-                else:  # Paeth predictor
-                    c = prev[x - bpp] if x >= bpp else 0  # up-left
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    cur[x] = (line[x] + pred) & 0xFF
-        else:
-            raise ValueError(f"invalid PNG filter type {ftype}")
-        out[y] = cur.astype(np.uint8)
-        prev = cur
-
-    return out.reshape(height, width, channels), color
-
-
-def decode_jpeg(payload: bytes) -> dict:
-    """REAL image decode for baseline JPEG — the from-spec codec in
-    ``functions/jpeg.py`` (marker parse, canonical Huffman, dequant +
-    de-zigzag, 8x8 IDCT, chroma upsample, YCbCr→RGB; restart markers
-    and byte stuffing handled; progressive/12-bit raise). Same exact
-    integer per-channel sums as the other image decoders."""
-    from ..functions.jpeg import decode_jpeg as _dec
-
-    rgb = _dec(payload)
-    s = rgb.reshape(-1, 3).astype("int64").sum(axis=0)
-    return {
-        "width": int(rgb.shape[1]),
-        "height": int(rgb.shape[0]),
-        "sum_r": int(s[0]),
-        "sum_g": int(s[1]),
-        "sum_b": int(s[2]),
-    }
-
-
-def decode_gif(payload: bytes) -> dict:
-    """REAL animation decode for GIF87a/89a — the from-spec codec in
-    ``functions/gif.py`` (variable-width LZW, interlace, local color
-    tables, multi-frame compositing with disposal + transparency).
-    Image features come from the FIRST composited frame so GIF rows
-    align with the other image decoders; ``n_frames`` carries the
-    animation length — the real multi-frame lane behind the
-    ``media_frame_sample`` pattern."""
-    from ..functions.gif import decode_gif as _dec
-
-    out = _dec(payload)
-    first = out["frames"][0].reshape(-1, 3).astype("int64")
-    s = first.sum(axis=0)
-    return {
-        "width": int(out["width"]),
-        "height": int(out["height"]),
-        "sum_r": int(s[0]),
-        "sum_g": int(s[1]),
-        "sum_b": int(s[2]),
-        "n_frames": len(out["frames"]),
     }
 
 
 def decode_media(kind: str, payload: bytes) -> dict:
-    """Dispatch on the payload's MAGIC BYTES (not the claimed kind —
-    corpora lie about mime types): RIFF/WAVE → :func:`decode_wav`,
-    BM → :func:`decode_bmp`, PNG signature → :func:`decode_png`,
-    SOI+marker → :func:`decode_jpeg`, GIF8 → :func:`decode_gif`,
-    II/MM → :func:`decode_tiff_features` (r8, ``functions/tiff.py``),
-    qoif → :func:`decode_qoi_features` (r8, ``functions/qoi.py``);
-    anything else falls through to the codec seam
-    (:func:`_decode_stub`) and raises."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return decode_wav(payload)
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    if payload[:8] == _PNG_SIG:
-        return decode_png(payload)
-    if payload[:3] == b"\xff\xd8\xff":
-        return decode_jpeg(payload)
-    if payload[:4] == b"GIF8":
-        return decode_gif(payload)
-    if payload[:2] in (b"II", b"MM"):
-        return decode_tiff_features(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return decode_avi_features(payload)
-    if payload[:4] == b"qoif":
-        return decode_qoi_features(payload)
-    if payload[:4] == b"FORM" and payload[8:12] in (b"AIFF", b"AIFC"):
-        return decode_aiff(payload)
-    if payload[:4] == b".snd":
-        return decode_au(payload)
+    """Decode a payload by its :func:`sniff` format, not the claimed
+    ``kind`` (corpora lie about mime types). Images give
+    :func:`_image_features`; GIF and MJPEG AVI give them for the first
+    frame plus the frame count (AVI's from the container header, so
+    only one frame is decoded); audio gives :func:`_audio_features`.
+    Anything else raises at :func:`_decode_stub`."""
+    fmt = sniff(payload)
+    if fmt == "gif":
+        frames = decode_gif(payload)["frames"]
+        return _image_features(frames[0], len(frames))
+    if fmt == "avi":
+        n_frames = probe_avi(payload)["n_frames"]
+        first = next(iter_avi_frames(payload), None)
+        if first is None:
+            raise ValueError("AVI with no video frame chunks")
+        return _image_features(decode_jpeg(first), int(n_frames))
+    if fmt in IMAGE_PIXELS:
+        return _image_features(IMAGE_PIXELS[fmt](payload))
+    if fmt in _AUDIO_SAMPLES:
+        return _audio_features(*_AUDIO_SAMPLES[fmt](payload))
     _decode_stub(kind, payload)
 
 
-def decode_au(payload: bytes) -> dict:
-    """REAL audio decode for Sun AU (``functions/au.py`` — µ-law via
-    the shared G.711 tables, 8/16-bit linear PCM): the same exact
-    integer features as :func:`decode_wav`."""
-    from ..functions.au import au_samples
+def _per_payload(
+    media: DataFrame,
+    schema: StructType,
+    rows_of: Callable[[bytes, dict], Iterable[dict]],
+    poison: dict | None = None,
+) -> DataFrame:
+    """Run ``rows_of(payload, key)`` on every payload executor-side
+    (``mapInPandas`` over Arrow batches, no pickling) and emit the rows
+    it returns as ``ok=true`` rows of ``schema``. ``key`` holds the
+    row's ``media_id`` and, when ``schema`` has it, ``kind``; both are
+    copied to every output row.
 
-    rate, n_ch, arr = au_samples(payload)
-    return {
-        "sample_rate": rate,
-        "n_channels": n_ch,
-        "n_samples": int(arr.size),
-        "energy": int((arr * arr).sum()),
-    }
+    A payload whose row function raises costs exactly one poison row:
+    ``ok=false``, ``err="<Type>: <msg>"``, every other column None or
+    its ``poison`` value. At 100 TB a corpus always holds undecodable
+    members, and one must cost a row, not a stage retry storm.
+    """
+    tune(media.sparkSession)  # ships this package to the executors
+    names = schema.fieldNames()
+    keys = [c for c in ("media_id", "kind") if c in names]
+    bad = {**dict.fromkeys(names), **(poison or {}), "ok": False}
 
+    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for *vals, payload in zip(*(pdf[c] for c in keys), pdf["payload"]):
+                key = dict(zip(keys, vals))
+                try:
+                    rows = list(rows_of(bytes(payload), key))
+                except Exception as e:  # undecodable member ≠ failed job
+                    out.append({**bad, **key, "err": f"{type(e).__name__}: {e}"})
+                    continue
+                out += [{**dict.fromkeys(names), **r, **key, "ok": True} for r in rows]
+            # object columns keep int64 values exact beside None; pandas
+            # would widen such a column to float64 and round a 64-bit hash
+            yield pd.DataFrame(out, columns=names, dtype=object)
 
-def decode_aiff(payload: bytes) -> dict:
-    """REAL audio decode for 8/16-bit PCM AIFF (``functions/aiff.py``
-    — big-endian samples, 80-bit extended sample rate): the same exact
-    integer features as :func:`decode_wav`. AIFC compression types
-    raise at the codec seam."""
-    from ..functions.aiff import aiff_samples
-
-    rate, n_ch, arr = aiff_samples(payload)
-    return {
-        "sample_rate": rate,
-        "n_channels": n_ch,
-        "n_samples": int(arr.size),
-        "energy": int((arr * arr).sum()),
-    }
-
-
-def decode_qoi_features(payload: bytes) -> dict:
-    """REAL image decode for QOI (``functions/qoi.py`` — the from-spec
-    run/index/diff/luma codec): same exact integer channel sums as the
-    other image decoders; alpha excluded, the PNG rule."""
-    import numpy as np
-
-    from ..functions.qoi import qoi_pixels
-
-    px = qoi_pixels(payload)
-    s = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
-    return {
-        "width": int(px.shape[1]),
-        "height": int(px.shape[0]),
-        "sum_r": int(s[0]),
-        "sum_g": int(s[1]),
-        "sum_b": int(s[2]),
-    }
-
-
-def decode_avi_features(payload: bytes) -> dict:
-    """REAL video decode for MJPEG AVI (r8): first-frame pixel
-    features via the from-spec JPEG codec + the container's frame
-    count — the video twin of :func:`decode_gif`'s first-frame
-    features. Non-MJPEG AVIs raise at the JPEG layer (no SOI), which
-    is the honest outcome: the container is parsed, the codec isn't
-    available."""
-    import numpy as np
-
-    from ..functions.avi import iter_avi_frames, probe_avi
-    from ..functions.jpeg import decode_jpeg as _jpeg
-
-    meta = probe_avi(payload)
-    first = next(iter(iter_avi_frames(payload)), None)
-    if first is None:
-        raise ValueError("AVI with no video frame chunks")
-    px = _jpeg(first)
-    s = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
-    return {
-        "width": int(px.shape[1]),
-        "height": int(px.shape[0]),
-        "sum_r": int(s[0]),
-        "sum_g": int(s[1]),
-        "sum_b": int(s[2]),
-        "n_frames": int(meta["n_frames"]),
-    }
-
-
-def decode_tiff_features(payload: bytes) -> dict:
-    """REAL image decode for baseline TIFF (``functions/tiff.py``:
-    uncompressed + PackBits, gray/RGB, both byte orders) — same exact
-    integer per-channel sums as :func:`decode_bmp`."""
-    import numpy as np
-
-    from ..functions.tiff import decode_tiff
-
-    px = decode_tiff(payload)
-    s = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
-    return {
-        "width": int(px.shape[1]),
-        "height": int(px.shape[0]),
-        "sum_r": int(s[0]),
-        "sum_g": int(s[1]),
-        "sum_b": int(s[2]),
-    }
+    return media.select(*keys, "payload").mapInPandas(_batch, schema)
 
 
 MEDIA_DECODE_SCHEMA = StructType(
@@ -636,37 +380,13 @@ MEDIA_DECODE_SCHEMA = StructType(
 
 
 def media_decode(media: DataFrame) -> DataFrame:
-    """Distributed REAL media decoding over binary payloads
-    (``mapInPandas``, Arrow batches end-to-end — same plumbing as
-    :func:`media_features`). Rows whose format needs an absent codec
-    come back ``ok=false`` with the error message instead of failing
-    the job — at 100 TB a corpus ALWAYS contains undecodable members,
-    and a poison payload must cost one row, not a stage retry storm.
+    """Distributed REAL media decoding over binary payloads: one
+    :func:`decode_media` row per payload, same Arrow plumbing as
+    :func:`media_features`. Rows whose format needs an absent codec
+    come back ``ok=false`` with the error message (:func:`_per_payload`).
     """
-    from ..session import tune
-
-    tune(media.sparkSession)
-
-    cols = [f.name for f in MEDIA_DECODE_SCHEMA.fields]
-
-    def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                row = {c: None for c in cols}
-                row["media_id"], row["kind"] = mid, kind
-                try:
-                    row.update(decode_media(kind, bytes(payload)))
-                    row["ok"], row["err"] = True, None
-                except Exception as e:  # undecodable member ≠ failed job
-                    row["ok"], row["err"] = False, f"{type(e).__name__}: {e}"
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        _decode_batch, MEDIA_DECODE_SCHEMA
+    return _per_payload(
+        media, MEDIA_DECODE_SCHEMA, lambda p, key: [decode_media(key["kind"], p)]
     )
 
 
@@ -684,14 +404,9 @@ def media_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame
     upstream with ``spark.sql.files.maxPartitionBytes`` or
     ``repartition`` before calling.
     """
-
-    from ..session import tune
-
     tune(media.sparkSession)  # ships this package to the executors
 
     def _features_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         def _entropy(payload: bytes) -> float:
             # numpy per payload: O(n) C-speed histogram, no Python
             # per-byte loop (the byte loop was ~100x slower).
@@ -799,93 +514,45 @@ FRAME_SAMPLE_SCHEMA = StructType(
 
 def media_sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
     """REAL distributed frame sampling over animated payloads: decode
-    each GIF (``functions/gif.py``) or MJPEG AVI (r8 —
-    ``functions/avi.py`` container walk + the from-spec JPEG codec per
-    '00dc' chunk, a true video format on a real pixel path), keep
-    every ``every_k``-th frame, and emit one row per kept frame with
-    exact integer channel sums and a content md5 — the
-    keyframe-extraction stage of a video/animation ingest pipeline,
-    running on actual decoded pixels (``q_media_frame_sample`` is the
-    oracle-graded twin over deterministic text stand-ins; this is the
-    binary lane).
+    each GIF (``functions/gif.py``) or MJPEG AVI (``functions/avi.py``
+    container walk + the from-spec JPEG codec per '00dc' chunk, a true
+    video format on a real pixel path), keep every ``every_k``-th
+    frame, and emit one row per kept frame with exact integer channel
+    sums and a content md5 — the keyframe-extraction stage of a
+    video/animation ingest pipeline, running on actual decoded pixels
+    (``q_media_frame_sample`` is the oracle-graded twin over
+    deterministic text stand-ins; this is the binary lane).
 
     Scale shape: one ``mapInPandas`` pass, payload bytes stay in Arrow
     buffers, per-payload decode cost parallelizes with the corpus, and
-    an undecodable payload yields a single ok=false row (poison
-    contract, like :func:`media_decode`). Fan-out is
-    frames/``every_k`` rows per payload — bounded by the input's own
-    frame count, never corpus-squared.
+    an undecodable payload yields a single ok=false row with
+    ``frame_idx`` -1 and zero sums (the schema's columns are
+    non-nullable). Fan-out is frames/``every_k`` rows per payload —
+    bounded by the input's own frame count, never corpus-squared.
     """
-    import hashlib
 
-    from ..functions.gif import decode_gif as _gif
-    from ..session import tune
-
-    tune(media.sparkSession)
-    cols = [f.name for f in FRAME_SAMPLE_SCHEMA.fields]
-
-    def _frames_of(payload: bytes):
-        """(width, height, [frames]) for every animated container the
-        repo can decode: GIF (from-spec LZW) and MJPEG AVI (r8 —
-        '00dc' chunks are standalone baseline JPEGs, decoded by
-        ``functions/jpeg.py``; the one VIDEO format with a real pixel
-        path here)."""
-        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            from ..functions.avi import iter_avi_frames
-            from ..functions.jpeg import decode_jpeg as _jpeg
-
-            frames = [_jpeg(f) for f in iter_avi_frames(payload)]
+    def _frames(payload: bytes, _key: dict) -> list[dict]:
+        if sniff(payload) == "avi":
+            frames = [decode_jpeg(f) for f in iter_avi_frames(payload)]
             if not frames:
                 raise ValueError("AVI with no video frame chunks")
-            h, w = frames[0].shape[:2]
-            return w, h, frames
-        dec = _gif(payload)
-        return dec["width"], dec["height"], dec["frames"]
+        else:  # the GIF decoder rejects anything that is not a GIF
+            frames = decode_gif(payload)["frames"]
+        return [
+            {
+                **_image_features(frames[i]),
+                "frame_idx": i,
+                "frame_md5": hashlib.md5(frames[i].tobytes()).hexdigest(),
+            }
+            for i in range(0, len(frames), every_k)
+        ]
 
-    def _sample_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    width, height, frames = _frames_of(bytes(payload))
-                    for i in range(0, len(frames), every_k):
-                        fr = frames[i]
-                        s = fr.reshape(-1, 3).astype("int64").sum(axis=0)
-                        out.append(
-                            {
-                                "media_id": mid,
-                                "frame_idx": i,
-                                "width": width,
-                                "height": height,
-                                "sum_r": int(s[0]),
-                                "sum_g": int(s[1]),
-                                "sum_b": int(s[2]),
-                                "frame_md5": hashlib.md5(
-                                    fr.tobytes()
-                                ).hexdigest(),
-                                "ok": True,
-                                "err": None,
-                            }
-                        )
-                except Exception as e:  # poison payload → one row
-                    out.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": -1,
-                            "width": 0,
-                            "height": 0,
-                            "sum_r": 0,
-                            "sum_g": 0,
-                            "sum_b": 0,
-                            "frame_md5": "",
-                            "ok": False,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(out, columns=cols)
-
-    return media.select("media_id", "payload").mapInPandas(
-        _sample_batch, FRAME_SAMPLE_SCHEMA
+    zero = dict.fromkeys(("width", "height", "sum_r", "sum_g", "sum_b"), 0)
+    return _per_payload(
+        media,
+        FRAME_SAMPLE_SCHEMA,
+        _frames,
+        poison={**zero, "frame_idx": -1, "frame_md5": ""},
     )
 
 
@@ -905,277 +572,157 @@ MEDIA_PROBE_SCHEMA = StructType(
 )
 
 
-def media_probe(media: DataFrame) -> DataFrame:
-    """Distributed CONTAINER metadata probe for video payloads
-    (ISO-BMFF/MP4/MOV via ``functions/mp4.py``) — the stage a 100 TB
-    video corpus runs FIRST: duration / resolution / codec filters
-    need only box structures, no codec library, so the expensive
-    pixel decode (still behind :func:`_decode_stub` for H.264/AAC)
-    is reserved for the rows that survive. Same mapInPandas / Arrow /
-    one-poison-row-per-payload contract as :func:`media_decode`.
-    """
-    from ..functions.mp3 import probe_mp3
-    from ..functions.mp4 import probe_mp4
-    from ..session import tune
+def _header_dims(fmt: str, payload: bytes) -> tuple[int, int]:
+    """(width, height) of a still image from its header alone."""
+    if fmt == "bmp":
+        w, h = struct.unpack_from("<ii", payload, 18)
+        return w, abs(h)
+    if fmt == "png":
+        return struct.unpack_from(">II", payload, 16)
+    if fmt == "jpeg":
+        for marker, start, _len in _iter_jpeg_segments(payload):
+            if marker in (0xC0, 0xC1, 0xC2):  # SOF0/1/2
+                h, w = struct.unpack_from(">HH", payload, start + 5)
+                return w, h
+        raise ValueError("JPEG without SOF header")
+    m = (probe_tiff if fmt == "tiff" else probe_qoi)(payload)
+    return m["width"], m["height"]
 
-    tune(media.sparkSession)
-    cols = [f.name for f in MEDIA_PROBE_SCHEMA.fields]
 
-    def _probe_one(payload: bytes) -> dict:
-        if payload[4:8] == b"ftyp":
-            meta = probe_mp4(payload)
-            vid = next(
-                (t for t in meta["tracks"] if t["handler"] == "vide"), None
-            )
-            aud = next(
-                (t for t in meta["tracks"] if t["handler"] == "soun"), None
-            )
-            return dict(
-                ok=True,
-                container=meta["brand"],
-                duration_sec=meta["duration_sec"],
-                n_tracks=meta["n_tracks"],
-                video_codec=vid["codec"] if vid else None,
-                audio_codec=aud["codec"] if aud else None,
-                width=vid["width"] if vid else None,
-                height=vid["height"] if vid else None,
-            )
-        if payload[:3] == b"ID3" or (
-            len(payload) >= 2
-            and payload[0] == 0xFF
-            and (payload[1] & 0xE0) == 0xE0
-        ):
-            meta = probe_mp3(payload)
-            return dict(
-                ok=True,
-                container="mp3",
-                duration_sec=meta["duration_sec"],
-                n_tracks=1,
-                audio_codec="mp3",
-            )
-        # header-only probes for the formats the repo can also fully
-        # decode — dims/duration WITHOUT pixel/sample work (the cheap
-        # corpus-filter path; decode_media is the expensive path)
-        import struct as _s
-
-        if payload[:2] == b"BM":
-            w, h = _s.unpack_from("<ii", payload, 18)
-            return dict(ok=True, container="bmp", n_tracks=1, width=w, height=abs(h))
-        if payload[:8] == _PNG_SIG:
-            w, h = _s.unpack_from(">II", payload, 16)
-            return dict(ok=True, container="png", n_tracks=1, width=w, height=h)
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            from ..functions.gif import probe_gif
-
-            m = probe_gif(payload)
-            return dict(
-                ok=True,
-                container="gif",
-                duration_sec=m["duration_sec"],
-                n_tracks=m["n_frames"],
-                width=m["width"],
-                height=m["height"],
-            )
-        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            from ..functions.avi import probe_avi
-
-            m = probe_avi(payload)
-            return dict(
-                ok=True,
-                container="avi",
-                duration_sec=round(
-                    (m["n_frames"] or 0) * (m["us_per_frame"] or 0) / 1e6, 3
-                ),
-                n_tracks=m["n_streams"],
-                video_codec=m["video_handler"],
-                width=m["width"],
-                height=m["height"],
-            )
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-            from ..functions.g711 import (
-                WAVE_FORMAT_ALAW,
-                WAVE_FORMAT_MULAW,
-                parse_wav_fmt,
-            )
-
-            fmt = parse_wav_fmt(payload)
-            if fmt["format_tag"] in (WAVE_FORMAT_MULAW, WAVE_FORMAT_ALAW):
-                # G.711: one byte per sample per channel
-                n = len(fmt["data"]) // max(fmt["n_channels"], 1)
-                return dict(
-                    ok=True,
-                    container="wav",
-                    duration_sec=round(n / fmt["sample_rate"], 3),
-                    n_tracks=fmt["n_channels"],
-                    audio_codec=(
-                        "ulaw"
-                        if fmt["format_tag"] == WAVE_FORMAT_MULAW
-                        else "alaw"
-                    ),
-                )
-            from ..functions.adpcm import (
-                WAVE_FORMAT_IMA_ADPCM,
-                adpcm_n_samples,
-            )
-
-            if fmt["format_tag"] == WAVE_FORMAT_IMA_ADPCM:
-                if "block_align" not in fmt or fmt["block_align"] < 5:
-                    raise ValueError(
-                        "IMA ADPCM fmt chunk without usable block align"
-                    )
-                if fmt["n_channels"] not in (1, 2):
-                    raise NotImplementedError(
-                        f"{fmt['n_channels']}-channel IMA ADPCM"
-                    )
-                # per-channel frame count from block geometry (mono
-                # bytes-to-samples or stereo group layout), no decode
-                n = adpcm_n_samples(
-                    len(fmt["data"]),
-                    fmt["block_align"],
-                    fmt["n_channels"],
-                )
-                return dict(
-                    ok=True,
-                    container="wav",
-                    duration_sec=round(n / fmt["sample_rate"], 3),
-                    n_tracks=fmt["n_channels"],
-                    audio_codec="ima_adpcm",
-                )
-            import io
-            import wave
-
-            with wave.open(io.BytesIO(payload)) as wf:
-                return dict(
-                    ok=True,
-                    container="wav",
-                    duration_sec=round(wf.getnframes() / wf.getframerate(), 3),
-                    n_tracks=wf.getnchannels(),
-                    audio_codec="pcm",
-                )
-        if payload[:3] == b"\xff\xd8\xff":
-            from ..functions.exif import _iter_jpeg_segments
-
-            for marker, start, _len in _iter_jpeg_segments(payload):
-                if marker in (0xC0, 0xC1, 0xC2):  # SOF0/1/2
-                    h, w = _s.unpack_from(">HH", payload, start + 5)
-                    return dict(
-                        ok=True, container="jpeg", n_tracks=1, width=w, height=h
-                    )
-            raise ValueError("JPEG without SOF header")
-        if payload[:2] in (b"II", b"MM"):
-            from ..functions.tiff import probe_tiff
-
-            m = probe_tiff(payload)
-            return dict(
-                ok=True,
-                container="tiff",
-                n_tracks=1,
-                width=m["width"],
-                height=m["height"],
-            )
-        if payload[:4] == b"qoif":
-            from ..functions.qoi import probe_qoi
-
-            m = probe_qoi(payload)
-            return dict(
-                ok=True,
-                container="qoi",
-                n_tracks=1,
-                width=m["width"],
-                height=m["height"],
-            )
-        if payload[:4] == b"FORM" and payload[8:12] in (b"AIFF", b"AIFC"):
-            from ..functions.aiff import probe_aiff
-
-            m = probe_aiff(payload)
-            return dict(
-                ok=True,
-                container=m["form"].lower(),
-                duration_sec=m["duration_sec"],
-                n_tracks=m["n_channels"],
-                audio_codec=m["codec"],
-            )
-        if payload[:4] == b".snd":
-            from ..functions.au import probe_au
-
-            m = probe_au(payload)
-            return dict(
-                ok=True,
-                container="au",
-                duration_sec=m["duration_sec"],
-                n_tracks=m["n_channels"],
-                audio_codec=m["codec"],
-            )
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-            from ..functions.webp import probe_webp
-
-            m = probe_webp(payload)
-            return dict(
-                ok=True,
-                container="webp",
-                n_tracks=1,
-                video_codec=m["codec"],
-                width=m["width"],
-                height=m["height"],
-            )
-        if payload[:4] == b"\x1a\x45\xdf\xa3":
-            from ..functions.ebml import probe_webm
-
-            m = probe_webm(payload)
-            return dict(
-                ok=True,
-                container=m["doctype"],
-                duration_sec=m["duration_sec"],
-                n_tracks=m["n_tracks"],
-                video_codec=m["video_codec"],
-                audio_codec=m["audio_codec"],
-                width=m["width"],
-                height=m["height"],
-            )
-        if payload[:4] == b"fLaC":
-            from ..functions.flac import probe_flac
-
-            m = probe_flac(payload)
-            return dict(
-                ok=True,
-                container="flac",
-                duration_sec=m["duration_sec"],
-                n_tracks=m["n_channels"],
-                audio_codec="flac",
-            )
-        if payload[:4] == b"OggS":
-            from ..functions.ogg import probe_ogg
-
-            m = probe_ogg(payload)
-            return dict(
-                ok=True,
-                container="ogg",
-                duration_sec=m["duration_sec"],
-                n_tracks=m["n_channels"],
-                audio_codec=m["codec"],
-            )
-        raise ValueError(
-            "unrecognized container "
-            "(ISO-BMFF/MP3/BMP/PNG/GIF/WAV/AIFF/AU/JPEG/TIFF/QOI/WEBP/"
-            "WEBM/FLAC/OGG/AVI)"
+def _probe_wav(payload: bytes) -> dict:
+    """WAV duration and codec from the fmt chunk and data length."""
+    fmt = parse_wav_fmt(payload)
+    if fmt["format_tag"] in (WAVE_FORMAT_MULAW, WAVE_FORMAT_ALAW):
+        # G.711: one byte per sample per channel
+        n = len(fmt["data"]) // max(fmt["n_channels"], 1)
+        return dict(
+            container="wav",
+            duration_sec=round(n / fmt["sample_rate"], 3),
+            n_tracks=fmt["n_channels"],
+            audio_codec=(
+                "ulaw" if fmt["format_tag"] == WAVE_FORMAT_MULAW else "alaw"
+            ),
+        )
+    if fmt["format_tag"] == WAVE_FORMAT_IMA_ADPCM:
+        if "block_align" not in fmt or fmt["block_align"] < 5:
+            raise ValueError("IMA ADPCM fmt chunk without usable block align")
+        if fmt["n_channels"] not in (1, 2):
+            raise NotImplementedError(f"{fmt['n_channels']}-channel IMA ADPCM")
+        # per-channel frame count from block geometry (mono
+        # bytes-to-samples or stereo group layout), no decode
+        n = adpcm_n_samples(len(fmt["data"]), fmt["block_align"], fmt["n_channels"])
+        return dict(
+            container="wav",
+            duration_sec=round(n / fmt["sample_rate"], 3),
+            n_tracks=fmt["n_channels"],
+            audio_codec="ima_adpcm",
+        )
+    with wave.open(io.BytesIO(payload)) as wf:
+        return dict(
+            container="wav",
+            duration_sec=round(wf.getnframes() / wf.getframerate(), 3),
+            n_tracks=wf.getnchannels(),
+            audio_codec="pcm",
         )
 
-    def _probe_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                row = {c: None for c in cols}
-                row["media_id"] = mid
-                try:
-                    row.update(_probe_one(bytes(payload)))
-                except Exception as e:
-                    row.update(ok=False, err=f"{type(e).__name__}: {e}")
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
 
-    return media.select("media_id", "payload").mapInPandas(
-        _probe_batch, MEDIA_PROBE_SCHEMA
+_AUDIO_PROBES = {"aiff": probe_aiff, "au": probe_au, "flac": probe_flac, "ogg": probe_ogg}
+
+
+def _probe_one(payload: bytes) -> dict:
+    """MEDIA_PROBE_SCHEMA columns of one payload from its container
+    headers only — dims/duration/codecs WITHOUT pixel or sample work
+    (the cheap corpus-filter path; :func:`decode_media` is the
+    expensive one)."""
+    fmt = sniff(payload)
+    if fmt == "mp4":
+        meta = probe_mp4(payload)
+        vid = next((t for t in meta["tracks"] if t["handler"] == "vide"), None)
+        aud = next((t for t in meta["tracks"] if t["handler"] == "soun"), None)
+        return dict(
+            container=meta["brand"],
+            duration_sec=meta["duration_sec"],
+            n_tracks=meta["n_tracks"],
+            video_codec=vid["codec"] if vid else None,
+            audio_codec=aud["codec"] if aud else None,
+            width=vid["width"] if vid else None,
+            height=vid["height"] if vid else None,
+        )
+    if fmt == "mp3":
+        m = probe_mp3(payload)
+        return dict(
+            container="mp3", duration_sec=m["duration_sec"], n_tracks=1, audio_codec="mp3"
+        )
+    if fmt in ("bmp", "png", "jpeg", "tiff", "qoi"):
+        w, h = _header_dims(fmt, payload)
+        return dict(container=fmt, n_tracks=1, width=w, height=h)
+    if fmt == "gif":
+        m = probe_gif(payload)
+        return dict(
+            container="gif",
+            duration_sec=m["duration_sec"],
+            n_tracks=m["n_frames"],
+            width=m["width"],
+            height=m["height"],
+        )
+    if fmt == "avi":
+        m = probe_avi(payload)
+        return dict(
+            container="avi",
+            duration_sec=round(
+                (m["n_frames"] or 0) * (m["us_per_frame"] or 0) / 1e6, 3
+            ),
+            n_tracks=m["n_streams"],
+            video_codec=m["video_handler"],
+            width=m["width"],
+            height=m["height"],
+        )
+    if fmt == "wav":
+        return _probe_wav(payload)
+    if fmt in _AUDIO_PROBES:  # AIFF/AIFC reports its form as the container
+        m = _AUDIO_PROBES[fmt](payload)
+        return dict(
+            container=m.get("form", fmt).lower(),
+            duration_sec=m["duration_sec"],
+            n_tracks=m["n_channels"],
+            audio_codec=m.get("codec", fmt),
+        )
+    if fmt == "webp":
+        m = probe_webp(payload)
+        return dict(
+            container="webp",
+            n_tracks=1,
+            video_codec=m["codec"],
+            width=m["width"],
+            height=m["height"],
+        )
+    if fmt == "webm":
+        m = probe_webm(payload)
+        return dict(
+            container=m["doctype"],
+            duration_sec=m["duration_sec"],
+            n_tracks=m["n_tracks"],
+            video_codec=m["video_codec"],
+            audio_codec=m["audio_codec"],
+            width=m["width"],
+            height=m["height"],
+        )
+    raise ValueError(
+        "unrecognized container "
+        "(ISO-BMFF/MP3/BMP/PNG/GIF/WAV/AIFF/AU/JPEG/TIFF/QOI/WEBP/"
+        "WEBM/FLAC/OGG/AVI)"
     )
+
+
+def media_probe(media: DataFrame) -> DataFrame:
+    """Distributed CONTAINER metadata probe (:func:`_probe_one`) — the
+    stage a 100 TB video corpus runs FIRST: duration / resolution /
+    codec filters need only box structures, no codec library, so the
+    expensive pixel decode (still behind :func:`_decode_stub` for
+    H.264/AAC) is reserved for the rows that survive. One row per
+    payload; a failing probe is a poison row (:func:`_per_payload`).
+    """
+    return _per_payload(media, MEDIA_PROBE_SCHEMA, lambda p, _key: [_probe_one(p)])
 
 
 PHASH_SCHEMA = StructType(
@@ -1208,76 +755,44 @@ def media_audio_frames(media: DataFrame, frame_len: int = 512) -> DataFrame:
     frame's exact int64 energy and strict-sign zero-crossing count
     (``x[i]·x[i+1] < 0`` — the VAD/silence-detection pair of
     features). The final partial frame is emitted too, so per-frame
-    energies sum exactly to :func:`decode_wav`'s whole-clip energy —
+    energies sum exactly to :func:`decode_media`'s whole-clip energy —
     a pinned invariant. Undecodable payloads emit ONE poison row
-    (frame_idx NULL), the :func:`media_decode` contract.
+    (frame_idx NULL, :func:`_per_payload`).
 
     Scale shape: map-only fan-out over Arrow batches (rows out ≈
     seconds of audio × rate / frame_len); no shuffle here — windowed
     aggregations downstream group on (media_id, frame_idx) like any
     fact table.
     """
-    from ..session import tune
-
-    tune(media.sparkSession)
-
     if frame_len < 2:
         raise ValueError("frame_len must be >= 2")
-    cols = [f.name for f in AUDIO_FRAMES_SCHEMA]
 
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _frames(payload: bytes, _key: dict) -> list[dict]:
+        _, n_ch, arr = wav_samples(payload)
+        if n_ch != 1:
+            # interleaved multi-channel samples would make the flat
+            # zero-crossing scan count L/R sign flips as crossings —
+            # refuse rather than emit ok=true garbage (mono baseline)
+            raise NotImplementedError(f"{n_ch}-channel WAV frame features")
+        # strict sign changes, attributed to the frame of the EARLIER
+        # sample (so frame counts sum to the clip's). A decodable clip
+        # with ZERO samples has zero frames — it emits no rows.
+        flips = (arr[:-1] * arr[1:]) < 0
+        rows = []
+        for i in range(0, arr.size, frame_len):
+            fr = arr[i : i + frame_len]
+            zc = flips[i : min(i + frame_len, flips.size)]
+            rows.append(
+                {
+                    "frame_idx": i // frame_len,
+                    "n_samples": int(fr.size),
+                    "energy": int((fr * fr).sum()),
+                    "zero_crossings": int(zc.sum()),
+                }
+            )
+        return rows
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _, n_ch, arr = wav_samples(bytes(payload))
-                    if n_ch != 1:
-                        # interleaved multi-channel samples would make
-                        # the flat zero-crossing scan count L/R sign
-                        # flips as crossings — refuse rather than emit
-                        # ok=true garbage (mono baseline, like ADPCM)
-                        raise NotImplementedError(
-                            f"{n_ch}-channel WAV frame features"
-                        )
-                except Exception as e:
-                    out.append(
-                        {
-                            "media_id": mid,
-                            "ok": False,
-                            "err": f"{type(e).__name__}: {e}",
-                            "frame_idx": None,
-                            "n_samples": None,
-                            "energy": None,
-                            "zero_crossings": None,
-                        }
-                    )
-                    continue
-                # strict sign changes, attributed to the frame of the
-                # EARLIER sample (so frame counts sum to the clip's).
-                # A decodable clip with ZERO samples has zero frames —
-                # it emits no rows (one row per frame, not per clip).
-                flips = (arr[:-1] * arr[1:]) < 0
-                for i in range(0, arr.size, frame_len):
-                    fr = arr[i : i + frame_len]
-                    zc = flips[i : min(i + frame_len, flips.size)]
-                    out.append(
-                        {
-                            "media_id": mid,
-                            "ok": True,
-                            "err": None,
-                            "frame_idx": i // frame_len,
-                            "n_samples": int(fr.size),
-                            "energy": int((fr * fr).sum()),
-                            "zero_crossings": int(zc.sum()),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=cols)
-
-    return media.select("media_id", "payload").mapInPandas(
-        _batch, AUDIO_FRAMES_SCHEMA
-    )
+    return _per_payload(media, AUDIO_FRAMES_SCHEMA, _frames)
 
 
 RESIZE_SCHEMA = StructType(
@@ -1304,93 +819,60 @@ def media_resize(
     — the resize stage of the multimodal pipeline (decode →
     feature-extract → RESIZE → frame-sample, the brief's four image
     verbs). Decode goes through the same from-spec
-    BMP/PNG/GIF/JPEG/TIFF dispatch as the dHash lane
+    BMP/PNG/GIF/JPEG/TIFF/QOI dispatch as the dHash lane
     (:func:`..functions.phash.pixels_of`); the scale-down is the
     exact-integer area mean (:func:`..functions.phash.box_resize`) so
-    thumbnail bytes are bitwise-reproducible across executors, rounds,
+    thumbnail bytes are bitwise-reproducible across executors, runs,
     and source containers (a PNG and a BMP of the same pixels thumb
     identically — pinned in pytest); the re-encode is the 24-bit BMP
     composer. Images already smaller than the target in either
-    dimension clamp that dimension (never upscale). Per-row ok/err
-    poison isolation, the :func:`media_decode` contract.
+    dimension clamp that dimension (never upscale). One poison row per
+    undecodable payload (:func:`_per_payload`).
 
     Scale shape: map-only over Arrow batches — no shuffle, no state;
     partition sizing follows payload bytes (``spread`` upstream), the
     same rule as ``media_features``.
     """
-    from ..functions.phash import box_resize, build_test_bmp, pixels_of
-    from ..session import tune
-
-    tune(media.sparkSession)
-
     if out_h < 1 or out_w < 1:
         # fail fast on the driver — inside the executor try/except an
         # argument typo would poison EVERY row and read as data quality
         raise ValueError(f"target size {out_h}x{out_w} must be >= 1x1")
-    cols = [f.name for f in RESIZE_SCHEMA]
 
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                row = dict.fromkeys(cols)
-                row.update(media_id=mid, ok=False)
-                try:
-                    px = pixels_of(bytes(payload))
-                    h, w = px.shape[:2]
-                    th, tw = min(out_h, h), min(out_w, w)
-                    thumb = box_resize(px, th, tw)
-                    s = thumb.reshape(-1, 3).astype("int64").sum(axis=0)
-                    row.update(
-                        ok=True,
-                        src_w=w,
-                        src_h=h,
-                        out_w=tw,
-                        out_h=th,
-                        thumb=build_test_bmp(thumb),
-                        r_sum=int(s[0]),
-                        g_sum=int(s[1]),
-                        b_sum=int(s[2]),
-                    )
-                except Exception as e:
-                    row["err"] = f"{type(e).__name__}: {e}"
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
+    def _thumb(payload: bytes, _key: dict) -> list[dict]:
+        px = pixels_of(payload)
+        h, w = px.shape[:2]
+        th, tw = min(out_h, h), min(out_w, w)
+        thumb = box_resize(px, th, tw)
+        s = thumb.reshape(-1, 3).astype("int64").sum(axis=0)
+        return [
+            dict(
+                src_w=w,
+                src_h=h,
+                out_w=tw,
+                out_h=th,
+                thumb=build_test_bmp(thumb),
+                r_sum=int(s[0]),
+                g_sum=int(s[1]),
+                b_sum=int(s[2]),
+            )
+        ]
 
-    return media.select("media_id", "payload").mapInPandas(
-        _batch, RESIZE_SCHEMA
-    )
+    return _per_payload(media, RESIZE_SCHEMA, _thumb)
 
 
 def media_phash(media: DataFrame) -> DataFrame:
     """64-bit perceptual dHash per media row — decode (from-spec
-    BMP/PNG/GIF/JPEG, :func:`..functions.phash.pixels_of`) + exact
-    integer difference hash (:func:`..functions.phash.dhash64`),
+    BMP/PNG/GIF/JPEG/TIFF/QOI, :func:`..functions.phash.pixels_of`) +
+    exact integer difference hash (:func:`..functions.phash.dhash64`),
     executor-side over Arrow batches; one poison row per bad payload
-    (the :func:`media_decode` contract). The image half of near-dup
-    detection: downstream, hashes group exactly (re-encodes of the
-    same pixels collide bitwise) and band-join for Hamming near-dups
-    with the SimHash machinery (``functions.hashing.hamming64``).
+    (:func:`_per_payload`). The image half of near-dup detection:
+    downstream, hashes group exactly (re-encodes of the same pixels
+    collide bitwise) and band-join for Hamming near-dups with the
+    SimHash machinery (``functions.hashing.hamming64``).
     """
-    from ..functions.phash import dhash64, pixels_of
-    from ..session import tune
-
-    tune(media.sparkSession)
-
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                row = {"media_id": mid, "phash": None, "ok": False, "err": None}
-                try:
-                    row["phash"] = dhash64(pixels_of(bytes(payload)))
-                    row["ok"] = True
-                except Exception as e:
-                    row["err"] = f"{type(e).__name__}: {e}"
-                out.append(row)
-            yield pd.DataFrame(out, columns=[f.name for f in PHASH_SCHEMA])
-
-    return media.select("media_id", "payload").mapInPandas(_batch, PHASH_SCHEMA)
+    return _per_payload(
+        media, PHASH_SCHEMA, lambda p, _key: [{"phash": dhash64(pixels_of(p))}]
+    )
 
 
 PHASH_SEEDS = 50  # distinct base images planted in the fixture query
@@ -1419,9 +901,6 @@ def q_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant links found, zero cross-seed links at the threshold) and
     pure-Python recompute, the media_decode convention.
     """
-    from ..functions.hashing import hamming64
-    from ..sources.catalog import load_table, spread
-
     # spread(): the fixture arrives as ONE parquet file = one partition,
     # so the synth+encode+decode+dHash pandas stage — the lane's whole
     # per-image cost — ran as a single serial Python task (measured
@@ -1433,13 +912,6 @@ def q_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.phash import (
-            build_test_bmp,
-            dhash64,
-            pixels_of,
-            seeded_test_image,
-        )
-
         for pdf in batches:
             out = []
             for did in pdf["doc_id"]:
@@ -1517,42 +989,27 @@ def media_exif(media: DataFrame) -> DataFrame:
     image corpus ships. GPS coordinates surface as exact integer
     micro-degrees (for audit joins/filters); pixels are untouched —
     the entropy-coded stream is copied byte-identical, so downstream
-    decode/phash results are unchanged. Same mapInPandas / Arrow /
-    one-poison-row-per-payload contract as :func:`media_decode`.
+    decode/phash results are unchanged. One row per payload, a poison
+    row for a bad one (:func:`_per_payload`).
     """
-    from ..functions.exif import probe_exif, scrub_gps
-    from ..session import tune
 
-    tune(media.sparkSession)
-    cols = [f.name for f in EXIF_SCHEMA.fields]
+    def _exif(payload: bytes, _key: dict) -> list[dict]:
+        meta = probe_exif(payload)
+        return [
+            dict(
+                has_exif=meta["has_exif"],
+                orientation=meta["orientation"],
+                taken_at=meta["datetime"],
+                make=meta["make"],
+                model=meta["model"],
+                has_gps=meta["has_gps"],
+                gps_lat_udeg=meta["gps_lat_udeg"],
+                gps_lon_udeg=meta["gps_lon_udeg"],
+                scrubbed=bytearray(scrub_gps(payload)),
+            )
+        ]
 
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                row = {c: None for c in cols}
-                row.update(media_id=mid, ok=False)
-                try:
-                    p = bytes(payload)
-                    meta = probe_exif(p)
-                    row.update(
-                        has_exif=meta["has_exif"],
-                        orientation=meta["orientation"],
-                        taken_at=meta["datetime"],
-                        make=meta["make"],
-                        model=meta["model"],
-                        has_gps=meta["has_gps"],
-                        gps_lat_udeg=meta["gps_lat_udeg"],
-                        gps_lon_udeg=meta["gps_lon_udeg"],
-                        scrubbed=bytearray(scrub_gps(p)),
-                        ok=True,
-                    )
-                except Exception as e:
-                    row.update(err=f"{type(e).__name__}: {e}")
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return media.select("media_id", "payload").mapInPandas(_batch, EXIF_SCHEMA)
+    return _per_payload(media, EXIF_SCHEMA, _exif)
 
 
 QUERIES: list[Query] = [

@@ -107,6 +107,15 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
+def loop_partitions(df: DataFrame, n_rows: int) -> int:
+    """Partition count for a frame an iterative loop re-reads every
+    round: ≈1M rows per partition, at least one, never more than ``df``
+    has now. Inherited file partitioning would make every round pay its
+    map-task scheduling for a frame of a few thousand id pairs; at
+    scale the count still grows with the rows."""
+    return max(1, min(df.rdd.getNumPartitions(), -(-n_rows // 1_000_000)))
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for spark.sql() use."""
     for name in TABLES:

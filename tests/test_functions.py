@@ -186,3 +186,35 @@ def test_sketch_builders_stay_within_gateway_budget(spark, build):
     with gateway_commands(spark) as sent:
         build(sh, sig)
     assert sent[0] <= 200, sent[0]
+
+
+def test_functions_layer_imports_no_operators():
+    # functions/ is the bottom layer: operators, streaming and plans
+    # build on it, never the other way round.
+    import ast
+
+    import data_ingestion_s3_to_parquet_spark as pkg
+
+    upper = {"operators", "streaming", "plans"}
+    bad = []
+    for path in sorted((Path(pkg.__file__).parent / "functions").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                if node.level == 1:  # a sibling in functions/
+                    continue
+                parts = (node.module or "").split(".")
+                if node.level == 0 and parts[0] == pkg.__name__:
+                    parts = parts[1:]
+                elif node.level == 0:
+                    continue
+                names = [parts[0]] if parts[0] else [a.name for a in node.names]
+            elif isinstance(node, ast.Import):
+                names = [
+                    a.name.split(".")[1]
+                    for a in node.names
+                    if a.name.startswith(pkg.__name__ + ".")
+                ]
+            else:
+                continue
+            bad += [f"{path.name}:{node.lineno}" for n in names if n in upper]
+    assert not bad, bad

@@ -3559,7 +3559,6 @@ def test_decode_png_all_filters_and_color_types():
 
     from data_ingestion_s3_to_parquet_spark.operators.multimodal import (
         decode_media,
-        decode_png,
     )
 
     def chunk(ctype, data):
@@ -3609,20 +3608,20 @@ def test_decode_png_all_filters_and_color_types():
     rng = np.random.default_rng(7)
     # RGB, every filter type across rows
     px = rng.integers(0, 256, size=(5, 4, 3), dtype=np.uint8)
-    got = decode_png(encode(px, 2, [0, 1, 2, 3, 4]))
+    got = decode_media("image", encode(px, 2, [0, 1, 2, 3, 4]))
     s = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
     assert (got["width"], got["height"]) == (4, 5)
     assert (got["sum_r"], got["sum_g"], got["sum_b"]) == tuple(s)
 
     # RGBA: alpha excluded from sums; Paeth-only filtering
     px4 = rng.integers(0, 256, size=(3, 3, 4), dtype=np.uint8)
-    got4 = decode_png(encode(px4, 6, [4]))
+    got4 = decode_media("image", encode(px4, 6, [4]))
     s4 = px4[:, :, :3].reshape(-1, 3).astype(np.int64).sum(axis=0)
     assert (got4["sum_r"], got4["sum_g"], got4["sum_b"]) == tuple(s4)
 
     # grayscale: one channel maps to all three sums; Sub filtering
     pxg = rng.integers(0, 256, size=(4, 6, 1), dtype=np.uint8)
-    gotg = decode_png(encode(pxg, 0, [1]))
+    gotg = decode_media("image", encode(pxg, 0, [1]))
     g = int(pxg.astype(np.int64).sum())
     assert (gotg["sum_r"], gotg["sum_g"], gotg["sum_b"]) == (g, g, g)
 
@@ -3645,7 +3644,7 @@ def test_decode_png_all_filters_and_color_types():
         + chunk(b"IDAT", z[len(z) // 2 :])
         + chunk(b"IEND", b"")
     )
-    gm = decode_png(multi)
+    gm = decode_media("image", multi)
     assert (gm["sum_r"], gm["sum_g"], gm["sum_b"]) == tuple(s)
     bad_ihdr = struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0)
     bad = (
@@ -3655,7 +3654,7 @@ def test_decode_png_all_filters_and_color_types():
         + chunk(b"IEND", b"")
     )
     with _pytest.raises(NotImplementedError, match="16"):
-        decode_png(bad)
+        decode_media("image", bad)
 
 
 def test_artifact_pointer_swap_interleaved_writers(spark, tmp_path, monkeypatch):
@@ -4867,6 +4866,32 @@ def test_media_phash_distributed_with_poison_row(spark):
     assert not got[2].ok and got[2].err and got[2].phash is None
 
 
+def test_media_phash_stays_exact_beside_poison_rows_in_one_batch(spark):
+    # a poison row's NULL hash in the same Arrow batch must not widen
+    # the batch's hash column to float64, which rounds away low bits
+    from data_ingestion_s3_to_parquet_spark.functions.phash import (
+        build_test_bmp,
+        dhash64,
+        seeded_test_image,
+    )
+    from data_ingestion_s3_to_parquet_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        media_phash,
+    )
+
+    imgs = [seeded_test_image(s, h=10, w=13) for s in range(1, 4)]
+    rows = [
+        (i, "image", bytearray(build_test_bmp(img)), None, None, None, None)
+        for i, img in enumerate(imgs, start=1)
+    ] + [(9, "image", bytearray(b"\x00garbage"), None, None, None, None)]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1)
+    got = {r.media_id: r.phash for r in media_phash(media).collect()}
+    assert got == {
+        **{i: dhash64(img) for i, img in enumerate(imgs, start=1)},
+        9: None,
+    }
+
+
 def test_media_phash_query_links_exactly_the_planted_near_dups(spark, sf_dir):
     # seeds plant PHASH_VARIANTS near-dup variants per base image: the
     # banded Hamming join over group representatives must link ALL
@@ -5106,6 +5131,166 @@ def test_media_probe_covers_all_header_only_formats(spark):
     u = got[11]
     assert (u.container, u.audio_codec, u.n_tracks) == ("au", "pcm16", 1)
     assert u.duration_sec == 0.25  # 4000 frames at 16 kHz
+
+
+def _media_corpus() -> list[tuple]:
+    """MEDIA_SCHEMA rows: one payload per format the media operators
+    know, built with the repo's own encoders, plus poison payloads."""
+    import io
+    import struct
+    import wave
+    import zlib
+
+    import numpy as np
+
+    from data_ingestion_s3_to_parquet_spark.functions.adpcm import build_adpcm_wav
+    from data_ingestion_s3_to_parquet_spark.functions.aiff import (
+        _encode_extended80,
+        build_aiff,
+    )
+    from data_ingestion_s3_to_parquet_spark.functions.au import build_au
+    from data_ingestion_s3_to_parquet_spark.functions.avi import build_mjpeg_avi
+    from data_ingestion_s3_to_parquet_spark.functions.ebml import build_test_webm
+    from data_ingestion_s3_to_parquet_spark.functions.exif import (
+        attach_app1,
+        build_exif_app1,
+    )
+    from data_ingestion_s3_to_parquet_spark.functions.flac import (
+        build_flac_streaminfo,
+    )
+    from data_ingestion_s3_to_parquet_spark.functions.g711 import build_g711_wav
+    from data_ingestion_s3_to_parquet_spark.functions.gif import encode_gif
+    from data_ingestion_s3_to_parquet_spark.functions.jpeg import encode_jpeg
+    from data_ingestion_s3_to_parquet_spark.functions.mp3 import build_mp3_frames
+    from data_ingestion_s3_to_parquet_spark.functions.mp4 import build_minimal_mp4
+    from data_ingestion_s3_to_parquet_spark.functions.ogg import build_ogg_opus
+    from data_ingestion_s3_to_parquet_spark.functions.phash import (
+        build_png,
+        build_test_bmp,
+        seeded_test_image,
+    )
+    from data_ingestion_s3_to_parquet_spark.functions.qoi import build_qoi
+    from data_ingestion_s3_to_parquet_spark.functions.tiff import encode_tiff
+    from data_ingestion_s3_to_parquet_spark.functions.webp import build_test_webp
+
+    rng = np.random.default_rng(9)
+    img = seeded_test_image(1, h=10, w=13)
+
+    def png(px, color):  # unfiltered 8-bit PNG of any color type
+        def chunk(tag, body):
+            return (
+                struct.pack(">I", len(body)) + tag + body
+                + struct.pack(">I", zlib.crc32(tag + body))
+            )
+
+        h, w = px.shape[:2]
+        raw = b"".join(b"\x00" + px[y].tobytes() for y in range(h))
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0))
+            + chunk(b"IDAT", zlib.compress(raw))
+            + chunk(b"IEND", b"")
+        )
+
+    def pcm_wav(x, n_ch):
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(n_ch)
+            w.setsampwidth(2)
+            w.setframerate(8000)
+            w.writeframes(x.astype("<i2").tobytes())
+        return buf.getvalue()
+
+    pal = rng.integers(0, 256, (5, 3)).astype(np.uint8)
+    gif_frames = [pal[rng.integers(0, 5, (7, 9))] for _ in range(3)]
+    jpegs = [encode_jpeg(seeded_test_image(s, h=8, w=11), quality=90) for s in (4, 5, 6)]
+    tone = (9000 * np.sin(np.arange(1010) / 7.0)).astype(np.int16)
+    comm = struct.pack(">HIH", 1, 4, 16) + _encode_extended80(8000.0) + b"ima4\x00"
+    aifc_body = b"COMM" + struct.pack(">I", len(comm)) + comm + b"\x00"
+    payloads = [
+        ("image", build_test_bmp(img)),
+        ("image", build_png(img)),
+        ("image", png(rng.integers(0, 256, (6, 7, 1), dtype=np.uint8), 0)),
+        ("image", png(rng.integers(0, 256, (5, 4, 4), dtype=np.uint8), 6)),
+        ("image", jpegs[0]),
+        ("image", attach_app1(jpegs[1], build_exif_app1())),
+        ("video", encode_gif(gif_frames, delays_cs=[5, 10, 15])),
+        ("image", encode_tiff(img)),
+        ("image", build_qoi(img)),
+        ("video", build_mjpeg_avi(jpegs, 11, 8, fps=4)),
+        ("audio", pcm_wav(tone, 1)),
+        ("audio", build_g711_wav(tone, law="ulaw", sample_rate=8000)),
+        ("audio", build_adpcm_wav(tone, sample_rate=8000, block_align=256)),
+        ("audio", build_aiff(tone[:600], sample_rate=11025)),
+        ("audio", build_au(tone[:700], sample_rate=8000)),
+        (
+            "video",
+            build_minimal_mp4(
+                tracks=[
+                    {"handler": b"vide", "width": 640, "height": 360, "codec": b"avc1"},
+                    {"handler": b"soun", "codec": b"mp4a"},
+                ]
+            ),
+        ),
+        ("audio", build_mp3_frames(n_frames=6)),
+        ("image", build_test_webp(width=33, height=17)),
+        ("video", build_test_webm()),
+        ("audio", build_flac_streaminfo()),
+        ("audio", build_ogg_opus()),
+        # poison payloads
+        ("image", b""),
+        ("image", build_png(img)[:40]),
+        ("image", b"\x00\x01\x02\x03 unknown magic"),
+        ("image", b"GIF8 garbage, not a GIF"),
+        ("audio", pcm_wav(tone[:400], 2)),
+        ("audio", b"FORM" + struct.pack(">I", 4 + len(aifc_body)) + b"AIFC" + aifc_body),
+    ]
+    return [
+        (i, kind, bytearray(p), None, None, None, None)
+        for i, (kind, p) in enumerate(payloads, start=1)
+    ]
+
+
+def _media_digests(spark) -> dict:
+    """Row count and sha256 of the sorted collected rows of each of the
+    seven per-payload media operators over :func:`_media_corpus`."""
+    import hashlib
+    import json
+
+    from data_ingestion_s3_to_parquet_spark.operators import multimodal as mm
+
+    media = spark.createDataFrame(_media_corpus(), MEDIA_SCHEMA)
+    out = {}
+    for op in (
+        mm.media_decode,
+        mm.media_sample_frames,
+        mm.media_probe,
+        mm.media_audio_frames,
+        mm.media_resize,
+        mm.media_phash,
+        mm.media_exif,
+    ):
+        rows = sorted(
+            json.dumps(list(r), default=lambda b: bytes(b).hex())
+            for r in op(media).collect()
+        )
+        out[op.__name__] = {
+            "rows": len(rows),
+            "sha256": hashlib.sha256("\n".join(rows).encode()).hexdigest(),
+        }
+    return out
+
+
+def test_media_operators_match_golden(spark):
+    # tests/golden/media.json pins every output bit of the seven
+    # per-payload media operators over one payload per format plus the
+    # poison rows (empty, truncated, unknown magic, GIF8 garbage, a
+    # stereo WAV media_audio_frames refuses, compressed AIFC).
+    import json
+    from pathlib import Path
+
+    golden = json.loads((Path(__file__).parent / "golden" / "media.json").read_text())
+    assert _media_digests(spark) == golden
 
 
 def test_rank_bm25_matches_pure_python_recompute(spark, sf_dir):

@@ -388,13 +388,13 @@ def test_emb_gram_matches_decimal_recompute_on_any_table(
 )
 @slow_ok
 def test_decode_wav_any_pcm_layout(n_ch, width, rate, frames):
-    """decode_wav parses ANY stdlib-writable PCM layout (mono/stereo,
-    8/16-bit, any rate) with exact integer features."""
+    """decode_media parses ANY stdlib-writable PCM WAV layout
+    (mono/stereo, 8/16-bit, any rate) with exact integer features."""
     import io
     import wave
 
     from data_ingestion_s3_to_parquet_spark.operators.multimodal import (
-        decode_wav,
+        decode_media,
     )
 
     samples = frames * n_ch  # interleave: n_ch samples per frame
@@ -410,7 +410,7 @@ def test_decode_wav_any_pcm_layout(n_ch, width, rate, frames):
         else:  # 8-bit PCM is unsigned, centered at 128
             w.writeframes(bytes((s + 128) & 0xFF for s in samples))
 
-    got = decode_wav(buf.getvalue())
+    got = decode_media("audio", buf.getvalue())
     assert got["sample_rate"] == rate
     assert got["n_channels"] == n_ch
     assert got["n_samples"] == len(samples)
@@ -424,7 +424,7 @@ def test_decode_wav_any_pcm_layout(n_ch, width, rate, frames):
 )
 @slow_ok
 def test_decode_bmp_any_dimensions(w, h, seed):
-    """decode_bmp inverts a hand-built 24-bit BMP for ANY dimensions —
+    """decode_media inverts a hand-built 24-bit BMP for ANY dimensions —
     fuzzes the 4-byte row-padding arithmetic (pad = 0..3 depending on
     width) and bottom-up row order, neither of which affects sums but
     both of which affect buffer offsets."""
@@ -433,7 +433,7 @@ def test_decode_bmp_any_dimensions(w, h, seed):
     import numpy as np
 
     from data_ingestion_s3_to_parquet_spark.operators.multimodal import (
-        decode_bmp,
+        decode_media,
     )
 
     rng = np.random.default_rng(seed)
@@ -449,7 +449,7 @@ def test_decode_bmp_any_dimensions(w, h, seed):
             "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0
         )
     )
-    got = decode_bmp(header + body)
+    got = decode_media("image", header + body)
     flat = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
     assert (got["width"], got["height"]) == (w, h)
     assert (got["sum_b"], got["sum_g"], got["sum_r"]) == tuple(flat)
@@ -464,7 +464,7 @@ def test_decode_bmp_any_dimensions(w, h, seed):
 )
 @slow_ok
 def test_decode_png_inverts_any_filter_sequence(w, h, color, filters, seed):
-    """decode_png inverts hand-filtered scanlines for ANY dimension,
+    """decode_media inverts hand-filtered PNG scanlines for ANY dimension,
     color type, and per-row filter sequence — the per-pixel
     Sub/Average/Paeth arithmetic is exactly the code a fixed test
     undersamples."""
@@ -474,7 +474,7 @@ def test_decode_png_inverts_any_filter_sequence(w, h, color, filters, seed):
     import numpy as np
 
     from data_ingestion_s3_to_parquet_spark.operators.multimodal import (
-        decode_png,
+        decode_media,
     )
 
     ch = {0: 1, 2: 3, 4: 2, 6: 4}[color]
@@ -520,7 +520,7 @@ def test_decode_png_inverts_any_filter_sequence(w, h, color, filters, seed):
         + chunk(b"IDAT", zlib.compress(bytes(raw)))
         + chunk(b"IEND", b"")
     )
-    got = decode_png(png)
+    got = decode_media("image", png)
     if ch >= 3:
         s = px[:, :, :3].reshape(-1, 3).astype(np.int64).sum(axis=0)
         assert (got["sum_r"], got["sum_g"], got["sum_b"]) == tuple(s)
